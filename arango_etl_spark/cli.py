@@ -159,7 +159,7 @@ def cmd_history(spark, args) -> None:
         apply_changes(
             spark, table, batch_events,
             batch_id=b, fence_stream_id=args.stream_id,
-            strategy=args.strategy, dedup=args.dedup,
+            strategy=args.strategy,
             compact_every=args.compact_every,
         )
     print(f"history replay done: {len(batch_ids)} batches, "
@@ -199,7 +199,7 @@ def cmd_rehydrate(spark, args) -> None:
     apply_changes(
         spark, table, events,
         batch_id=None, fence_stream_id=None, strategy=args.strategy,
-        dedup=args.dedup, compact_every=args.compact_every,
+        compact_every=args.compact_every,
     )
     print(f"rehydrate {args.date} done: table v{table.current_version()}")
 
@@ -228,14 +228,14 @@ def cmd_current(spark, args) -> None:
                 spark, table, spark.read.parquet(snap),
                 watermark_seq=watermark,
                 fence_stream_id=f"{args.stream_id}_bootstrap",
-                strategy=args.strategy, dedup=args.dedup,
+                strategy=args.strategy,
             )
     q = run_ingest(
         spark, args.events, table, args.checkpoint,
         lineage=lineage,
         cfg=IngestConfig(
             stream_id=args.stream_id, strategy=args.strategy,
-            dedup=args.dedup, compact_every=args.compact_every,
+            compact_every=args.compact_every,
             max_files_per_trigger=args.max_files_per_trigger,
             trigger_interval_secs=args.trigger_interval,
             max_retries=args.max_retries,
@@ -279,7 +279,7 @@ def _widened_schema(extra_columns: str | None):
 # 134-146). Precedence: CLI flag > ARANGO_ETL_SPARK_<KEY> env > TOML > default.
 _CONFIG_KEYS = {
     "events": str, "table": str, "checkpoint": str, "lineage": str,
-    "stream_id": str, "strategy": str, "dedup": str, "compact_every": int,
+    "stream_id": str, "strategy": str, "compact_every": int,
     "buckets": int, "cores": int, "max_files_per_trigger": int,
     "trigger_interval": int, "max_retries": int, "extra_columns": str,
     "expire_every": int, "expire_keep_last": int,
@@ -329,10 +329,6 @@ def main() -> None:
     p.add_argument("--lineage", default=None)
     p.add_argument("--stream-id", default="cdc")
     p.add_argument("--strategy", default="mor", choices=["mor", "cow"])
-    p.add_argument("--dedup", default="max_by",
-                   choices=["max_by", "window", "salted_window",
-                            "applyinpandas", "single_shuffle"],
-                   help="intra-batch dedup strategy")
     p.add_argument("--compact-every", type=int, default=8,
                    help="MoR: compact when avg delta files/bucket exceeds "
                         "this (0 = never)")

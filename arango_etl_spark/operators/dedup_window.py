@@ -6,22 +6,15 @@ per key, which it resolves racily by UPSERT arrival order
 deterministic: winner per doc_id = max event under
 (seq_no, event_ts, batch_id, op).
 
-Three interchangeable implementations (all tested equal):
-
-- ``dedup_events``          — max_by aggregation (DEFAULT, the scale path):
-  hash agg with map-side partial combine; a hot doc_id pre-reduces on every
-  input partition, so skew costs O(partitions) extra rows, not O(events).
-- ``dedup_events_window``   — the literal north-rule shape: row_number over
-  a window on (doc_id, seq_no …); requires all rows of a key in one task →
-  skew-sensitive; kept for parity/reference.
-- ``dedup_events_salted_window`` — two-phase salted window: pre-reduce per
-  (doc_id, salt) then final window per doc_id; bounds any single task to
-  ~1/salt_n of a hot key.
+One implementation, ``dedup_events``: a max_by hash aggregation with
+map-side partial combine. A hot doc_id pre-reduces on every input
+partition before the shuffle, so key skew costs O(partitions) extra rows,
+not O(events) — no salting or window shape is needed on top.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, Window
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 LWW_COLS = ["seq_no", "event_ts", "batch_id", "op"]
@@ -39,64 +32,3 @@ def dedup_events(events: DataFrame, key_col: str = "doc_id") -> DataFrame:
         .agg(F.max_by(F.struct(*payload), _lww_struct()).alias("_w"))
         .select(key_col, "_w.*")
     )
-
-
-def dedup_events_window(events: DataFrame, key_col: str = "doc_id") -> DataFrame:
-    """row_number() OVER (PARTITION BY doc_id ORDER BY seq_no DESC, …) = 1."""
-    w = Window.partitionBy(key_col).orderBy(
-        *[F.col(c).desc() for c in LWW_COLS]
-    )
-    return (
-        events.withColumn("_rn", F.row_number().over(w))
-        .where(F.col("_rn") == 1)
-        .drop("_rn")
-    )
-
-
-def dedup_events_salted_window(
-    events: DataFrame, key_col: str = "doc_id", salt_n: int = 16
-) -> DataFrame:
-    """Two-phase: window within (key, salt) shards → final window per key.
-
-    Salt = hash of the full LWW tuple, so duplicate deliveries of one event
-    land in the same shard (dedup) while distinct events of a hot key
-    spread across ``salt_n`` tasks (north rule: salted repartition on
-    hash(doc_id) to defeat hot-key skew).
-    """
-    salted = events.withColumn(
-        "_salt", F.pmod(F.xxhash64(*LWW_COLS), F.lit(salt_n))
-    )
-    w1 = Window.partitionBy(key_col, "_salt").orderBy(
-        *[F.col(c).desc() for c in LWW_COLS]
-    )
-    partial = (
-        salted.withColumn("_rn", F.row_number().over(w1))
-        .where(F.col("_rn") == 1)
-        .drop("_rn")
-    )
-    w2 = Window.partitionBy(key_col).orderBy(
-        *[F.col(c).desc() for c in LWW_COLS]
-    )
-    return (
-        partial.withColumn("_rn", F.row_number().over(w2))
-        .where(F.col("_rn") == 1)
-        .drop("_rn", "_salt")
-    )
-
-
-def dedup_events_pandas(events: DataFrame, key_col: str = "doc_id") -> DataFrame:
-    """Vectorized Arrow/pandas merge stage (north star wording) — the
-    applyInPandas compat fallback (SURVEY.md §2.9): per-group pandas
-    reduce, Arrow-batched, no per-row Python.
-    """
-    import pandas as pd  # noqa: F401  (executor-side)
-
-    schema = events.schema
-
-    def reduce_group(pdf):
-        winner = pdf.sort_values(
-            LWW_COLS, ascending=[False] * len(LWW_COLS), kind="mergesort"
-        ).head(1)
-        return winner
-
-    return events.groupBy(key_col).applyInPandas(reduce_group, schema=schema)

@@ -62,7 +62,6 @@ class SinkSpec:
     table: SnapshotTable
     project: Callable[[DataFrame], DataFrame]
     strategy: str = "mor"
-    dedup: str = "max_by"
     compact_every: int = 8
 
 
@@ -102,7 +101,6 @@ def apply_fan_out(
                 fence_stream_id=f"{stream_id}.{name}",
                 fence_run_id=run_id,
                 strategy=spec.strategy,
-                dedup=spec.dedup,
                 compact_every=spec.compact_every,
             )
     finally:

@@ -10,8 +10,8 @@ architectural delta" — O(distinct keys) sink work, not O(events)).
 Two strategies behind one call:
 
 - ``strategy="cow"`` (copy-on-write, Iceberg CoW MERGE INTO analogue):
-  prune to touched buckets → full-outer join target×source on doc_id →
-  winner per row by the same LWW order → rewrite touched buckets.
+  prune to touched buckets → union target with source → winner per key
+  by the same LWW order → rewrite touched buckets.
   Read-optimized; write cost ∝ size of touched buckets.
 
 - ``strategy="mor"`` (merge-on-read, Iceberg MoR analogue — DEFAULT for
@@ -49,12 +49,9 @@ from arango_etl_spark.plans.lakehouse import SnapshotTable, lww_resolve
 
 CDC_META = ["op", "seq_no", "batch_id", "event_ts"]
 
-DEDUP_STRATEGIES = {
-    "max_by": dedup_window.dedup_events,
-    "window": dedup_window.dedup_events_window,
-    "salted_window": dedup_window.dedup_events_salted_window,
-    "applyinpandas": dedup_window.dedup_events_pandas,
-}
+# one entry, still called through the dict: perfbench/tracing.py patches
+# DEDUP_STRATEGIES["max_by"] to time the dedup_window layer
+DEDUP_STRATEGIES = {"max_by": dedup_window.dedup_events}
 
 
 @dataclass
@@ -118,7 +115,6 @@ def apply_changes(
     fence_stream_id: str | None = None,
     fence_run_id: str | None = None,
     strategy: str = "mor",
-    dedup: str = "max_by",
     compact_every: int = 8,
     collect_metrics: bool = True,
     extra_summary: dict | None = None,
@@ -183,38 +179,18 @@ def apply_changes(
         if f_.name not in events.columns:
             events = events.withColumn(f_.name, F.lit(None).cast(f_.dataType))
 
-    single_shuffle = dedup == "single_shuffle"
-    if single_shuffle and strategy != "mor":
-        raise ValueError("single_shuffle dedup requires the MoR strategy")
-
+    deduped = DEDUP_STRATEGIES["max_by"](events, key_col=key_col)
     obs = None
-    if single_shuffle:
-        # one exchange total: bucket-repartition the RAW batch, sort within
-        # partitions, keep-first per key (Arrow), write with NO further
-        # shuffle — the dedup→write exchange of the default path is gone
-        src = _as_stored(events, key_col, payload).withColumn(
-            "_bucket", table.bucket_expr(F.col(key_col), manifest)
+    if collect_metrics:
+        obs = Observation(f"merge-{manifest['version'] + 1}")
+        deduped = deduped.observe(
+            obs,
+            F.count(F.lit(1)).alias("keys_applied"),
+            F.max("seq_no").alias("max_seq_no"),
         )
-        src = _dedup_bucketed_arrow(src, key_col, _write_parallelism(table))
-        if collect_metrics:
-            obs = Observation(f"merge-{manifest['version'] + 1}")
-            src = src.observe(
-                obs,
-                F.count(F.lit(1)).alias("keys_applied"),
-                F.max("_seq_no").alias("max_seq_no"),
-            )
-    else:
-        deduped = DEDUP_STRATEGIES[dedup](events, key_col=key_col)
-        if collect_metrics:
-            obs = Observation(f"merge-{manifest['version'] + 1}")
-            deduped = deduped.observe(
-                obs,
-                F.count(F.lit(1)).alias("keys_applied"),
-                F.max("seq_no").alias("max_seq_no"),
-            )
-        src = _as_stored(deduped, key_col, payload).withColumn(
-            "_bucket", table.bucket_expr(F.col(key_col), manifest)
-        )
+    src = _as_stored(deduped, key_col, payload).withColumn(
+        "_bucket", table.bucket_expr(F.col(key_col), manifest)
+    )
 
     # CoW must read existing files with the widened schema so evolved
     # columns resolve on the target side (null-backfilled for old files)
@@ -225,7 +201,7 @@ def apply_changes(
     )
 
     if strategy == "mor":
-        new_files, replaced = _merge_mor(table, src, pre_arranged=single_shuffle)
+        new_files, replaced = _merge_mor(table, src)
     elif strategy == "cow":
         # touched buckets listed from the deduped source, not the raw
         # batch: inside foreachBatch an extra action on the streaming
@@ -257,7 +233,7 @@ def apply_changes(
         else:
             touched = []
         new_files, replaced = _merge_cow(
-            spark, table, read_manifest, src, key_col, payload, touched
+            spark, table, read_manifest, src, key_col, touched
         )
     else:
         raise ValueError(f"unknown merge strategy {strategy!r}")
@@ -335,60 +311,13 @@ def apply_changes(
 
 
 def _merge_mor(
-    table: SnapshotTable, src: DataFrame, pre_arranged: bool = False
+    table: SnapshotTable, src: DataFrame
 ) -> tuple[dict[str, list[str]], set[int]]:
     """Append the deduped batch as per-bucket delta files — no target read,
     no target-side shuffle; commit cost is O(batch). The LWW reduce is
     deferred to readers / compaction (Iceberg MoR shape)."""
-    _, files = table.stage_write(src, pre_arranged=pre_arranged)
+    _, files = table.stage_write(src)
     return files, set()  # append: every existing file carries over
-
-
-def _write_parallelism(table: SnapshotTable) -> int:
-    """Same partition-count rule as stage_write (pinned: AQE would coalesce
-    the post-dedup exchange to 1-2 partitions and serialize the write)."""
-    from pyspark.sql import SparkSession
-
-    spark = SparkSession.getActiveSession()
-    return max(
-        spark.sparkContext.defaultParallelism,
-        table.manifest()["n_buckets"] // 4,
-    )
-
-
-def _dedup_bucketed_arrow(
-    src: DataFrame, key_col: str, n_parts: int
-) -> DataFrame:
-    """Single-shuffle LWW merge stage (the north star's 'vectorized
-    Arrow/pandas merge stage'): bucket-repartition once, sort within
-    partitions by (bucket, key, LWW-order DESC), then keep the FIRST row
-    per key with an Arrow-batched keep-first that carries the last key
-    across Arrow batch boundaries (a key's rows are contiguous after the
-    sort but may straddle batches). All of a key's events share a bucket,
-    so per-partition dedup is complete — no second exchange, and the
-    partition layout + sort order already match what stage_write needs."""
-    import pandas as pd  # noqa: F401  (executor-side)
-
-    schema = src.schema
-    arranged = src.repartition(n_parts, F.col("_bucket")).sortWithinPartitions(
-        "_bucket",
-        key_col,
-        *[F.col(f"_{c}").desc() for c in ("seq_no", "event_ts", "batch_id", "op")],
-    )
-
-    def keep_first(batches):
-        last_key = None
-        for pdf in batches:
-            if pdf.empty:
-                continue
-            pdf = pdf.drop_duplicates(subset=[key_col], keep="first")
-            if last_key is not None and pdf.iloc[0][key_col] == last_key:
-                pdf = pdf.iloc[1:]
-            if not pdf.empty:
-                last_key = pdf.iloc[-1][key_col]
-                yield pdf
-
-    return arranged.mapInPandas(keep_first, schema=schema)
 
 
 def _merge_cow(
@@ -397,7 +326,6 @@ def _merge_cow(
     manifest: dict,
     src: DataFrame,
     key_col: str,
-    payload: list[str],
     touched: list[int],
 ) -> tuple[dict[str, list[str]], set[int]]:
     """Copy-on-write MERGE: bucket-pruned, rewrite only touched buckets
@@ -405,53 +333,18 @@ def _merge_cow(
     /root/reference/src/handler/arangodb.rs:220,235,302).
     `touched` is bounded metadata (≤ n_buckets ints), not data.
 
-    Default implementation (round 2): UNION the pruned target with the
-    deduped batch and hash-reduce per key (`lww_resolve` max_by) — one
-    partial-aggregating shuffle, no join, and it tolerates multi-row-
-    per-key targets (e.g. a table previously written MoR). The original
-    full-outer-join formulation is kept behind
-    SPARK_GRAFT_COW_IMPL=join for the recorded A/B.
+    UNION the pruned target with the deduped batch and hash-reduce per
+    key (`lww_resolve` max_by): one partial-aggregating shuffle, no join,
+    and it tolerates multi-row-per-key targets (a table previously
+    written MoR keeps a delta stack per key until compaction).
     """
-    import os
-
     target = table.read_stored(spark, buckets=touched, manifest=manifest)
-
-    if os.environ.get("SPARK_GRAFT_COW_IMPL", "reduce") == "reduce":
-        from arango_etl_spark.plans.lakehouse import lww_resolve
-
-        merged = lww_resolve(
-            target.unionByName(src.drop("_bucket")), key_col
-        ).withColumn("_bucket", table.bucket_expr(F.col(key_col), manifest))
-        _, files = table.stage_write(merged)
-        return files, set(touched)
-
-    stored_cols = [c for c in src.columns if c != "_bucket"]
-    lww = lambda side: F.struct(  # noqa: E731
-        F.col(f"{side}._seq_no"),
-        F.col(f"{side}._event_ts"),
-        F.col(f"{side}._batch_id"),
-        F.col(f"{side}._op"),
-    )
-    t, s = target.alias("t"), src.drop("_bucket").alias("s")
-    src_wins = F.col("t._seq_no").isNull() | (lww("s") > lww("t"))
-    merged = (
-        t.join(s, on=key_col, how="full_outer")
-        .select(
-            key_col,
-            *[
-                F.when(
-                    F.col("s._op").isNotNull() & src_wins, F.col(f"s.{c}")
-                ).otherwise(F.col(f"t.{c}")).alias(c)
-                for c in stored_cols
-                if c != key_col
-            ],
-        )
-        .withColumn("_bucket", table.bucket_expr(F.col(key_col), manifest))
-    )
+    merged = lww_resolve(
+        target.unionByName(src.drop("_bucket")), key_col
+    ).withColumn("_bucket", table.bucket_expr(F.col(key_col), manifest))
     _, files = table.stage_write(merged)
-    # stage_write only materializes buckets that got rows; a touched bucket
-    # whose every row was tombstone-free-deleted… never happens (tombstones
-    # are kept), but an empty-result bucket must still be marked replaced.
+    # every touched bucket is replaced, including one whose rewrite came
+    # out empty (stage_write only lists buckets that got rows)
     return files, set(touched)
 
 

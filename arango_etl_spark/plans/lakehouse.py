@@ -660,8 +660,6 @@ class SnapshotTable:
         df: DataFrame,
         bucket_col: str = "_bucket",
         sort_within: bool = True,
-        salt_n: int | None = None,
-        pre_arranged: bool = False,
         cluster_by: str | Column | None = None,
         max_records_per_file: int | None = None,
     ) -> tuple[str, dict[str, list[str]]]:
@@ -692,24 +690,8 @@ class SnapshotTable:
             df.sparkSession.sparkContext.defaultParallelism,
             self.manifest()["n_buckets"] // 4,
         )
-        if pre_arranged:
-            # caller already bucket-partitioned AND key-sorted the frame
-            # (single-shuffle merge path) — any repartition/sort here would
-            # re-introduce the exchange that path exists to eliminate
-            writer = df
-        elif salt_n:
-            # hot-bucket write skew: spread one bucket over salt_n writer
-            # tasks (north rule salting; partitionBy still groups the
-            # files per bucket, there are just more of them)
-            from arango_etl_spark.operators.salting import salted_repartition
-
-            writer = salted_repartition(
-                df, bucket_col, n_parts, salt_n=salt_n,
-                entropy_cols=[self.manifest()["key_col"]],
-            )
-        else:
-            writer = df.repartition(n_parts, F.col(bucket_col))
-        if sort_within and not pre_arranged:
+        writer = df.repartition(n_parts, F.col(bucket_col))
+        if sort_within:
             # cluster_by may be a column NAME or a computed sort Column
             # (e.g. the Z-order key from operators/zorder.py)
             sort_cols: list = [bucket_col]

@@ -95,7 +95,7 @@ def write_audit_publish(
     ``max_row_drop_fraction``: reject a batch that shrinks the visible
     table by more than this fraction (the classic fat-finger guard — a
     bug emitting mass deletes fails the audit instead of the table).
-    ``apply_kwargs`` pass through to ``apply_changes`` (strategy, dedup,
+    ``apply_kwargs`` pass through to ``apply_changes`` (strategy,
     fences...). A fence-skipped batch publishes nothing and audits
     nothing (idempotent replay)."""
     from arango_etl_spark.operators.merge_into import apply_changes

@@ -169,7 +169,6 @@ def maintain_rollup(
     stream_id: str = "rollup",
     run_id: str | None = None,
     strategy: str = "mor",
-    dedup: str = "max_by",
     compact_every: int = 8,
 ) -> dict:
     """Apply one CDC batch to the base table AND incrementally maintain
@@ -191,7 +190,7 @@ def maintain_rollup(
     res = apply_changes(
         spark, base, events,
         batch_id=batch_id, fence_stream_id=stream_id, fence_run_id=run_id,
-        strategy=strategy, dedup=dedup, compact_every=compact_every,
+        strategy=strategy, compact_every=compact_every,
     )
     if res.skipped:
         # crash-replay: the base committed this batch in a previous run;

@@ -52,7 +52,6 @@ EVENT_SCHEMA = T.StructType(
 class IngestConfig:
     stream_id: str = "cdc"
     strategy: str = "mor"
-    dedup: str = "max_by"
     compact_every: int = 8
     max_files_per_trigger: int = 4
     trigger_interval_secs: int = 10  # continuous-mode micro-batch cadence
@@ -205,7 +204,6 @@ def run_ingest(
                     stream_id=cfg.stream_id,
                     run_id=run_id,
                     strategy=cfg.strategy,
-                    dedup=cfg.dedup,
                     compact_every=cfg.compact_every,
                 )
                 res = out["base"] or MergeResult(
@@ -220,7 +218,6 @@ def run_ingest(
                     fence_stream_id=cfg.stream_id,
                     fence_run_id=run_id,
                     strategy=cfg.strategy,
-                    dedup=cfg.dedup,
                     compact_every=cfg.compact_every,
                     min_seq_exclusive=cfg.min_seq_exclusive,
                     bloom_cols=(

@@ -67,7 +67,7 @@ PARITY_QUERIES = [
 
 def bench_cdc_replay(spark, sf_dir: str, work_dir: str, n_events: int,
                      strategy: str, n_batches: int = 8,
-                     dedup: str = "max_by", repeats: int = 3) -> dict:
+                     repeats: int = 3) -> dict:
     """Generate a change log over the sf documents universe, write it as
     batch files (not timed), then time the replay: per-batch dedup + MERGE
     + commit, including the periodic compaction — the sustained-ingest
@@ -114,7 +114,7 @@ def bench_cdc_replay(spark, sf_dir: str, work_dir: str, n_events: int,
             apply_changes(
                 spark, table, batch,
                 batch_id=b, fence_stream_id="bench",
-                strategy=strategy, dedup=dedup, compact_every=0,
+                strategy=strategy, compact_every=0,
             )
         runs.append((time.monotonic() - t0, table))
     by_time = sorted(runs, key=lambda x: x[0])
@@ -146,12 +146,12 @@ def bench_cdc_replay(spark, sf_dir: str, work_dir: str, n_events: int,
         ],
         "final_rows": n_final,
         "strategy": strategy,
-        "dedup": dedup,
+        "dedup": "max_by",
     }
 
 
 def bench_stream_replay(spark, events_dir: str, work_dir: str,
-                        n_batches: int, strategy: str, dedup: str,
+                        n_batches: int, strategy: str,
                         repeats: int = 3) -> dict:
     """Drain the SAME pre-generated backlog through the real streaming
     path (readStream → foreachBatch → fence-checked MERGE, availableNow)
@@ -194,7 +194,7 @@ def bench_stream_replay(spark, events_dir: str, work_dir: str,
             os.path.join(work_dir, f"table_stream_{r}"), payload, n_buckets=64
         )
         cfg = IngestConfig(
-            stream_id="bench-stream", strategy=strategy, dedup=dedup,
+            stream_id="bench-stream", strategy=strategy,
             compact_every=0, max_files_per_trigger=files_per_batch,
         )
         t0 = time.monotonic()
@@ -224,7 +224,6 @@ def main() -> None:
     # scalable work while keeping the run a few minutes.
     n_events = int(os.environ.get("BENCH_N_EVENTS", "16000000"))
     strategy = os.environ.get("BENCH_STRATEGY", "mor")
-    dedup = os.environ.get("BENCH_DEDUP", "max_by")
     n_batches = int(os.environ.get("BENCH_N_BATCHES", "4"))
     repeats = int(os.environ.get("BENCH_REPLAY_REPEATS", "3"))
     sf = float(sf_dir.rstrip("/").rsplit("sf", 1)[-1]) if "sf" in sf_dir else -1.0
@@ -239,7 +238,7 @@ def main() -> None:
     try:
         replay = bench_cdc_replay(
             spark, sf_dir, work_dir, n_events, strategy,
-            n_batches=n_batches, dedup=dedup, repeats=repeats,
+            n_batches=n_batches, repeats=repeats,
         )
         queries["cdc_replay"] = replay["replay_secs"]
         queries["cdc_final_read"] = replay["final_read_secs"]
@@ -249,7 +248,7 @@ def main() -> None:
             # batch replay; the stream drain would only add wall time
             stream = bench_stream_replay(
                 spark, os.path.join(work_dir, "events"), work_dir,
-                n_batches, strategy, dedup, repeats=repeats,
+                n_batches, strategy, repeats=repeats,
             )
             queries["stream_replay"] = stream["stream_replay_secs"]
             replay.update(stream)

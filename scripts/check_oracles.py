@@ -4,7 +4,9 @@ against its DuckDB oracle_sql() twin at any sf dir and report mismatches.
 The driver gates correctness at sf0.01 only; this proves the parity pairs
 are scale-independent (no thresholds or dims tuned to one sf).
 
-Run:  python scripts/check_oracles.py [/root/testdata/sf0.001]
+Run:  python scripts/check_oracles.py [sf_dir] [name ...]
+sf_dir defaults to the sf0.001 test-data dir; trailing query names restrict
+the sweep to those pairs (same comparison, same exit code).
 The registered-query count is printed per run (it tracks parity.py —
 do not hardcode it here). Round-5 record (2026-08-17, refreshed after
 the graph/BM25/JSON-shred/gap-fill/fan-out/sketch/video/token-span
@@ -58,6 +60,8 @@ def _norm(v):
 
 def main() -> int:
     sf_dir = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.001"
+    queries = entry_mod.queries()
+    names = sys.argv[2:] or sorted(queries)
     spark = get_spark("check_oracles", cores=8, shuffle_partitions=8)
     con = duckdb.connect()
     for t in TABLES:
@@ -65,9 +69,9 @@ def main() -> int:
 
     oracles = entry_mod.oracle_sql()
     bad = []
-    for name, q in sorted(entry_mod.queries().items()):
+    for name in names:
         try:
-            df = q(spark, sf_dir)
+            df = queries[name](spark, sf_dir)
             sdata, scols = [tuple(r) for r in df.collect()], df.columns
             res = con.execute(oracles[name])
             dcols = [d[0] for d in res.description]
@@ -85,7 +89,7 @@ def main() -> int:
     if bad:
         print("FAILURES:", bad)
         return 1
-    print(f"all {len(entry_mod.queries())} queries match at {sf_dir}")
+    print(f"all {len(names)} queries match at {sf_dir}")
     return 0
 
 

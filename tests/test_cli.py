@@ -126,12 +126,12 @@ def test_history_read_partition_prunes(spark, events_dir):
 
 
 def test_cli_knobs_strategy_and_compaction(spark, events_dir, tmp_path):
-    """The reference's settings surface via flags: dedup strategy +
+    """The reference's settings surface via flags: merge strategy +
     compact_every reachable from the CLI (round-1 VERDICT #9)."""
     table_dir = str(tmp_path / "tab")
     run_cli(
         "--events", events_dir, "--table", table_dir, "--cores", "4",
-        "--dedup", "window", "--compact-every", "0",
+        "--strategy", "cow", "--compact-every", "0",
         "--checkpoint", str(tmp_path / "ckpt"),
         "current", "--drain", "--trigger-interval", "5",
     )
@@ -155,6 +155,17 @@ def test_config_equals_form_loaded():
         assert settings["buckets"] == 16 and settings["strategy"] == "cow"
 
 
+def test_config_rejects_unknown_key(tmp_path):
+    """A TOML key the CLI does not define (here the retired ``dedup``
+    knob) stops the run instead of being silently ignored."""
+    from arango_etl_spark.cli import _load_settings
+
+    path = tmp_path / "etl.toml"
+    path.write_text('dedup = "window"\n')
+    with pytest.raises(SystemExit, match="unknown config key"):
+        _load_settings(["--config", str(path), "history"])
+
+
 def test_list_batch_ids_from_fs_metadata(spark, events_dir):
     """History mode enumerates batches from `batch=*` dirs — filesystem
     metadata, no data pass (round-2 VERDICT #4); non-hive dirs → None."""
@@ -174,7 +185,6 @@ def test_cli_toml_config_and_env_precedence(spark, events_dir, tmp_path):
         f'events = "{events_dir}"\n'
         f'table = "{table_dir}"\n'
         'strategy = "cow"\n'          # env overrides this to mor
-        'dedup = "window"\n'
         'compact_every = 0\n'
         'buckets = 8\n'
         'cores = 4\n'

@@ -123,29 +123,6 @@ def test_commit_conflict_cas(spark, tmp_path):
     with pytest.raises(CommitConflict):
         t.commit(new_files={}, replaced_buckets=set(), expected_version=base)
 
-def test_salted_stage_write_same_state(spark, tmp_path):
-    """Hot-bucket write salting spreads one bucket across multiple writer
-    tasks; table state is identical, files per bucket may multiply."""
-    from arango_etl_spark.operators.dedup_window import dedup_events
-    from arango_etl_spark.operators.merge_into import _as_stored
-
-    t_plain = mk_table(tmp_path, "salt_plain")
-    t_salted = mk_table(tmp_path, "salt_salted")
-    # 90% of rows on one doc → one hot bucket
-    rows = [ev("update", "hot" if i % 10 else f"d{i}", i + 1, [i]) for i in range(400)]
-    batch = mk_events(spark, rows)
-    deduped = dedup_events(batch)
-    payload = ["tokens", "n_tok", "source"]
-    for tab, salt in ((t_plain, None), (t_salted, 8)):
-        src = _as_stored(deduped, "doc_id", payload).withColumn(
-            "_bucket", tab.bucket_expr(F.col("doc_id"))
-        )
-        _, files = tab.stage_write(src, salt_n=salt)
-        tab.commit(new_files=files, replaced_buckets=set())
-    a = {r["doc_id"]: r["n_tok"] for r in t_plain.read(spark).collect()}
-    b = {r["doc_id"]: r["n_tok"] for r in t_salted.read(spark).collect()}
-    assert a == b and len(a) > 0
-
 
 def test_expire_snapshots_twice_with_shrinking_keep(spark, tmp_path):
     """A second expiry with a LARGER keep_last after an aggressive one must
