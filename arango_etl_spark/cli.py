@@ -86,16 +86,13 @@ def cmd_maintain(spark, args) -> None:
                 max_records_per_file=args.max_records_per_file,
             )
             print(f"compacted (v{m['version']})")
-    if args.analyze_cols:
-        m = table.analyze(spark, args.analyze_cols.split(","))
-        print(f"analyzed {args.analyze_cols} (v{m['version']})")
-    if args.bloom_cols:
-        m = table.analyze_bloom(spark, args.bloom_cols.split(","))
-        print(f"bloom-indexed {args.bloom_cols} (v{m['version']})")
-    if args.do_counts:
-        m = table.analyze_counts(spark)
-        print(f"counted {m.get('counted_files', 0)} new files "
-              f"(v{m['version']})")
+    if args.analyze_cols or args.bloom_cols or args.do_counts:
+        m = table.analyze(
+            spark,
+            cols=args.analyze_cols.split(",") if args.analyze_cols else (),
+            bloom_cols=args.bloom_cols.split(",") if args.bloom_cols else (),
+        )
+        print(f"analyzed {m['analyzed_files']} files (v{m['version']})")
         if table.counts_complete(m) and m.get("one_row_per_key"):
             print(f"row_count (metadata-only): {table.row_count()}")
     if args.expire_keep is not None:
@@ -398,14 +395,15 @@ def main() -> None:
                      help="cap one incremental run to the worst N "
                           "buckets (paces rewrite volume)")
     mnt.add_argument("--counts", dest="do_counts", action="store_true",
-                     help="retrofit per-file row/tombstone counts "
-                          "(incremental: only uncounted files are "
-                          "scanned, _deleted column only); enables the "
+                     help="retrofit per-file row/tombstone counts from "
+                          "parquet footers for files committed without "
+                          "them (no Spark job); enables the "
                           "metadata-only row_count on flat snapshots")
     mnt.add_argument("--analyze", dest="analyze_cols", default=None,
                      metavar="COL[,COL...]",
-                     help="collect per-file min/max zone maps for these "
-                          "columns (metadata-only commit)")
+                     help="record per-file min/max zone maps for these "
+                          "columns from parquet footers (metadata-only "
+                          "commit)")
     mnt.add_argument("--bloom", dest="bloom_cols", default=None,
                      metavar="COL[,COL...]",
                      help="build per-file Bloom equality indexes for "

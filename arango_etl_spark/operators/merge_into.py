@@ -121,20 +121,14 @@ def apply_changes(
     min_seq_exclusive: int | None = None,
     branch: str | None = None,
     bloom_cols: list[str] | None = None,
-    count_files: bool = False,
 ) -> MergeResult:
     """``bloom_cols``: write-time Bloom index maintenance — index ONLY
     the files this merge stages (cost O(batch), never a table scan) so a
     CoW table stays fully ``read_eq``-prunable commit after commit;
     carried-over files keep their existing entries via the manifest
-    lifecycle. See SnapshotTable.build_blooms.
-
-    ``count_files``: write-time row/tombstone counts for the staged
-    files (same O(batch) lifecycle as blooms) — with this on, a CoW
-    table answers ``row_count()``/``col_bounds()`` from pure manifest
-    arithmetic after EVERY commit, no ``analyze_counts`` retrofit; MoR
-    tables keep counts current so the retrofit after compaction covers
-    only the rewritten files. See SnapshotTable.build_counts.
+    lifecycle. See SnapshotTable.build_blooms. (Row/tombstone counts
+    need no option: every commit reads them from the new files'
+    parquet footers.)
 
     ``branch``: Write-Audit-Publish mode — the merge stages onto the
     named table branch instead of committing to the main line; audit the
@@ -238,8 +232,7 @@ def apply_changes(
     else:
         raise ValueError(f"unknown merge strategy {strategy!r}")
 
-    file_blooms = _blooms_for(spark, table, read_manifest, new_files, bloom_cols)
-    file_counts = _counts_for(spark, table, read_manifest, new_files, count_files)
+    file_meta = _blooms_for(spark, table, read_manifest, new_files, bloom_cols)
 
     summary: dict = dict(extra_summary or {})
     if fence_stream_id is not None and batch_id is not None:
@@ -263,8 +256,7 @@ def apply_changes(
             new_payload_schema=evolved_schema,
             mode="append" if strategy == "mor" else "merge",
             expected_version=manifest["version"],
-            file_blooms=file_blooms,
-            file_counts=file_counts,
+            file_meta=file_meta,
         )
         return MergeResult(
             version=new_manifest["version"],
@@ -286,8 +278,7 @@ def apply_changes(
         new_payload_schema=evolved_schema,
         mode="append" if strategy == "mor" else "merge",
         expected_version=manifest["version"],
-        file_blooms=file_blooms,
-        file_counts=file_counts,
+        file_meta=file_meta,
     )
 
     if strategy == "mor" and compact_every:
@@ -364,37 +355,20 @@ def _resolve_cluster_by(resolved, cluster_by, table, manifest):
 
 
 def _blooms_for(spark, table, manifest, files, bloom_cols):
-    """Bloom entries for freshly written ``files`` (commit's lifecycle
-    carries parent entries over for untouched files and drops them with
-    replaced ones)."""
-    if not bloom_cols:
-        return None
+    """``file_meta`` Bloom entries for freshly written ``files`` (commit's
+    lifecycle carries parent entries over for untouched files and drops
+    them with replaced ones)."""
     import os as _os
 
     abs_new = [
         _os.path.join(table.root, rel) for fs in files.values() for rel in fs
     ]
-    if not abs_new:
+    if not bloom_cols or not abs_new:
         return None
-    return table.build_blooms(
+    blooms = table.build_blooms(
         spark, abs_new, table.stored_schema(manifest), bloom_cols
     )
-
-
-def _counts_for(spark, table, manifest, files, count_files):
-    """Row/tombstone counts for freshly written ``files`` (same manifest
-    lifecycle as blooms: parent entries carry over for untouched files
-    and die with replaced ones)."""
-    if not count_files:
-        return None
-    import os as _os
-
-    abs_new = [
-        _os.path.join(table.root, rel) for fs in files.values() for rel in fs
-    ]
-    return table.build_counts(
-        spark, abs_new, table.stored_schema(manifest)
-    ) or None
+    return {rel: {"bloom": b} for rel, b in blooms.items()}
 
 
 def compact(
@@ -403,7 +377,6 @@ def compact(
     cluster_by: str | list[str] | None = None,
     max_records_per_file: int | None = None,
     bloom_cols: list[str] | None = None,
-    count_files: bool = False,
 ) -> dict:
     """Fold all delta files back to one stored row per key (full table) and
     drop nothing — tombstones are retained so late events keep losing.
@@ -424,26 +397,9 @@ def compact(
     rewritten files in the same job (compaction replaces every file, so
     prior entries die with them; MoR tables become ``read_eq``-eligible
     exactly here, where ``one_row_per_key`` turns true)."""
-    manifest = table.manifest()
-    stored = table.read_stored(spark, manifest=manifest)
-    resolved = lww_resolve(stored, manifest["key_col"]).withColumn(
-        "_bucket", table.bucket_expr(F.col(manifest["key_col"]), manifest)
-    )
-    cluster_by = _resolve_cluster_by(resolved, cluster_by, table, manifest)
-    _, files = table.stage_write(
-        resolved,
-        cluster_by=cluster_by,
-        max_records_per_file=max_records_per_file,
-    )
-    return table.commit(
-        new_files=files,
-        replaced_buckets=None,
-        summary={"compaction": True},
-        mode="compact",
-        one_row_per_key=True,
-        expected_version=manifest["version"],
-        file_blooms=_blooms_for(spark, table, manifest, files, bloom_cols),
-        file_counts=_counts_for(spark, table, manifest, files, count_files),
+    return compact_buckets(
+        spark, table, min_delta_files=1, cluster_by=cluster_by,
+        max_records_per_file=max_records_per_file, bloom_cols=bloom_cols,
     )
 
 
@@ -455,7 +411,6 @@ def compact_buckets(
     cluster_by: str | list[str] | None = None,
     max_records_per_file: int | None = None,
     bloom_cols: list[str] | None = None,
-    count_files: bool = False,
 ) -> dict:
     """INCREMENTAL compaction: fold only the buckets whose delta-file
     count has reached ``min_delta_files``, leave every other bucket's
@@ -511,8 +466,7 @@ def compact_buckets(
         # may still hold per-key delta stacks)
         one_row_per_key=True if full else None,
         expected_version=manifest["version"],
-        file_blooms=_blooms_for(spark, table, manifest, files, bloom_cols),
-        file_counts=_counts_for(spark, table, manifest, files, count_files),
+        file_meta=_blooms_for(spark, table, manifest, files, bloom_cols),
     )
     out["compacted_buckets"] = sorted(hot)
     return out

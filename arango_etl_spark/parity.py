@@ -4064,7 +4064,7 @@ def cdc_change_feed(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 # --------------------------------------------------------------------------
 # 93. bloom_point_lookup — the ENGINE's Bloom-indexed equality lookup on a
-# non-key column (plans/lakehouse.py analyze_bloom/read_eq; the hash-index
+# non-key column (plans/lakehouse.py analyze/read_eq; the hash-index
 # half of the reference's sink-side persistent indexes,
 # /root/reference/src/handler/arangodb.rs:440-524): load documents into a
 # CoW snapshot table, build per-file Bloom filters on `source`, and point-
@@ -4122,7 +4122,7 @@ def bloom_point_lookup(spark: SparkSession, sf_dir: str) -> DataFrame:
         tempfile.mkdtemp(prefix="parity_bloom_") + "/t", payload, n_buckets=16
     )
     apply_changes(spark, table, ev, strategy="cow", compact_every=0)
-    table.analyze_bloom(spark, ["source"])
+    table.analyze(spark, bloom_cols=["source"])
     return table.read_eq(spark, "source", "src7").select(
         "doc_id",
         F.array_join("tokens", ",").alias("tokens_csv"),

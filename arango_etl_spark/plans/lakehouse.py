@@ -59,6 +59,11 @@ META_COLS: list[tuple[str, str]] = [
 ]
 META_NAMES = [c for c, _ in META_COLS]
 
+# Bloom index shape: 8192 bits (1 KB per file and column), 5 hashes.
+# Every entry records its own m/k, so read_eq probes any entry it finds.
+BLOOM_M_BITS = 8192
+BLOOM_K = 5
+
 
 class CommitConflict(Exception):
     """Another writer committed the same version (catalog CAS failure)."""
@@ -204,51 +209,55 @@ class SnapshotTable:
             resolved = lww_resolve(stored, key_col)
         return resolved.where(~F.col("_deleted")).drop(*META_NAMES)
 
-    # ---------------------------------------------------------- zone maps
-    def analyze(self, spark: SparkSession, cols: list[str]) -> dict:
-        """Collect per-file zone maps (min/max) for ``cols`` over the
-        current snapshot and commit them as a metadata-only snapshot
-        (Iceberg manifests carry column bounds at write time; this is
-        the explicit ANALYZE retrofit for the mini-format).
-
-        One columnar scan of just the stats columns, grouped by
-        ``input_file_name()`` — the collect is file-count-bounded
-        metadata, same class as the bucket lists. Timestamp columns are
-        stored as unix MICROS (JSON-safe, total-ordered);
-        :meth:`read_range` converts bounds symmetrically."""
+    # ------------------------------------------------- per-file metadata
+    def analyze(self, spark: SparkSession, cols=(), bloom_cols=()) -> dict:
+        """Fill in the ``file_meta`` fields that live files lack — counts,
+        zone-map ``bounds`` for ``cols`` from parquet footers (no Spark
+        job), Bloom bits for ``bloom_cols`` by :meth:`build_blooms` over
+        just the unindexed files — as one metadata-only commit. Existing
+        fields are kept, so calls add up. Returns the manifest (unchanged
+        if nothing was missing) with ``analyzed_files``, the number of
+        files that gained a field."""
         m = self.manifest()
-        files = self.data_files(m)
-        if not files:
-            return m
+        have = m.get("file_meta", {})
+        rels = [rel for fs in m["files"].values() for rel in fs]
         schema = self.stored_schema(m)
         dtypes = {f.name: f.dataType for f in schema.fields}
-        exprs = []
-        for c in cols:
-            col = F.col(c)
-            if isinstance(dtypes[c], T.TimestampType):
-                col = F.unix_micros(col)
-            exprs += [F.min(col).alias(f"_min_{c}"),
-                      F.max(col).alias(f"_max_{c}")]
-        rows = (
-            spark.read.schema(schema).parquet(*files)
-            .groupBy(F.input_file_name().alias("_f"))
-            .agg(*exprs)
-            .collect()
-        )
-        stats: dict[str, dict] = {}
-        for r in rows:
-            rel = self._rel_from_uri(r["_f"])
-            stats[rel] = {
-                c: [r[f"_min_{c}"], r[f"_max_{c}"]] for c in cols
-            }
-        return self.commit(
+        found = {
+            rel: _footer_meta(
+                os.path.join(self.root, rel), {c: dtypes[c] for c in cols}
+            )
+            for rel in rels
+            if "rows" not in have.get(rel, {})
+            or any(c not in have[rel].get("bounds", {}) for c in cols)
+        }
+        unindexed = [
+            rel for rel in rels
+            if any(c not in have.get(rel, {}).get("bloom", {})
+                   for c in bloom_cols)
+        ]
+        if unindexed:
+            blooms = self.build_blooms(
+                spark, [os.path.join(self.root, r) for r in unindexed],
+                schema, list(bloom_cols),
+            )
+            for rel, b in blooms.items():
+                found.setdefault(rel, {})["bloom"] = b
+        new = {
+            rel: e for rel, e in found.items()
+            if _merge_meta(have.get(rel, {}), e) != have.get(rel, {})
+        }
+        if not new:
+            return {**m, "analyzed_files": 0}
+        out = self.commit(
             new_files={},
             replaced_buckets=set(),
-            summary={"analyze": ",".join(cols)},
+            summary={"analyzed_files": len(new)},
             mode="analyze",
             expected_version=m["version"],
-            file_stats=stats,
+            file_meta=new,
         )
+        return {**out, "analyzed_files": len(new)}
 
     def _rel_from_uri(self, uri: str) -> str:
         path = uri
@@ -286,12 +295,7 @@ class SnapshotTable:
         (test_maintenance.py::test_zone_map_range_pruning).
         """
         m = manifest or self.manifest()
-        if not m.get("one_row_per_key", False):
-            raise ValueError(
-                "read_range requires a one_row_per_key snapshot — run "
-                "compact() first (MoR deltas make file-level pruning "
-                "unsound: a pruned file may hold the winning version)"
-            )
+        self._require_flat(m, "read_range")
         schema = self.stored_schema(m)
         dtypes = {f.name: f.dataType for f in schema.fields}
         is_ts = isinstance(dtypes[col], T.TimestampType)
@@ -308,10 +312,10 @@ class SnapshotTable:
             return v
 
         lo_b, hi_b = _bound(lo), _bound(hi)
-        stats = m.get("file_stats", {})
+        meta = m.get("file_meta", {})
         keep: list[str] = []
         for rel in (rel for fs in m["files"].values() for rel in fs):
-            s = stats.get(rel, {}).get(col)
+            s = meta.get(rel, {}).get("bounds", {}).get(col)
             if s is None:
                 keep.append(rel)
                 continue
@@ -323,12 +327,7 @@ class SnapshotTable:
             if hi_b is not None and fmin is not None and fmin > hi_b:
                 continue
             keep.append(rel)
-        if keep:
-            pruned = spark.read.schema(schema).parquet(
-                *[os.path.join(self.root, r) for r in keep]
-            )
-        else:
-            pruned = _empty_frame(spark, schema)
+        pruned = self._read_rels(spark, keep, schema)
         cond = ~F.col("_deleted")
         if lo is not None:
             cond = cond & (F.col(col) >= F.lit(lo))
@@ -336,114 +335,30 @@ class SnapshotTable:
             cond = cond & (F.col(col) <= F.lit(hi))
         return pruned.where(cond).drop(*META_NAMES)
 
-    # ------------------------------------------------------ bloom indexes
-    def analyze_bloom(
-        self, spark: SparkSession, cols: list[str], m_bits: int = 8192,
-        k: int = 5,
-    ) -> dict:
-        """Per-file Bloom filters for EQUALITY lookups on non-key columns
-        — the hash-index half of the reference's sink-side persistent
-        indexes (pub_key/count fields,
-        /root/reference/src/handler/arangodb.rs:440-524); the
-        skiplist/range half is :meth:`analyze` zone maps. Intended for
-        string / integral columns whose values scatter across files,
-        where min/max bounds prune nothing.
-
-        One scan of the stats columns per indexed column: each non-null
-        value hashes to ``k`` bit positions (``xxhash64(i, value)`` mod
-        ``m_bits``), exploded and distinct-aggregated per file — shuffle
-        state is capped at ``m_bits`` ints per (file, col) REGARDLESS of
-        row count (sketch-bounded, the same metadata class as zone
-        maps). The driver packs each position set into an ``m_bits/8``-
-        byte bitset (1 KB at the default) stored base64 in the manifest;
-        like ``file_stats``, entries die with their files and can never
-        contradict the file list. Files with zero non-null values get no
-        entry and are always read (pruning is an optimization, never a
-        correctness filter)."""
-        m = self.manifest()
-        files = self.data_files(m)
-        if not files:
-            return m
-        blooms = self.build_blooms(
-            spark, files, self.stored_schema(m), cols, m_bits=m_bits, k=k
-        )
-        return self.commit(
-            new_files={},
-            replaced_buckets=set(),
-            summary={"analyze_bloom": ",".join(cols)},
-            mode="analyze",
-            expected_version=m["version"],
-            file_blooms=blooms,
-        )
-
-    # ------------------------------------------------------- count stats
-    def analyze_counts(self, spark: SparkSession) -> dict:
-        """Per-file row + tombstone counts into the manifest (Iceberg
-        manifests carry ``record_count`` at write time; this is the
-        explicit retrofit, incremental by construction): ONLY files
-        missing a count are scanned, column-pruned to the one boolean
-        ``_deleted`` column — a re-run after N new commits reads the N
-        commits' files, never the table. The collect is
-        file-count-bounded metadata, same class as the bucket lists.
-
-        With complete counts on a flat (``one_row_per_key``) snapshot,
-        ``row_count`` answers ``SELECT count(*)`` from pure manifest
-        arithmetic — zero jobs, zero file opens."""
-        m = self.manifest()
-        have = m.get("file_counts", {})
-        missing = [
-            os.path.join(self.root, rel)
-            for fs in m["files"].values()
-            for rel in fs
-            if rel not in have
-        ]
-        if not missing:
-            return {**m, "counted_files": 0}
-        counts = self.build_counts(spark, missing, self.stored_schema(m))
-        out = self.commit(
-            new_files={},
-            replaced_buckets=set(),
-            summary={"analyze_counts": len(counts)},
-            mode="analyze",
-            expected_version=m["version"],
-            file_counts=counts,
-        )
-        out["counted_files"] = len(counts)
-        return out
-
-    def build_counts(
-        self,
-        spark: SparkSession,
-        abs_files: list[str],
-        schema: T.StructType,
-    ) -> dict:
-        """Row/tombstone counts for exactly ``abs_files`` (no commit) —
-        the write-time hook: merge/compaction jobs count ONLY the files
-        they just staged (O(batch), column-pruned to ``_deleted``), so
-        ``row_count``/``col_bounds`` stay metadata-answerable commit
-        after commit with no retrofit scan — the Iceberg contract, where
-        writers put ``record_count`` in the manifest at write time."""
-        if not abs_files:
-            return {}
-        rows = (
-            spark.read.schema(schema).parquet(*abs_files)
-            .select(F.input_file_name().alias("_f"), "_deleted")
-            .groupBy("_f")
-            .agg(
-                F.count(F.lit(1)).alias("_rows"),
-                F.sum(F.col("_deleted").cast("int")).alias("_dels"),
+    def _require_flat(self, m: dict, what: str) -> None:
+        if not m.get("one_row_per_key", False):
+            raise ValueError(
+                f"{what} requires a one_row_per_key snapshot — run "
+                "compact() first (MoR deltas make file-level pruning "
+                "unsound: a pruned file may hold the winning version)"
             )
-            .collect()
+
+    def _read_rels(
+        self, spark: SparkSession, rels: list[str], schema: T.StructType
+    ) -> DataFrame:
+        if not rels:
+            return _empty_frame(spark, schema)
+        return spark.read.schema(schema).parquet(
+            *[os.path.join(self.root, r) for r in rels]
         )
-        return {
-            self._rel_from_uri(r["_f"]): [int(r["_rows"]), int(r["_dels"])]
-            for r in rows
-        }
 
     def counts_complete(self, manifest: dict | None = None) -> bool:
         m = manifest or self.manifest()
-        have = m.get("file_counts", {})
-        return all(rel in have for fs in m["files"].values() for rel in fs)
+        meta = m.get("file_meta", {})
+        return all(
+            "rows" in meta.get(rel, {})
+            for fs in m["files"].values() for rel in fs
+        )
 
     def row_count(
         self, spark: SparkSession | None = None,
@@ -458,13 +373,16 @@ class SnapshotTable:
         the real resolve+count, or raises if no session was given."""
         m = manifest or self.manifest()
         if m.get("one_row_per_key", False) and self.counts_complete(m):
-            counts = m.get("file_counts", {})
-            return sum(r - d for r, d in counts.values())
+            meta = m.get("file_meta", {})
+            return sum(
+                meta[rel]["rows"] - meta[rel]["dels"]
+                for fs in m["files"].values() for rel in fs
+            )
         if spark is None:
             raise ValueError(
                 "row_count needs a SparkSession: snapshot is not flat or "
-                "counts are incomplete (run compact + analyze_counts for "
-                "the metadata-only path)"
+                "counts are incomplete (run compact + analyze for the "
+                "metadata-only path)"
             )
         return self.read(spark, manifest=m).count()
 
@@ -476,11 +394,11 @@ class SnapshotTable:
     ):
         """Exact public ``(min, max)`` of ``col`` — METADATA-ONLY (zero
         jobs, works with ``spark=None``) when three manifest facts hold:
-        the snapshot is flat (``one_row_per_key``), the counts channel
-        proves ZERO tombstones (zone maps are computed over stored rows
+        the snapshot is flat (``one_row_per_key``), the per-file counts
+        prove ZERO tombstones (zone maps are computed over stored rows
         INCLUDING tombstones, so any tombstone could own an extreme and
         make manifest bounds a superset, fine for pruning but wrong as
-        an answer), and every live file carries zone-map stats for
+        an answer), and every live file carries zone-map bounds for
         ``col``. That is Iceberg's manifest ``lower_bounds`` /
         ``upper_bounds`` aggregate-pushdown contract. All-null files
         store ``[null, null]`` and are skipped; a column with no
@@ -489,21 +407,19 @@ class SnapshotTable:
         to the real tombstone-filtered scan (column-pruned by Catalyst),
         or raises without a session."""
         m = manifest or self.manifest()
-        stats = m.get("file_stats", {})
-        counts = m.get("file_counts", {})
+        meta = m.get("file_meta", {})
         rels = [rel for fs in m["files"].values() for rel in fs]
         if (
             m.get("one_row_per_key", False)
-            and all(r in counts for r in rels)
-            and sum(d for _, d in counts.values()) == 0
-            and all(col in stats.get(r, {}) for r in rels)
+            and self.counts_complete(m)
+            and sum(meta[r]["dels"] for r in rels) == 0
+            and all(col in meta[r].get("bounds", {}) for r in rels)
         ):
-            mins = [stats[r][col][0] for r in rels
-                    if stats[r][col][0] is not None]
-            maxs = [stats[r][col][1] for r in rels
-                    if stats[r][col][1] is not None]
-            lo = min(mins) if mins else None
-            hi = max(maxs) if maxs else None
+            bounds = [meta[r]["bounds"][col] for r in rels]
+            mins = [b[0] for b in bounds if b[0] is not None]
+            maxs = [b[1] for b in bounds if b[1] is not None]
+            lo = min(mins, key=_nan_last) if mins else None
+            hi = max(maxs, key=_nan_last) if maxs else None
             dtypes = {f.name: f.dataType for f in self.stored_schema(m).fields}
             if isinstance(dtypes[col], T.TimestampType):
                 import datetime as _dt
@@ -520,8 +436,8 @@ class SnapshotTable:
             raise ValueError(
                 "col_bounds needs a SparkSession: metadata-only min/max "
                 "requires a flat snapshot with complete counts proving "
-                "zero tombstones AND zone-map stats on every file for "
-                f"{col!r} (run compact + analyze_counts + analyze)"
+                "zero tombstones AND zone-map bounds on every file for "
+                f"{col!r} (run compact + analyze)"
             )
         resolved = lww_resolve(
             self.read_stored(spark, manifest=m), m["key_col"]
@@ -536,16 +452,16 @@ class SnapshotTable:
         abs_files: list[str],
         schema: T.StructType,
         cols: list[str],
-        m_bits: int = 8192,
-        k: int = 5,
     ) -> dict:
-        """Compute Bloom index entries for exactly ``abs_files`` (no
-        commit) — the write-time hook: merge/compaction jobs index ONLY
-        their freshly staged files, so a CoW table stays fully indexed
-        with incremental cost O(batch), never a whole-table retrofit
-        scan (Iceberg writes file stats at write time for the same
-        reason; :meth:`analyze_bloom` is the explicit full-table
-        retrofit for tables that predate the index)."""
+        """Per-file Bloom filters for equality lookups on non-key columns
+        whose values scatter across files (where min/max prune nothing),
+        for exactly ``abs_files``, without a commit. Each non-null value
+        sets ``BLOOM_K`` bits (``xxhash64(i, value)`` mod
+        ``BLOOM_M_BITS``), distinct-aggregated per file, so shuffle state
+        is capped per (file, col) regardless of row count; the driver
+        packs them into a base64 bitset. Files with no non-null value get
+        no entry and are always read. Merge/compaction call this on their
+        staged files only (O(batch)); :meth:`analyze` is the retrofit."""
         import base64
         from functools import reduce as _reduce
 
@@ -556,9 +472,9 @@ class SnapshotTable:
                 F.array(*[
                     F.pmod(
                         F.xxhash64(F.lit(i), F.col(c).cast("string")),
-                        F.lit(m_bits),
+                        F.lit(BLOOM_M_BITS),
                     )
-                    for i in range(k)
+                    for i in range(BLOOM_K)
                 ])
             ).alias("_pos")
             parts.append(
@@ -577,11 +493,11 @@ class SnapshotTable:
         blooms: dict[str, dict] = {}
         for r in rows:
             rel = self._rel_from_uri(r["_f"])
-            buf = bytearray(m_bits // 8)
+            buf = bytearray(BLOOM_M_BITS // 8)
             for p in r["_ps"]:
                 buf[p >> 3] |= 1 << (p & 7)
             blooms.setdefault(rel, {})[r["_c"]] = {
-                "m": m_bits, "k": k,
+                "m": BLOOM_M_BITS, "k": BLOOM_K,
                 "b": base64.b64encode(bytes(buf)).decode(),
             }
         return blooms
@@ -604,18 +520,13 @@ class SnapshotTable:
         import base64
 
         m = manifest or self.manifest()
-        if not m.get("one_row_per_key", False):
-            raise ValueError(
-                "read_eq requires a one_row_per_key snapshot — run "
-                "compact() first (MoR deltas make file-level pruning "
-                "unsound: a pruned file may hold the winning version)"
-            )
+        self._require_flat(m, "read_eq")
         if value is None:
             raise ValueError(
                 "read_eq probes non-null equality (Bloom filters index "
                 "non-null values only) — filter IS NULL via read()"
             )
-        blooms = m.get("file_blooms", {})
+        meta = m.get("file_meta", {})
         pos_cache: dict[tuple[int, int], list[int]] = {}
 
         def _positions(mb: int, kk: int) -> list[int]:
@@ -632,7 +543,7 @@ class SnapshotTable:
 
         keep: list[str] = []
         for rel in (rel for fs in m["files"].values() for rel in fs):
-            e = blooms.get(rel, {}).get(col)
+            e = meta.get(rel, {}).get("bloom", {}).get(col)
             if e is None:
                 keep.append(rel)
                 continue
@@ -642,13 +553,7 @@ class SnapshotTable:
                 for p in _positions(e["m"], e["k"])
             ):
                 keep.append(rel)
-        schema = self.stored_schema(m)
-        if keep:
-            pruned = spark.read.schema(schema).parquet(
-                *[os.path.join(self.root, r) for r in keep]
-            )
-        else:
-            pruned = _empty_frame(spark, schema)
+        pruned = self._read_rels(spark, keep, self.stored_schema(m))
         return (
             pruned.where(~F.col("_deleted") & (F.col(col) == F.lit(value)))
             .drop(*META_NAMES)
@@ -659,7 +564,6 @@ class SnapshotTable:
         self,
         df: DataFrame,
         bucket_col: str = "_bucket",
-        sort_within: bool = True,
         cluster_by: str | Column | None = None,
         max_records_per_file: int | None = None,
     ) -> tuple[str, dict[str, list[str]]]:
@@ -686,23 +590,25 @@ class SnapshotTable:
         # explicit partition count: with a bare repartition(col), AQE
         # coalesces the small post-dedup exchange to 1-2 partitions and the
         # write/sort loses all parallelism (hurts the N→4N scaling curve)
+        m = self.manifest()
         n_parts = max(
             df.sparkSession.sparkContext.defaultParallelism,
-            self.manifest()["n_buckets"] // 4,
+            m["n_buckets"] // 4,
         )
+        # cluster_by may be a column NAME or a computed sort Column
+        # (e.g. the Z-order key from operators/zorder.py)
+        sort_cols: list = [bucket_col]
+        if cluster_by is not None:
+            sort_cols.append(
+                F.col(cluster_by) if isinstance(cluster_by, str)
+                else cluster_by
+            )
+        sort_cols.append(m["key_col"])
         writer = df.repartition(n_parts, F.col(bucket_col))
-        if sort_within:
-            # cluster_by may be a column NAME or a computed sort Column
-            # (e.g. the Z-order key from operators/zorder.py)
-            sort_cols: list = [bucket_col]
-            if cluster_by is not None:
-                sort_cols.append(
-                    F.col(cluster_by) if isinstance(cluster_by, str)
-                    else cluster_by
-                )
-            sort_cols.append(self.manifest()["key_col"])
-            writer = writer.sortWithinPartitions(*sort_cols)
-        w = writer.write.partitionBy(bucket_col).mode("error")
+        w = (
+            writer.sortWithinPartitions(*sort_cols)
+            .write.partitionBy(bucket_col).mode("error")
+        )
         if max_records_per_file:
             w = w.option("maxRecordsPerFile", int(max_records_per_file))
         w.parquet(out)
@@ -729,9 +635,7 @@ class SnapshotTable:
         one_row_per_key: bool | None = None,
         expected_version: int | None = None,
         new_n_buckets: int | None = None,
-        file_stats: dict | None = None,
-        file_blooms: dict | None = None,
-        file_counts: dict | None = None,
+        file_meta: dict | None = None,
     ) -> dict:
         """Commit a new snapshot.
 
@@ -744,57 +648,51 @@ class SnapshotTable:
         only — the new_files must already be laid out under the new
         scheme, so it is only legal with a full replace).
 
-        ``file_stats`` merges per-file zone-map entries
-        ({rel_path: {col: [min, max]}}) into the manifest; the parent's
-        entries carry over for files still referenced and are dropped
-        with their files — stats can never outlive or contradict the
-        file list. ``file_blooms`` follows the identical lifecycle for
-        per-file Bloom index entries ({rel_path: {col: {m, k, b}}}), and
-        ``file_counts`` for per-file row/tombstone counts
-        ({rel_path: [rows, dels]}).
+        Every new file's ``rows``/``dels`` come from its parquet footer
+        (no Spark job), merged with the caller's ``file_meta`` entries.
         """
         if new_n_buckets is not None and replaced_buckets is not None:
             raise ValueError(
                 "bucket-layout change requires a full replace "
                 "(replaced_buckets=None)"
             )
-        cur_v = self.current_version()
-        if expected_version is not None and cur_v != expected_version:
-            raise CommitConflict(f"expected v{expected_version}, found v{cur_v}")
         manifest = self._build_manifest(
-            cur_v,
-            new_files,
-            replaced_buckets,
-            summary,
-            new_payload_schema,
-            mode,
-            one_row_per_key,
-            new_n_buckets,
-            file_stats,
-            file_blooms,
-            file_counts,
+            new_files, replaced_buckets, summary, new_payload_schema, mode,
+            one_row_per_key, expected_version, new_n_buckets, file_meta,
         )
         self._write_manifest(manifest)
         return manifest
 
     def _build_manifest(
         self,
-        cur_v: int,
         new_files: dict[str, list[str]],
         replaced_buckets: set[int] | None,
         summary: dict | None = None,
         new_payload_schema: T.StructType | None = None,
         mode: str = "merge",
         one_row_per_key: bool | None = None,
+        expected_version: int | None = None,
         new_n_buckets: int | None = None,
-        file_stats: dict | None = None,
-        file_blooms: dict | None = None,
-        file_counts: dict | None = None,
+        file_meta: dict | None = None,
     ) -> dict:
-        """Compute the child manifest of ``cur_v`` (shared by ``commit``
-        and ``stage_branch`` — the SAME file-carryover / schema-widening /
-        stats-lifecycle rules apply whether the result lands on the main
-        line or on an audit branch)."""
+        """Compute the child manifest of the current version (shared by
+        ``commit`` and ``stage_branch`` — the SAME file-carryover /
+        schema-widening / metadata-lifecycle rules apply whether the
+        result lands on the main line or on an audit branch).
+
+        ``file_meta[rel] = {"rows", "dels", "bounds": {col: [lo, hi]},
+        "bloom": {col: {m, k, b}}}`` lives and dies with its file, and new
+        fields merge into the existing entry. Every field is a shortcut
+        with a fallback: a file without one is always read. New files'
+        footers are read BEFORE the version check, so the window between
+        the check and the O_EXCL create does not grow."""
+        file_meta = dict(file_meta or {})
+        for rel in (rel for fs in new_files.values() for rel in fs):
+            counts = _footer_meta(os.path.join(self.root, rel), {})
+            file_meta[rel] = _merge_meta(counts, file_meta.get(rel, {}))
+        cur_v = self.current_version()
+        if expected_version is not None and cur_v != expected_version:
+            raise CommitConflict(f"expected v{expected_version}, found v{cur_v}")
         parent = self.manifest(cur_v)
         files: dict[str, list[str]] = {}
         if replaced_buckets is not None:
@@ -828,27 +726,14 @@ class SnapshotTable:
             ),
         }
         kept = {rel for fs in files.values() for rel in fs}
-        stats = {
-            r: s for r, s in parent.get("file_stats", {}).items() if r in kept
+        meta = {
+            r: e for r, e in parent.get("file_meta", {}).items() if r in kept
         }
-        if file_stats:
-            stats.update({r: s for r, s in file_stats.items() if r in kept})
-        if stats:
-            manifest["file_stats"] = stats
-        blooms = {
-            r: s for r, s in parent.get("file_blooms", {}).items() if r in kept
-        }
-        if file_blooms:
-            blooms.update({r: s for r, s in file_blooms.items() if r in kept})
-        if blooms:
-            manifest["file_blooms"] = blooms
-        counts = {
-            r: c for r, c in parent.get("file_counts", {}).items() if r in kept
-        }
-        if file_counts:
-            counts.update({r: c for r, c in file_counts.items() if r in kept})
-        if counts:
-            manifest["file_counts"] = counts
+        for r, e in file_meta.items():
+            if r in kept:
+                meta[r] = _merge_meta(meta.get(r, {}), e)
+        if meta:
+            manifest["file_meta"] = meta
         return manifest
 
     def _write_manifest(self, manifest: dict) -> None:
@@ -886,8 +771,7 @@ class SnapshotTable:
         mode: str = "merge",
         one_row_per_key: bool | None = None,
         expected_version: int | None = None,
-        file_blooms: dict | None = None,
-        file_counts: dict | None = None,
+        file_meta: dict | None = None,
     ) -> dict:
         """Write-Audit-Publish step 1 (Iceberg's WAP / branch commit):
         build the child manifest exactly as :meth:`commit` would, but park
@@ -897,19 +781,9 @@ class SnapshotTable:
         :meth:`abandon_branch` (drop manifest + staged files). The branch
         records its base version, so publish conflict-detects against
         concurrent main-line commits exactly like the catalog CAS."""
-        cur_v = self.current_version()
-        if expected_version is not None and cur_v != expected_version:
-            raise CommitConflict(f"expected v{expected_version}, found v{cur_v}")
         manifest = self._build_manifest(
-            cur_v,
-            new_files,
-            replaced_buckets,
-            summary,
-            new_payload_schema,
-            mode,
-            one_row_per_key,
-            file_blooms=file_blooms,
-            file_counts=file_counts,
+            new_files, replaced_buckets, summary, new_payload_schema, mode,
+            one_row_per_key, expected_version, file_meta=file_meta,
         )
         manifest["branch"] = name
         # staged (never-yet-referenced) files: exactly what abandon may
@@ -1007,8 +881,8 @@ class SnapshotTable:
                 "one_row_per_key", to_version == 0
             ),
         }
-        if target.get("file_stats"):
-            manifest["file_stats"] = dict(target["file_stats"])
+        if target.get("file_meta"):
+            manifest["file_meta"] = target["file_meta"]
         self._write_manifest(manifest)
         return manifest
 
@@ -1230,6 +1104,89 @@ def _empty_frame(spark: SparkSession, schema: T.StructType) -> DataFrame:
     return spark.range(0).select(
         *[F.lit(None).cast(f.dataType).alias(f.name) for f in schema.fields]
     )
+
+
+def _merge_meta(old: dict, new: dict) -> dict:
+    """A file's ``file_meta`` entry with ``new``'s fields added; the
+    ``bounds``/``bloom`` maps merge per column."""
+    out = {**old, **new}
+    for k in ("bounds", "bloom"):
+        if k in old and k in new:
+            out[k] = {**old[k], **new[k]}
+    return out
+
+
+def _nan_last(v):
+    """Sort key matching Spark's order on doubles: NaN above +inf."""
+    return (v != v, v)
+
+
+def _footer_meta(path: str, cols: dict[str, T.DataType]) -> dict:
+    """``rows``, ``dels`` and the ``bounds`` of ``cols`` (name → Spark
+    type) of one data file, from its parquet footer. ``_deleted`` is read
+    only for row groups whose footer min ≠ max. A column the file lacks
+    (added by a later schema evolution) is all null: ``[None, None]``."""
+    import pyarrow.compute as pc
+    import pyarrow.parquet as pq
+
+    with pq.ParquetFile(path) as pf:
+        md = pf.metadata
+        idx = {md.schema.column(i).path: i for i in range(md.num_columns)}
+        dels = 0
+        for g in range(md.num_row_groups if "_deleted" in idx else 0):
+            s = md.row_group(g).column(idx["_deleted"]).statistics
+            if (s is not None and s.has_min_max and s.min == s.max
+                    and s.null_count == 0):
+                dels += md.row_group(g).num_rows if s.min else 0
+            else:
+                chunk = pf.read_row_group(g, columns=["_deleted"]).column(0)
+                dels += pc.sum(chunk).as_py() or 0
+    out: dict = {"rows": md.num_rows, "dels": dels}
+    bounds = {}
+    for c, dt in cols.items():
+        b = _chunk_bounds(md, idx[c], dt) if c in idx else [None, None]
+        if b is not None:
+            bounds[c] = b
+    if bounds:
+        out["bounds"] = bounds
+    return out
+
+
+def _chunk_bounds(md, i: int, dt: T.DataType) -> list | None:
+    """``[lo, hi]`` of column ``i`` over a footer's row groups, skipping
+    all-null ones, in the JSON form the readers compare: timestamps as
+    INT64 unix micros (the session pins ``TIMESTAMP_MICROS``), strings
+    as UTF-8. None — no bound, the file is always read — when a chunk
+    lacks statistics or the type has no such form."""
+    col = md.schema.column(i)
+    if isinstance(dt, T.StringType):
+        decode = bytes.decode
+    elif isinstance(dt, T.TimestampType):
+        unit = json.loads(col.logical_type.to_json()).get("timeUnit")
+        if col.physical_type != "INT64" or unit != "microseconds":
+            return None
+        decode = int
+    elif isinstance(dt, (T.BooleanType, T.IntegralType, T.FloatType,
+                         T.DoubleType)):
+        # Spark's writer (parquet-mr) orders NaN above +inf in float
+        # statistics, as Spark's min/max do, so a NaN row is never pruned
+        decode = None
+    else:
+        return None
+    los, his = [], []
+    for g in range(md.num_row_groups):
+        chunk = md.row_group(g).column(i)
+        s = chunk.statistics
+        if s is not None and s.null_count == chunk.num_values:
+            continue
+        if s is None or not s.has_min_max:
+            return None
+        los.append(s.min_raw if decode is None else decode(s.min_raw))
+        his.append(s.max_raw if decode is None else decode(s.max_raw))
+    if not los:
+        return [None, None]
+    return [min(los, key=_nan_last), max(his, key=_nan_last)]
+
 
 def lww_resolve(stored: DataFrame, key_col: str) -> DataFrame:
     """Reduce stored rows to one winning row per key under the canonical

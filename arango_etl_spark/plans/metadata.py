@@ -11,9 +11,11 @@ O(files) filesystem metadata calls, zero opens. The real-Iceberg
 adapter (plans/iceberg_sink.py) delegates to Iceberg's own metadata
 tables, which store sizes in the manifest and need no stat calls.
 
-Row/tombstone counts come from the ``file_counts`` manifest channel
-(``SnapshotTable.analyze_counts`` retrofit or write-time maintenance)
-and are null for uncounted files — inspection never silently scans.
+Row/tombstone counts, zone-map columns and Bloom columns come from the
+manifest's per-file ``file_meta`` entries. Every commit records counts
+from the new files' parquet footers, so only files listed by a manifest
+written before ``file_meta`` existed report null rows until
+``SnapshotTable.analyze`` fills them — inspection never silently scans.
 """
 
 from __future__ import annotations
@@ -56,21 +58,19 @@ def files_df(
     path, size, (rows, tombstones) when counted, and which secondary
     indexes cover it."""
     m = manifest or table.manifest()
-    counts = m.get("file_counts", {})
-    stats = m.get("file_stats", {})
-    blooms = m.get("file_blooms", {})
+    meta = m.get("file_meta", {})
     rows = []
     for b, fs in sorted(m["files"].items(), key=lambda kv: int(kv[0])):
         for rel in fs:
-            c = counts.get(rel)
+            e = meta.get(rel, {})
             rows.append((
                 int(b),
                 rel,
                 os.path.getsize(os.path.join(table.root, rel)),
-                int(c[0]) if c else None,
-                int(c[1]) if c else None,
-                sorted(stats.get(rel, {})),
-                sorted(blooms.get(rel, {})),
+                e.get("rows"),
+                e.get("dels"),
+                sorted(e.get("bounds", {})),
+                sorted(e.get("bloom", {})),
             ))
     return spark.createDataFrame(rows, _FILES_SCHEMA)
 

@@ -87,13 +87,9 @@ class IngestConfig:
     # write-time Bloom index maintenance: each micro-batch indexes ONLY
     # its freshly staged files for these columns (O(batch); with the CoW
     # strategy the table then stays read_eq-prunable continuously — see
-    # SnapshotTable.build_blooms). None = off.
+    # SnapshotTable.build_blooms). None = off. Row/tombstone counts need
+    # no setting: every commit reads them from parquet footers.
     bloom_cols: tuple[str, ...] | None = None
-    # write-time row/tombstone counts: each micro-batch counts ONLY its
-    # freshly staged files (O(batch)) so row_count()/col_bounds() stay
-    # metadata-answerable as the stream runs — see
-    # SnapshotTable.build_counts. False = off.
-    count_files: bool = False
 
 
 def run_ingest(
@@ -223,7 +219,6 @@ def run_ingest(
                     bloom_cols=(
                         list(cfg.bloom_cols) if cfg.bloom_cols else None
                     ),
-                    count_files=cfg.count_files,
                 )
             if (
                 cfg.expire_every

@@ -29,6 +29,15 @@ def mk_table(tmp_path, name):
     )
 
 
+def _meta_with(manifest, field, col):
+    """Files whose ``file_meta`` entry has ``field`` (bounds/bloom) for
+    ``col``."""
+    return {
+        rel for rel, e in manifest.get("file_meta", {}).items()
+        if col in e.get(field, {})
+    }
+
+
 def test_poison_batch_skipped_after_retry_cap(spark, tmp_path):
     """A batch that fails every attempt is retried max_retries times, then
     skipped and durably marked 'poisoned' — the stream drains the rest
@@ -252,7 +261,7 @@ def test_zone_map_range_pruning(spark, tmp_path):
     m = t.manifest()
     all_files = t.data_files(m)
     assert len(all_files) >= 24  # 8 buckets x ~1250 rows / 400 per file
-    assert set(m["file_stats"]) == {
+    assert _meta_with(m, "bounds", "_seq_no") == {
         os.path.relpath(f, t.root) for f in all_files
     }
 
@@ -270,10 +279,7 @@ def test_zone_map_range_pruning(spark, tmp_path):
 
     # stats survive carried-over commits and die with replaced files
     compact(spark, t)  # plain re-compaction: new files, old stats dropped
-    assert "file_stats" not in t.manifest() or not any(
-        rel in t.manifest().get("file_stats", {})
-        for rel in (os.path.relpath(f, t.root) for f in all_files)
-    )
+    assert not _meta_with(t.manifest(), "bounds", "_seq_no")
     # pruning-free fallback still answers correctly (no stats present)
     again = t.read_range(spark, "_seq_no", lo=1000, hi=1999)
     assert again.count() == 1000
@@ -419,11 +425,11 @@ def test_bloom_point_lookup_pruning(spark, tmp_path):
     from arango_etl_spark.operators.merge_into import compact
 
     compact(spark, t, max_records_per_file=400)
-    t.analyze_bloom(spark, ["source"])
+    t.analyze(spark, bloom_cols=["source"])
     m = t.manifest()
     all_files = t.data_files(m)
     assert len(all_files) >= 24
-    assert set(m["file_blooms"]) == {
+    assert _meta_with(m, "bloom", "source") == {
         os.path.relpath(f, t.root) for f in all_files
     }
 
@@ -447,13 +453,13 @@ def test_bloom_point_lookup_pruning(spark, tmp_path):
 
     # index entries survive metadata-only commits on the same files...
     t.analyze(spark, ["_seq_no"])
-    assert set(t.manifest()["file_blooms"]) == {
+    assert _meta_with(t.manifest(), "bloom", "source") == {
         os.path.relpath(f, t.root) for f in all_files
     }
     # ...and die with replaced files; the lookup then scans all files
     # but still answers correctly (pruning is never a correctness gate)
     compact(spark, t)
-    assert "file_blooms" not in t.manifest()
+    assert not _meta_with(t.manifest(), "bloom", "source")
     again = t.read_eq(spark, "source", target)
     assert {r["doc_id"] for r in again.collect()} == {"d04321"}
 
@@ -480,7 +486,7 @@ def test_bloom_write_time_maintenance(spark, tmp_path):
     m = t.manifest()
     all_files = t.data_files(m)
     # every live file is indexed — including batch-0 files carried over
-    assert set(m["file_blooms"]) == {
+    assert _meta_with(m, "bloom", "source") == {
         os.path.relpath(f, t.root) for f in all_files
     }
     got = t.read_eq(spark, "source", "user_150")   # batch-0 resident
@@ -502,7 +508,7 @@ def test_bloom_write_time_maintenance(spark, tmp_path):
 
     compact(spark, t2, max_records_per_file=100, bloom_cols=["source"])
     m2 = t2.manifest()
-    assert set(m2["file_blooms"]) == {
+    assert _meta_with(m2, "bloom", "source") == {
         os.path.relpath(f, t2.root) for f in t2.data_files(m2)
     }
     hit = t2.read_eq(spark, "source", "s_42")
@@ -524,7 +530,7 @@ def test_bloom_write_time_maintenance(spark, tmp_path):
                          max_files_per_trigger=1),
     )
     m3 = t3.manifest()
-    assert set(m3["file_blooms"]) == {
+    assert _meta_with(m3, "bloom", "source") == {
         os.path.relpath(f, t3.root) for f in t3.data_files(m3)
     }
     got = t3.read_eq(spark, "source", "u123")

@@ -4,9 +4,13 @@ data scan."""
 
 from __future__ import annotations
 
+import json
+import math
 import os
 
 import pytest
+from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
 from arango_etl_spark.operators.merge_into import apply_changes, compact
 from arango_etl_spark.plans.lakehouse import SnapshotTable
@@ -31,18 +35,35 @@ def _ingest(spark, t, n=120, strategy="mor"):
     )
 
 
-def test_analyze_counts_incremental_and_row_count(spark, tmp_path):
-    """analyze_counts scans ONLY uncounted files; with complete counts a
-    flat snapshot answers row_count with NO SparkSession at all —
-    tombstones subtracted exactly."""
+def _drop_file_meta(t):
+    """Re-write the current manifest as one written before per-file
+    metadata existed: same files, no ``file_meta``."""
+    m = t.manifest()
+    m.pop("file_meta", None)
+    with open(os.path.join(t.meta_dir, f"v{m['version']}.json"), "w") as f:
+        json.dump(m, f)
+
+
+def test_analyze_retrofit_incremental_and_row_count(spark, tmp_path):
+    """analyze counts ONLY uncounted files (those of a manifest written
+    before commits recorded counts); with complete counts a flat snapshot
+    answers row_count with NO SparkSession at all — tombstones subtracted
+    exactly."""
     t = mk_table(tmp_path, "cnt")
     _ingest(spark, t, n=120)
-    m1 = t.analyze_counts(spark)
+    assert t.counts_complete()  # the commit read its files' footers
+    _drop_file_meta(t)
+    assert not t.counts_complete()
+    m1 = t.analyze(spark)
     n_files_1 = sum(len(fs) for fs in m1["files"].values())
-    assert m1["counted_files"] == n_files_1
+    assert m1["analyzed_files"] == n_files_1
     assert t.counts_complete()
+    # idempotent re-run: nothing missing, no commit
+    v = t.current_version()
+    assert t.analyze(spark)["analyzed_files"] == 0
+    assert t.current_version() == v
 
-    # second batch: the re-run counts exactly the new files
+    # second batch: its commit counts exactly its own new files
     apply_changes(
         spark, t,
         mk_events(
@@ -52,29 +73,26 @@ def test_analyze_counts_incremental_and_row_count(spark, tmp_path):
         ),
         batch_id=1, fence_stream_id="m", strategy="mor", compact_every=0,
     )
-    m2 = t.analyze_counts(spark)
-    n_files_2 = sum(len(fs) for fs in m2["files"].values())
-    assert m2["counted_files"] == n_files_2 - n_files_1
+    assert t.counts_complete()
+    assert t.analyze(spark)["analyzed_files"] == 0
     # MoR snapshot: metadata count impossible → needs a session, and the
     # fallback still agrees with read()
     with pytest.raises(ValueError):
         t.row_count()
     assert t.row_count(spark) == 100  # 120 - 20 deleted
 
-    # compaction makes it flat; counts retrofit once more and count(*)
-    # is pure manifest arithmetic — no session argument
+    # compaction makes it flat and counts its rewritten files, so
+    # count(*) is pure manifest arithmetic — no session argument
     compact(spark, t)
-    assert not t.counts_complete()  # rewritten files are uncounted
-    t.analyze_counts(spark)
+    assert t.counts_complete()
     assert t.row_count() == 100
-    # idempotent re-run: zero files scanned
-    assert t.analyze_counts(spark)["counted_files"] == 0
+    assert t.analyze(spark)["analyzed_files"] == 0
 
 
 def test_files_and_partitions_tables(spark, tmp_path):
     """files/partitions metadata tables: totals agree with the manifest
-    and with counted stats; uncounted buckets report null rows (never a
-    guess)."""
+    and with counted stats; uncounted buckets (a manifest written before
+    commits recorded counts) report null rows (never a guess)."""
     t = mk_table(tmp_path, "meta")
     _ingest(spark, t, n=120)
     m = t.manifest()
@@ -82,13 +100,14 @@ def test_files_and_partitions_tables(spark, tmp_path):
     got = files.collect()
     assert len(got) == sum(len(fs) for fs in m["files"].values())
     assert all(r["size_bytes"] > 0 for r in got)
-    assert all(r["rows"] is None for r in got)  # uncounted yet
+    assert sum(r["rows"] for r in got) == 120  # counted at commit
+    assert all(r["zone_stat_cols"] == [] for r in got)
+    _drop_file_meta(t)
+    assert all(r["rows"] is None for r in meta_df(spark, t, "files").collect())
     parts = {r["bucket"]: r for r in meta_df(spark, t, "partitions").collect()}
     assert all(p["rows"] is None for p in parts.values())
 
-    t.analyze_counts(spark)
-    t.analyze(spark, ["_seq_no"])
-    t.analyze_bloom(spark, ["source"])
+    t.analyze(spark, cols=["_seq_no"], bloom_cols=["source"])
     files2 = meta_df(spark, t, "files").collect()
     assert sum(r["rows"] for r in files2) == 120
     assert all(r["zone_stat_cols"] == ["_seq_no"] for r in files2)
@@ -104,13 +123,13 @@ def test_snapshots_table_history(spark, tmp_path):
     t = mk_table(tmp_path, "snap")
     _ingest(spark, t, n=50)
     compact(spark, t)
-    t.analyze_counts(spark)
+    t.analyze(spark, cols=["_seq_no"])
     snaps = meta_df(spark, t, "snapshots").collect()
     assert [r["version"] for r in snaps] == list(range(t.current_version() + 1))
     assert snaps[-2]["mode"] == "compact"
     assert snaps[-1]["mode"] == "analyze"
     assert snaps[-2]["one_row_per_key"] is True
-    assert "analyze_counts" in snaps[-1]["summary"]
+    assert "analyzed_files" in snaps[-1]["summary"]
 
     t.expire_snapshots(keep_last=2)
     kept = meta_df(spark, t, "snapshots").collect()
@@ -119,10 +138,10 @@ def test_snapshots_table_history(spark, tmp_path):
 
 
 def test_write_time_counts(spark, tmp_path):
-    """count_files=True: every commit counts only its staged files, so a
-    CoW table answers row_count() metadata-only after EVERY commit (no
-    retrofit), and an incremental compaction with count_files covers the
-    rewritten bucket so the counts channel never goes stale."""
+    """Every commit counts its staged files from their footers, so a CoW
+    table answers row_count() metadata-only after EVERY commit (no
+    retrofit), and an incremental compaction covers the rewritten bucket
+    so the counts never go stale."""
     t = mk_table(tmp_path, "wtc")
     apply_changes(
         spark, t,
@@ -130,7 +149,6 @@ def test_write_time_counts(spark, tmp_path):
             spark, [ev("insert", f"d{i:03d}", i, [1]) for i in range(60)]
         ),
         batch_id=0, fence_stream_id="m", strategy="cow", compact_every=0,
-        count_files=True,
     )
     assert t.counts_complete()
     assert t.row_count() == 60  # metadata-only, no session
@@ -143,23 +161,21 @@ def test_write_time_counts(spark, tmp_path):
             + [ev("delete", f"d{i:03d}", 200 + i, None) for i in range(50, 60)],
         ),
         batch_id=1, fence_stream_id="m", strategy="cow", compact_every=0,
-        count_files=True,
     )
     assert t.counts_complete()
     assert t.row_count() == 50  # still zero retrofit scans
 
-    # MoR deltas + incremental compaction keep the channel complete when
-    # the compaction itself counts its rewritten files
+    # MoR deltas + incremental compaction keep the counts complete: the
+    # compaction's commit counts its rewritten files
     apply_changes(
         spark, t,
         mk_events(spark, [ev("update", "d000", 999, [5])]),
         batch_id=2, fence_stream_id="m", strategy="mor", compact_every=0,
-        count_files=True,
     )
     assert t.counts_complete()
     from arango_etl_spark.operators.merge_into import compact_buckets
 
-    m = compact_buckets(spark, t, min_delta_files=2, count_files=True)
+    m = compact_buckets(spark, t, min_delta_files=2)
     assert t.counts_complete(m)
 
 
@@ -180,7 +196,6 @@ def test_col_bounds_metadata_only(spark, tmp_path):
         batch_id=0, fence_stream_id="m", strategy="mor", compact_every=0,
     )
     compact(spark, t)
-    t.analyze_counts(spark)
     t.analyze(spark, ["_seq_no", "_event_ts"])
     # metadata-only: zero jobs, no session argument
     assert t.col_bounds("_seq_no") == (0, 79)
@@ -196,7 +211,6 @@ def test_col_bounds_metadata_only(spark, tmp_path):
         batch_id=1, fence_stream_id="m", strategy="mor", compact_every=0,
     )
     compact(spark, t)
-    t.analyze_counts(spark)
     t.analyze(spark, ["_seq_no"])
     with pytest.raises(ValueError):
         t.col_bounds("_seq_no")
@@ -204,9 +218,10 @@ def test_col_bounds_metadata_only(spark, tmp_path):
 
 
 def test_counts_survive_incremental_compaction(spark, tmp_path):
-    """file_counts follow the file lifecycle: untouched buckets keep
-    their entries across an incremental compaction; rewritten buckets
-    drop theirs (stats can never outlive or contradict the file list)."""
+    """file_meta entries follow the file lifecycle: untouched buckets
+    keep their entries across an incremental compaction; rewritten
+    buckets drop theirs (metadata can never outlive or contradict the
+    file list) and the compaction's commit counts the new files."""
     from arango_etl_spark.operators.merge_into import compact_buckets
     from pyspark.sql import functions as F
 
@@ -229,16 +244,194 @@ def test_counts_survive_incremental_compaction(spark, tmp_path):
         mk_events(spark, [ev("update", k, 9, [7]) for k in hot_keys]),
         batch_id=1, fence_stream_id="m", strategy="mor", compact_every=0,
     )
-    t.analyze_counts(spark)
     pre = t.manifest()
     m = compact_buckets(spark, t, min_delta_files=2)
     assert m["compacted_buckets"] == [hot_b]
     cold_files = {
         rel for b, fs in pre["files"].items() if int(b) != hot_b for rel in fs
     }
-    assert cold_files <= set(m.get("file_counts", {}))
+    assert {r: m["file_meta"][r] for r in cold_files} == {
+        r: pre["file_meta"][r] for r in cold_files
+    }
+    hot_old = set(pre["files"][str(hot_b)])
     hot_new = set(m["files"][str(hot_b)])
-    assert not hot_new & set(m.get("file_counts", {}))
-    # retrofit covers just the rewritten bucket's files
-    assert t.analyze_counts(spark)["counted_files"] == len(hot_new)
+    assert not hot_old & set(m["file_meta"])  # died with their files
+    assert hot_new <= set(m["file_meta"])     # counted at commit
+    assert t.analyze(spark)["analyzed_files"] == 0
     assert t.row_count(spark) == 160
+
+
+# ---------------------------------------------------------------------------
+# footer-read file_meta: fidelity against a Spark scan, zero jobs, lifecycle
+
+_WIDE_SCHEMA = T.StructType([
+    T.StructField("doc_id", T.StringType()),
+    T.StructField("score", T.DoubleType()),
+    T.StructField("empty", T.LongType()),
+    T.StructField("source", T.StringType()),
+])
+_WIDE_EVENTS = (
+    "op string, doc_id string, seq_no long, score double, empty long, "
+    "source string, batch_id long, event_ts timestamp"
+)
+_WIDE_COLS = ["doc_id", "score", "empty", "source", "_seq_no", "_event_ts"]
+
+
+def _wide_events(spark, lo, hi, batch, deletes=()):
+    import datetime as dt
+
+    rows = []
+    for i in range(lo, hi):
+        op = "delete" if i in deletes else "update"
+        rows.append((
+            op, f"d{i:04d}", batch * 10_000 + i,
+            float("nan") if i % 7 == 0 else i * 0.5,
+            None, f"ü_{i % 13}", batch,
+            dt.datetime(2024, 1, 1) + dt.timedelta(minutes=i, seconds=batch),
+        ))
+    return spark.createDataFrame(rows, _WIDE_EVENTS)
+
+
+def _scan_oracle(spark, t):
+    """Per-file rows, tombstones and min/max from one Spark scan grouped by
+    input_file_name() — the oracle for the footer-read values."""
+    m = t.manifest()
+    schema = t.stored_schema(m)
+    exprs = [
+        F.count(F.lit(1)).alias("rows"),
+        F.sum(F.col("_deleted").cast("int")).alias("dels"),
+    ]
+    for c in _WIDE_COLS:
+        col = F.unix_micros(c) if c == "_event_ts" else F.col(c)
+        exprs += [F.min(col).alias(f"lo_{c}"), F.max(col).alias(f"hi_{c}")]
+    got = (
+        spark.read.schema(schema).parquet(*t.data_files(m))
+        .groupBy(F.input_file_name().alias("_f")).agg(*exprs).collect()
+    )
+    return {
+        t._rel_from_uri(r["_f"]): {
+            "rows": r["rows"], "dels": r["dels"],
+            "bounds": {
+                c: [r[f"lo_{c}"], r[f"hi_{c}"]] for c in _WIDE_COLS
+            },
+        }
+        for r in got
+    }
+
+
+def _same(a, b):
+    if isinstance(a, float) and isinstance(b, float):
+        return a == b or (math.isnan(a) and math.isnan(b))
+    return a == b
+
+
+def _assert_meta_matches_scan(spark, t):
+    m = t.analyze(spark, cols=_WIDE_COLS)
+    oracle = _scan_oracle(spark, t)
+    meta = m["file_meta"]
+    assert set(meta) == set(oracle) == {
+        os.path.relpath(f, t.root) for f in t.data_files(m)
+    }
+    for rel, want in oracle.items():
+        e = meta[rel]
+        assert (e["rows"], e["dels"]) == (want["rows"], want["dels"]), rel
+        for c in _WIDE_COLS:
+            lo, hi = e["bounds"][c]
+            wlo, whi = want["bounds"][c]
+            assert _same(lo, wlo) and _same(hi, whi), (rel, c, lo, hi, wlo, whi)
+    return meta
+
+
+def test_footer_meta_matches_spark_scan(spark, tmp_path):
+    """Footer-read rows/dels/bounds equal a Spark scan's count, tombstone
+    sum and min/max per file — on a MoR delta stack with tombstones
+    (mixed and delete-only files), then on the compacted flat table.
+    Covers a double column with NaN, an all-null column, a timestamp and
+    a non-ASCII string."""
+    t = SnapshotTable.create(str(tmp_path / "wide"), _WIDE_SCHEMA, n_buckets=4)
+    for batch, (lo, hi, dels) in enumerate([
+        (0, 300, ()),
+        (100, 400, range(150, 200)),
+        (150, 200, range(150, 200)),  # delete-only files
+    ]):
+        apply_changes(
+            spark, t, _wide_events(spark, lo, hi, batch, set(dels)),
+            batch_id=batch, strategy="mor", compact_every=0,
+        )
+    meta = _assert_meta_matches_scan(spark, t)
+    assert any(0 < e["dels"] < e["rows"] for e in meta.values())
+    assert any(e["dels"] == e["rows"] for e in meta.values())
+    assert any(math.isnan(e["bounds"]["score"][1]) for e in meta.values())
+    assert all(e["bounds"]["empty"] == [None, None] for e in meta.values())
+
+    compact(spark, t)
+    meta = _assert_meta_matches_scan(spark, t)
+    assert sum(e["rows"] - e["dels"] for e in meta.values()) == 350
+    assert t.row_count() == t.read(spark).count() == 350
+
+
+def test_analyze_runs_no_spark_job(spark, tmp_path):
+    """Counts and zone-map bounds come from parquet footers: neither
+    ``analyze(spark)`` nor ``analyze(spark, cols=[...])`` launches a job."""
+    t = mk_table(tmp_path, "nojob")
+    _ingest(spark, t, n=120)
+    compact(spark, t)
+    _drop_file_meta(t)
+    st = spark.sparkContext.statusTracker()
+
+    def last_job():
+        return max(st.getJobIdsForGroup(None) or [-1])
+
+    before = last_job()
+    assert t.analyze(spark)["analyzed_files"] > 0
+    assert t.analyze(
+        spark, cols=["_seq_no", "_event_ts", "source"]
+    )["analyzed_files"] > 0
+    assert last_job() == before
+    assert t.row_count() == 120
+    assert t.col_bounds("_seq_no") == (1, 1)
+
+
+def test_rollback_keeps_file_meta(spark, tmp_path):
+    """rollback restores the target version's per-file metadata whole:
+    Bloom pruning in read_eq and the metadata-only row_count survive."""
+    t = mk_table(tmp_path, "rbmeta")
+    apply_changes(
+        spark, t,
+        mk_events(spark, [ev("update", f"d{i:04d}", i, [1], src=f"user_{i}")
+                          for i in range(2000)]),
+        strategy="mor", compact_every=0,
+    )
+    compact(spark, t, max_records_per_file=100)
+    v = t.analyze(spark, bloom_cols=["source"])["version"]
+    n_files = len(t.data_files())
+    apply_changes(
+        spark, t,
+        mk_events(spark, [ev("delete", f"d{i:04d}", 5000 + i, None)
+                          for i in range(100)]),
+        strategy="mor", compact_every=0,
+    )
+    compact(spark, t)
+    t.rollback(v)
+    assert t.row_count() == 2000  # metadata-only, no session
+    got = t.read_eq(spark, "source", "user_150")
+    assert {r["doc_id"] for r in got.collect()} == {"d0150"}
+    assert len(got.inputFiles()) <= 3 < n_files
+
+
+def test_analyze_adds_bounds_across_calls(spark, tmp_path):
+    """A second analyze on other columns adds to the first call's bounds
+    instead of replacing them: read_range still prunes on the first."""
+    t = mk_table(tmp_path, "addb")
+    apply_changes(
+        spark, t,
+        mk_events(spark, [ev("update", f"d{i:05d}", i, [1])
+                          for i in range(4000)]),
+        strategy="mor", compact_every=0,
+    )
+    compact(spark, t, cluster_by="_seq_no", max_records_per_file=100)
+    t.analyze(spark, cols=["_seq_no"])
+    t.analyze(spark, cols=["_event_ts"])
+    got = t.read_range(spark, "_seq_no", lo=1000, hi=1399)
+    assert got.count() == 400
+    assert len(got.inputFiles()) <= len(t.data_files()) // 2
