@@ -45,7 +45,12 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from arango_etl_spark.operators import dedup_window
-from arango_etl_spark.plans.lakehouse import SnapshotTable, lww_resolve
+from arango_etl_spark.plans.lakehouse import (
+    SnapshotTable,
+    fence_entries,
+    fence_of,
+    lww_resolve,
+)
 
 CDC_META = ["op", "seq_no", "batch_id", "event_ts"]
 
@@ -58,14 +63,9 @@ DEDUP_STRATEGIES = {"max_by": dedup_window.dedup_events}
 class MergeResult:
     version: int
     skipped: bool = False
-    events_seen: int | None = None
     keys_applied: int | None = None
     max_seq_no: int | None = None
     new_columns: list[str] = field(default_factory=list)
-
-
-def _payload_cols(events: DataFrame, key_col: str) -> list[str]:
-    return [c for c in events.columns if c not in CDC_META and c != key_col]
 
 
 def _as_stored(deduped: DataFrame, key_col: str, payload: list[str]) -> DataFrame:
@@ -82,12 +82,12 @@ def _as_stored(deduped: DataFrame, key_col: str, payload: list[str]) -> DataFram
 
 
 def _evolve_schema(
-    table: SnapshotTable, events: DataFrame, key_col: str
+    current: T.StructType, events: DataFrame, key_col: str
 ) -> tuple[T.StructType | None, list[str]]:
     """Additive schema evolution: payload columns present in the batch but
-    not in the table schema are appended (nullable). Non-additive changes
-    (type change, drop) are rejected — additive-only per the north rule."""
-    current = table.payload_schema()
+    not in the table schema ``current`` are appended (nullable).
+    Non-additive changes (type change, drop) are rejected — additive-only
+    per the north rule."""
     names = set(current.fieldNames())
     new_fields = []
     for f_ in events.schema.fields:
@@ -116,8 +116,6 @@ def apply_changes(
     fence_run_id: str | None = None,
     strategy: str = "mor",
     compact_every: int = 8,
-    collect_metrics: bool = True,
-    extra_summary: dict | None = None,
     min_seq_exclusive: int | None = None,
     branch: str | None = None,
     bloom_cols: list[str] | None = None,
@@ -157,14 +155,15 @@ def apply_changes(
     # fence_run_id identifies the lineage (the runner stores it INSIDE the
     # checkpoint dir, so deleting the checkpoint rotates it); on mismatch
     # the batch is re-applied, which is safe — the merge is LWW-idempotent.
-    if fence_stream_id is not None and batch_id is not None:
-        last = table.last_batch_id(fence_stream_id)
-        stored_run = manifest["summary"].get(f"fence_run.{fence_stream_id}")
-        if last is not None and batch_id <= last and stored_run == fence_run_id:
+    fencing = fence_stream_id is not None and batch_id is not None
+    if fencing:
+        last = fence_of(manifest, fence_stream_id, fence_run_id)
+        if last is not None and batch_id <= last:
             return MergeResult(version=manifest["version"], skipped=True)
 
-    evolved_schema, new_cols = _evolve_schema(table, events, key_col)
-    payload_schema = evolved_schema or table.payload_schema()
+    current_schema = table.payload_schema(manifest)
+    evolved_schema, new_cols = _evolve_schema(current_schema, events, key_col)
+    payload_schema = evolved_schema or current_schema
     payload = [f_.name for f_ in payload_schema.fields if f_.name != key_col]
 
     # align batch to the (possibly widened) payload: older producers may
@@ -173,15 +172,12 @@ def apply_changes(
         if f_.name not in events.columns:
             events = events.withColumn(f_.name, F.lit(None).cast(f_.dataType))
 
-    deduped = DEDUP_STRATEGIES["max_by"](events, key_col=key_col)
-    obs = None
-    if collect_metrics:
-        obs = Observation(f"merge-{manifest['version'] + 1}")
-        deduped = deduped.observe(
-            obs,
-            F.count(F.lit(1)).alias("keys_applied"),
-            F.max("seq_no").alias("max_seq_no"),
-        )
+    obs = Observation(f"merge-{manifest['version'] + 1}")
+    deduped = DEDUP_STRATEGIES["max_by"](events, key_col=key_col).observe(
+        obs,
+        F.count(F.lit(1)).alias("keys_applied"),
+        F.max("seq_no").alias("max_seq_no"),
+    )
     src = _as_stored(deduped, key_col, payload).withColumn(
         "_bucket", table.bucket_expr(F.col(key_col), manifest)
     )
@@ -195,7 +191,8 @@ def apply_changes(
     )
 
     if strategy == "mor":
-        new_files, replaced = _merge_mor(table, src)
+        _, new_files = table.stage_write(src)  # no target read
+        replaced: set[int] = set()
     elif strategy == "cow":
         # touched buckets listed from the deduped source, not the raw
         # batch: inside foreachBatch an extra action on the streaming
@@ -217,61 +214,34 @@ def apply_changes(
             spark.sparkContext.getLocalProperty("streaming.sql.batchId")
             is not None
         )
-        if (obs is not None and in_micro_batch) or any(
-            fs for fs in manifest["files"].values()
-        ):
+        if in_micro_batch or any(fs for fs in manifest["files"].values()):
             touched = sorted(
                 r["_bucket"]
                 for r in src.select("_bucket").distinct().collect()
             )
         else:
             touched = []
-        new_files, replaced = _merge_cow(
-            spark, table, read_manifest, src, key_col, touched
+        # every touched bucket is replaced, including one whose rewrite
+        # came out empty (stage_write only lists buckets that got rows)
+        new_files = _rewrite_buckets(
+            spark, table, read_manifest, touched, src.drop("_bucket")
         )
+        replaced = set(touched)
     else:
         raise ValueError(f"unknown merge strategy {strategy!r}")
 
     file_meta = _blooms_for(spark, table, read_manifest, new_files, bloom_cols)
 
-    summary: dict = dict(extra_summary or {})
-    if fence_stream_id is not None and batch_id is not None:
-        summary[f"fence.{fence_stream_id}"] = int(batch_id)
-        # always (re)write the run id — commit() merges summaries forward,
-        # and a stale lineage id next to a fresh fence could wrongly skip
-        summary[f"fence_run.{fence_stream_id}"] = fence_run_id
-    metrics: dict[str, float] = {}
-    if obs is not None:
-        metrics = obs.get
-        summary["lineage.keys_applied"] = int(metrics.get("keys_applied") or 0)
-        if metrics.get("max_seq_no") is not None:
-            summary["lineage.max_seq_no"] = int(metrics["max_seq_no"])
-
-    if branch is not None:
-        new_manifest = table.stage_branch(
-            branch,
-            new_files=new_files,
-            replaced_buckets=replaced,
-            summary=summary,
-            new_payload_schema=evolved_schema,
-            mode="append" if strategy == "mor" else "merge",
-            expected_version=manifest["version"],
-            file_meta=file_meta,
-        )
-        return MergeResult(
-            version=new_manifest["version"],
-            keys_applied=(
-                int(metrics.get("keys_applied") or 0) if metrics else None
-            ),
-            max_seq_no=(
-                int(metrics["max_seq_no"])
-                if metrics and metrics.get("max_seq_no") is not None
-                else None
-            ),
-            new_columns=new_cols,
-        )
-
-    new_manifest = table.commit(
+    metrics = obs.get
+    keys_applied = int(metrics.get("keys_applied") or 0)
+    max_seq_no = metrics.get("max_seq_no")
+    summary: dict = {"lineage.keys_applied": keys_applied}
+    if max_seq_no is not None:
+        max_seq_no = int(max_seq_no)
+        summary["lineage.max_seq_no"] = max_seq_no
+    if fencing:
+        summary.update(fence_entries(fence_stream_id, batch_id, fence_run_id))
+    commit_args = dict(
         new_files=new_files,
         replaced_buckets=replaced,
         summary=summary,
@@ -280,78 +250,63 @@ def apply_changes(
         expected_version=manifest["version"],
         file_meta=file_meta,
     )
-
-    if strategy == "mor" and compact_every:
-        # compact when the average delta-file depth per bucket exceeds the
-        # threshold — bounds merge-on-read amplification by actual file
-        # count, not commit count (a tiny batch shouldn't hasten compaction)
-        n_files = sum(len(fs) for fs in new_manifest["files"].values())
-        if n_files > compact_every * new_manifest["n_buckets"]:
-            new_manifest = compact(spark, table)
+    if branch is not None:
+        new_manifest = table.stage_branch(branch, **commit_args)
+    else:
+        new_manifest = table.commit(**commit_args)
+        if strategy == "mor" and compact_every:
+            # compact when the average delta-file depth per bucket exceeds
+            # the threshold — bounds merge-on-read amplification by actual
+            # file count, not commit count (a tiny batch shouldn't hasten it)
+            n_files = sum(len(fs) for fs in new_manifest["files"].values())
+            if n_files > compact_every * new_manifest["n_buckets"]:
+                new_manifest = compact(spark, table)
 
     return MergeResult(
         version=new_manifest["version"],
-        keys_applied=int(metrics.get("keys_applied") or 0) if metrics else None,
-        max_seq_no=(
-            int(metrics["max_seq_no"])
-            if metrics and metrics.get("max_seq_no") is not None
-            else None
-        ),
+        keys_applied=keys_applied,
+        max_seq_no=max_seq_no,
         new_columns=new_cols,
     )
 
 
-def _merge_mor(
-    table: SnapshotTable, src: DataFrame
-) -> tuple[dict[str, list[str]], set[int]]:
-    """Append the deduped batch as per-bucket delta files — no target read,
-    no target-side shuffle; commit cost is O(batch). The LWW reduce is
-    deferred to readers / compaction (Iceberg MoR shape)."""
-    _, files = table.stage_write(src)
-    return files, set()  # append: every existing file carries over
-
-
-def _merge_cow(
+def _rewrite_buckets(
     spark: SparkSession,
     table: SnapshotTable,
     manifest: dict,
-    src: DataFrame,
-    key_col: str,
-    touched: list[int],
-) -> tuple[dict[str, list[str]], set[int]]:
-    """Copy-on-write MERGE: bucket-pruned, rewrite only touched buckets
-    (Iceberg CoW MERGE INTO analogue, SURVEY.md J3 /
-    /root/reference/src/handler/arangodb.rs:220,235,302).
-    `touched` is bounded metadata (≤ n_buckets ints), not data.
-
-    UNION the pruned target with the deduped batch and hash-reduce per
-    key (`lww_resolve` max_by): one partial-aggregating shuffle, no join,
-    and it tolerates multi-row-per-key targets (a table previously
-    written MoR keeps a delta stack per key until compaction).
-    """
-    target = table.read_stored(spark, buckets=touched, manifest=manifest)
-    merged = lww_resolve(
-        target.unionByName(src.drop("_bucket")), key_col
-    ).withColumn("_bucket", table.bucket_expr(F.col(key_col), manifest))
-    _, files = table.stage_write(merged)
-    # every touched bucket is replaced, including one whose rewrite came
-    # out empty (stage_write only lists buckets that got rows)
-    return files, set(touched)
-
-
-def _resolve_cluster_by(resolved, cluster_by, table, manifest):
-    """A LIST of 2-4 cluster columns requests the Z-order rewrite
-    (operators/zorder.py); a single name (or 1-list) is the linear
-    sort-order rewrite. Returns what stage_write accepts."""
+    buckets: list[int] | None,
+    src: DataFrame | None = None,
+    cluster_by: str | list[str] | None = None,
+    max_records_per_file: int | None = None,
+) -> dict[str, list[str]]:
+    """Stage one row per key for ``buckets`` (all when None) of
+    ``manifest`` — their stored rows ∪ ``src`` (stored layout), reduced by
+    ``lww_resolve`` (one partial-aggregating shuffle, no join; any number
+    of rows per key) and bucketed by ``manifest["n_buckets"]``. The CoW
+    merge, compaction and rebucket; returns the staged files by bucket."""
+    key_col = manifest["key_col"]
+    stored = table.read_stored(spark, buckets=buckets, manifest=manifest)
+    if src is not None:
+        stored = stored.unionByName(src)
+    resolved = lww_resolve(stored, key_col).withColumn(
+        "_bucket", table.bucket_expr(F.col(key_col), manifest)
+    )
     if isinstance(cluster_by, (list, tuple)):
+        # a single name (or 1-list) is the linear sort-order rewrite; a
+        # list of 2-4 columns the Z-order rewrite (operators/zorder.py)
         if len(cluster_by) == 1:
-            return cluster_by[0]
-        from arango_etl_spark.operators.zorder import zorder_column
+            cluster_by = cluster_by[0]
+        else:
+            from arango_etl_spark.operators.zorder import zorder_column
 
-        return zorder_column(
-            resolved, list(cluster_by), table.stored_schema(manifest)
-        )
-    return cluster_by
+            cluster_by = zorder_column(
+                resolved, list(cluster_by), table.stored_schema(manifest)
+            )
+    _, files = table.stage_write(
+        resolved, cluster_by=cluster_by,
+        max_records_per_file=max_records_per_file,
+    )
+    return files
 
 
 def _blooms_for(spark, table, manifest, files, bloom_cols):
@@ -447,14 +402,8 @@ def compact_buckets(
     if not hot:
         return {**manifest, "skipped": True, "compacted_buckets": []}
     full = len(hot) == sum(1 for _, fs in by_count if fs)
-    stored = table.read_stored(spark, buckets=hot, manifest=manifest)
-    resolved = lww_resolve(stored, manifest["key_col"]).withColumn(
-        "_bucket", table.bucket_expr(F.col(manifest["key_col"]), manifest)
-    )
-    cluster_by = _resolve_cluster_by(resolved, cluster_by, table, manifest)
-    _, files = table.stage_write(
-        resolved,
-        cluster_by=cluster_by,
+    files = _rewrite_buckets(
+        spark, table, manifest, hot, cluster_by=cluster_by,
         max_records_per_file=max_records_per_file,
     )
     out = table.commit(
@@ -539,13 +488,10 @@ def rebucket(
     if new_n_buckets < 1:
         raise ValueError(f"new_n_buckets must be >= 1, got {new_n_buckets}")
     manifest = table.manifest()
-    key_col = manifest["key_col"]
-    stored = table.read_stored(spark, manifest=manifest)
-    resolved = lww_resolve(stored, key_col).withColumn(
-        "_bucket",
-        F.pmod(F.xxhash64(F.col(key_col)), F.lit(new_n_buckets)).cast("int"),
+    # read_stored takes the files and schema; bucket_expr the new count
+    files = _rewrite_buckets(
+        spark, table, {**manifest, "n_buckets": new_n_buckets}, None
     )
-    _, files = table.stage_write(resolved)
     return table.commit(
         new_files=files,
         replaced_buckets=None,

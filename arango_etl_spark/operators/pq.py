@@ -131,23 +131,6 @@ def build_pq_index(
     return PqIndex(codebooks, codes, id_col, dsub)
 
 
-def _adc_expr(index, qvec) -> Column:
-    """Asymmetric distance: sum_j sqL2(query_sub_j, codebook_j[codes[j]]).
-    Integer-exact; the codebook row is selected per stored code.
-    ``index`` needs only .codebooks/.dsub (PqIndex or IvfPqIndex);
-    ``qvec`` is a column name or Column (IVFADC passes the per-cell
-    query RESIDUAL expression)."""
-    qv = F.col(qvec) if isinstance(qvec, str) else qvec
-    total = F.lit(0).cast("long")
-    for j, cb in enumerate(index.codebooks):
-        cb_lit = F.expr(_lit_int_matrix(cb))
-        sub = F.slice(qv, j * index.dsub + 1, index.dsub)
-        total = total + _sq_l2(
-            sub, F.element_at(cb_lit, F.element_at(F.col("codes"), j + 1) + 1)
-        )
-    return total
-
-
 def _lut_expr(index, qvec) -> Column:
     """Per-query ADC lookup table (Jégou et al. 2011 §V, the classic
     LUT trick): lut[j][c] = sqL2(query_sub_j, codebook_j[c]) — m × ksub
@@ -167,9 +150,10 @@ def _lut_expr(index, qvec) -> Column:
 
 
 def _adc_from_lut(m: int, lut_col: str = "_lut") -> Column:
-    """sum_j lut[j][codes[j]] — integer-exact, identical by commutative
-    int addition to :func:`_adc_expr`, but every term is a plain
-    (codegen-friendly) element_at chain: no per-candidate lambda."""
+    """Asymmetric distance sum_j lut[j][codes[j]] = sum_j
+    sqL2(query_sub_j, codebook_j[codes[j]]) — integer-exact, and every
+    term is a plain (codegen-friendly) element_at chain: no
+    per-candidate lambda."""
     total = F.lit(0).cast("long")
     for j in range(m):
         total = total + F.element_at(

@@ -168,12 +168,7 @@ class SnapshotTable:
         (map-side combine), not a window — no per-key shuffle skew blowup.
         """
         m = manifest or self.manifest()
-        stored = self.read_stored(spark, manifest=m)
-        if m.get("one_row_per_key", False):
-            resolved = stored
-        else:
-            resolved = lww_resolve(stored, m["key_col"])
-        return resolved.where(~F.col("_deleted")).drop(*META_NAMES)
+        return _live(self.read_stored(spark, manifest=m), m).drop(*META_NAMES)
 
     def read_keys(
         self, spark: SparkSession, keys: list, manifest: dict | None = None
@@ -203,11 +198,7 @@ class SnapshotTable:
         stored = self.read_stored(spark, buckets=buckets, manifest=m).where(
             F.col(key_col).isin(list(keys))
         )
-        if m.get("one_row_per_key", False):
-            resolved = stored
-        else:
-            resolved = lww_resolve(stored, key_col)
-        return resolved.where(~F.col("_deleted")).drop(*META_NAMES)
+        return _live(stored, m).drop(*META_NAMES)
 
     # ------------------------------------------------- per-file metadata
     def analyze(self, spark: SparkSession, cols=(), bloom_cols=()) -> dict:
@@ -439,10 +430,7 @@ class SnapshotTable:
                 "zero tombstones AND zone-map bounds on every file for "
                 f"{col!r} (run compact + analyze)"
             )
-        resolved = lww_resolve(
-            self.read_stored(spark, manifest=m), m["key_col"]
-        )
-        r = resolved.where(~F.col("_deleted")).agg(
+        r = _live(self.read_stored(spark, manifest=m), m).agg(
             F.min(col).alias("lo"), F.max(col).alias("hi")).first()
         return r["lo"], r["hi"]
 
@@ -738,16 +726,9 @@ class SnapshotTable:
 
     def _write_manifest(self, manifest: dict) -> None:
         v = manifest["version"]
-        path = os.path.join(self.meta_dir, f"v{v}.json")
         # O_EXCL create = the catalog CAS: a racing committer of the same
         # version fails here and must retry against the new snapshot
-        fd = os.open(path, os.O_WRONLY | os.O_CREAT | os.O_EXCL)
-        try:
-            with os.fdopen(fd, "w") as f:
-                json.dump(manifest, f, indent=1)
-        except Exception:
-            os.unlink(path)
-            raise
+        _create_json(os.path.join(self.meta_dir, f"v{v}.json"), manifest)
         tmp = os.path.join(self.meta_dir, f"_current.tmp.{uuid.uuid4().hex[:8]}")
         with open(tmp, "w") as f:
             f.write(str(v))
@@ -791,14 +772,7 @@ class SnapshotTable:
         manifest["staged_files"] = sorted(
             {rel for fs in new_files.values() for rel in fs}
         )
-        path = self._branch_path(name)
-        fd = os.open(path, os.O_WRONLY | os.O_CREAT | os.O_EXCL)
-        try:
-            with os.fdopen(fd, "w") as f:
-                json.dump(manifest, f, indent=1)
-        except Exception:
-            os.unlink(path)
-            raise
+        _create_json(self._branch_path(name), manifest)
         return manifest
 
     def branch_manifest(self, name: str) -> dict:
@@ -926,16 +900,12 @@ class SnapshotTable:
                 if m_from["files"].get(b) != m_to["files"].get(b)
             )
 
-        def _visible(m: dict) -> DataFrame:
-            aligned = {**m, "schema": to_schema}
-            stored = self.read_stored(spark, buckets=buckets, manifest=aligned)
-            if m.get("one_row_per_key", False):
-                resolved = stored
-            else:
-                resolved = lww_resolve(stored, key_col)
-            return resolved.where(~F.col("_deleted")).drop(*META_NAMES)
-
-        old_state, new_state = _visible(m_from), _visible(m_to)
+        old_state, new_state = (
+            _live(self.read_stored(
+                spark, buckets=buckets, manifest={**m, "schema": to_schema}
+            ), m).drop(*META_NAMES)
+            for m in (m_from, m_to)
+        )
         payload = [c for c in new_state.columns if c != key_col]
         o = old_state.select(
             F.col(key_col).alias("_k"),
@@ -1186,6 +1156,44 @@ def _chunk_bounds(md, i: int, dt: T.DataType) -> list | None:
     if not los:
         return [None, None]
     return [min(los, key=_nan_last), max(his, key=_nan_last)]
+
+
+def fence_of(manifest: dict, stream_id: str, run_id: str | None) -> int | None:
+    """The last batch id ``manifest`` fences for ``stream_id`` in
+    checkpoint lineage ``run_id``; None when unfenced or fenced by another
+    lineage (epoch ids restart at 0 with a new checkpoint)."""
+    s = manifest["summary"]
+    v = s.get(f"fence.{stream_id}")
+    if v is None or s.get(f"fence_run.{stream_id}") != run_id:
+        return None
+    return int(v)
+
+
+def fence_entries(stream_id: str, batch_id: int, run_id: str | None) -> dict:
+    """Summary entries fencing ``batch_id`` in its data's commit; the run
+    id is always (re)written, as summaries merge forward."""
+    return {f"fence.{stream_id}": int(batch_id),
+            f"fence_run.{stream_id}": run_id}
+
+
+def _live(stored: DataFrame, m: dict) -> DataFrame:
+    """Visible rows of a stored frame of snapshot ``m``: LWW-resolved
+    unless ``m`` is flat, tombstones dropped; META_COLS kept for
+    ``col_bounds``."""
+    if not m.get("one_row_per_key", False):
+        stored = lww_resolve(stored, m["key_col"])
+    return stored.where(~F.col("_deleted"))
+
+
+def _create_json(path: str, obj: dict) -> None:
+    """Create ``path`` (O_EXCL) holding ``obj`` as compact JSON."""
+    fd = os.open(path, os.O_WRONLY | os.O_CREAT | os.O_EXCL)
+    try:
+        with os.fdopen(fd, "w") as f:
+            json.dump(obj, f, separators=(",", ":"))
+    except Exception:
+        os.unlink(path)
+        raise
 
 
 def lww_resolve(stored: DataFrame, key_col: str) -> DataFrame:

@@ -44,7 +44,11 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from arango_etl_spark.operators.merge_into import apply_changes
-from arango_etl_spark.plans.lakehouse import SnapshotTable
+from arango_etl_spark.plans.lakehouse import (
+    SnapshotTable,
+    fence_entries,
+    fence_of,
+)
 
 ROLLUP_SCHEMA_TAIL = [
     ("cnt", T.LongType()),
@@ -76,25 +80,26 @@ def _agg(rows: DataFrame, group_col: str, measure_col: str) -> DataFrame:
     )
 
 
-def _find_data_commit(
-    base: SnapshotTable, stream_id: str, batch_id: int
-) -> int | None:
-    """Walk the base manifest chain for the version that committed
-    ``batch_id`` (the smallest version whose fence equals it — summaries
-    merge forward, so later versions inherit the fence value). Returns
-    None when the chain has been expired past that point."""
+def _pre_batch_manifest(
+    base: SnapshotTable, stream_id: str, batch_id: int, run_id: str | None
+) -> dict | None:
+    """The base snapshot just before the version that committed
+    ``batch_id`` in checkpoint lineage ``run_id`` (the smallest version
+    whose fence equals it — summaries merge forward, so later versions
+    inherit the fence value). Returns None when the chain has been
+    expired past that point."""
     try:
         v: int | None = base.current_version()
         found = None
         while v is not None and v >= 0:
             m = base.manifest(v)
-            fence = m["summary"].get(f"fence.{stream_id}")
-            if fence is None or int(fence) < batch_id:
+            fence = fence_of(m, stream_id, run_id)
+            if fence is None or fence < batch_id:
                 break
-            if int(fence) == batch_id:
-                found = v
+            if fence == batch_id:
+                found = m["parent"]
             v = m["parent"]
-        return found
+        return None if found is None else base.manifest(found)
     except FileNotFoundError:
         return None
 
@@ -126,13 +131,7 @@ def _commit_rollup(
     rollup.commit(
         new_files=files,
         replaced_buckets=None,
-        summary={
-            f"fence.{stream_id}": int(batch_id),
-            # run-id scopes the fence to one checkpoint lineage (epoch
-            # ids restart at 0 after checkpoint loss — same contract as
-            # apply_changes)
-            f"fence_run.{stream_id}": run_id,
-        },
+        summary=fence_entries(stream_id, batch_id, run_id),
         mode="merge",
         one_row_per_key=True,
         expected_version=m["version"],
@@ -168,52 +167,45 @@ def maintain_rollup(
     measure_col: str,
     stream_id: str = "rollup",
     run_id: str | None = None,
-    strategy: str = "mor",
-    compact_every: int = 8,
+    **merge_kwargs,
 ) -> dict:
     """Apply one CDC batch to the base table AND incrementally maintain
     the rollup. Call from ``foreachBatch`` (or a batch replay loop) —
     both tables are fenced on ``(stream_id, batch_id)``, so replays are
     no-ops and a crash between the two commits heals on re-run.
 
+    ``merge_kwargs`` (``strategy``, ``compact_every``,
+    ``min_seq_exclusive``, ``bloom_cols``, ...) go to the base's
+    ``apply_changes`` unchanged, so a rollup epoch merges as a plain one.
+
     Returns {"rollup": "skipped"|"incremental"|"recomputed",
     "base": MergeResult | None}.
     """
-    last = rollup.last_batch_id(stream_id)
-    stored_run = rollup.manifest()["summary"].get(f"fence_run.{stream_id}")
-    if last is not None and batch_id <= last and stored_run == run_id:
+    last = fence_of(rollup.manifest(), stream_id, run_id)
+    if last is not None and batch_id <= last:
         # rollup already reflects this batch (and therefore so does the
         # base — the base commits first)
         return {"rollup": "skipped", "base": None}
 
-    pre_version = base.manifest()["version"]
+    pre_manifest = base.manifest()
+    key_col = pre_manifest["key_col"]
     res = apply_changes(
         spark, base, events,
         batch_id=batch_id, fence_stream_id=stream_id, fence_run_id=run_id,
-        strategy=strategy, compact_every=compact_every,
+        **merge_kwargs,
     )
     if res.skipped:
         # crash-replay: the base committed this batch in a previous run;
-        # recover the pre-batch snapshot from the immutable manifest chain
-        commit_v = _find_data_commit(base, stream_id, batch_id)
-        if commit_v is None:
+        # recover the pre-batch snapshot from the immutable manifest
+        # chain, or recompute when it has been expired
+        pre_manifest = _pre_batch_manifest(base, stream_id, batch_id, run_id)
+        if pre_manifest is None:
             recompute_rollup(
                 spark, base, rollup, group_col, measure_col,
                 stream_id, batch_id, run_id,
             )
             return {"rollup": "recomputed", "base": res}
-        pre_version = base.manifest(commit_v)["parent"]
 
-    try:
-        pre_manifest = base.manifest(pre_version)
-    except FileNotFoundError:  # expired mid-flight
-        recompute_rollup(
-            spark, base, rollup, group_col, measure_col,
-            stream_id, batch_id, run_id,
-        )
-        return {"rollup": "recomputed", "base": res}
-
-    key_col = base.manifest()["key_col"]
     # RAW batch keys (pre-dedup): a superset of the winners is harmless —
     # untouched keys contribute old == new, i.e. a zero delta
     keys = events.select(key_col).distinct()

@@ -75,7 +75,8 @@ class IngestConfig:
     # also incrementally maintains a groupBy(rollup_group_col)
     # count/sum(rollup_measure_col) rollup table at that path (created on
     # first use; own fence — see streaming/rollup.py for the retraction
-    # and crash-heal semantics)
+    # and crash-heal semantics). The base merge takes the same
+    # strategy/compact_every/min_seq_exclusive/bloom_cols either way.
     rollup_root: str | None = None
     rollup_group_col: str = "source"
     rollup_measure_col: str = "n_tok"
@@ -156,6 +157,14 @@ def run_ingest(
             .parquet(events_dir)
         )
 
+    # the one set of merge arguments, for the rollup and the plain path
+    merge_kwargs = dict(
+        strategy=cfg.strategy,
+        compact_every=cfg.compact_every,
+        min_seq_exclusive=cfg.min_seq_exclusive,
+        bloom_cols=list(cfg.bloom_cols) if cfg.bloom_cols else None,
+    )
+
     def apply_batch(batch_df: DataFrame, epoch_id: int) -> None:
         t0 = time.monotonic()
         prior_failures = 0
@@ -199,26 +208,18 @@ def run_ingest(
                     measure_col=cfg.rollup_measure_col,
                     stream_id=cfg.stream_id,
                     run_id=run_id,
-                    strategy=cfg.strategy,
-                    compact_every=cfg.compact_every,
+                    **merge_kwargs,
                 )
                 res = out["base"] or MergeResult(
                     version=table.current_version(), skipped=True
                 )
             else:
                 res = apply_changes(
-                    spark,
-                    table,
-                    batch_df,
+                    spark, table, batch_df,
                     batch_id=epoch_id,
                     fence_stream_id=cfg.stream_id,
                     fence_run_id=run_id,
-                    strategy=cfg.strategy,
-                    compact_every=cfg.compact_every,
-                    min_seq_exclusive=cfg.min_seq_exclusive,
-                    bloom_cols=(
-                        list(cfg.bloom_cols) if cfg.bloom_cols else None
-                    ),
+                    **merge_kwargs,
                 )
             if (
                 cfg.expire_every
@@ -279,11 +280,6 @@ def _fence_run_id(checkpoint_dir: str) -> str:
     except FileExistsError:
         with open(marker) as f:
             return f.read().strip()
-
-
-def read_final_state(spark: SparkSession, table: SnapshotTable) -> DataFrame:
-    """Public final table state (LWW-resolved, tombstones dropped)."""
-    return table.read(spark)
 
 
 def stream_progress(query) -> list[dict]:

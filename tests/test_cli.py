@@ -16,6 +16,7 @@ from arango_etl_spark.sources.cdc_generator import (
     write_event_batches,
 )
 
+REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 CFG = GeneratorConfig(n_events=1_500, n_docs=120, n_batches=3, seed=5)
 
 
@@ -29,7 +30,7 @@ def events_dir(spark, tmp_path_factory):
 def run_cli(*argv: str) -> None:
     out = subprocess.run(
         [sys.executable, "-m", "arango_etl_spark.cli", *argv],
-        capture_output=True, text=True, timeout=420, cwd="/root/repo",
+        capture_output=True, text=True, timeout=420, cwd=REPO,
     )
     assert out.returncode == 0, out.stderr[-3000:]
 
@@ -85,15 +86,15 @@ def test_spark_submit_pyfiles_packaging(spark, events_dir, tmp_path):
 
     zip_path = str(tmp_path / "engine.zip")
     out = subprocess.run(
-        ["bash", "/root/repo/scripts/package.sh", zip_path],
-        capture_output=True, text=True, cwd="/root/repo", timeout=60,
+        ["bash", os.path.join(REPO, "scripts", "package.sh"), zip_path],
+        capture_output=True, text=True, cwd=REPO, timeout=60,
     )
     assert out.returncode == 0, out.stderr
     table_dir = str(tmp_path / "tab")
     out = subprocess.run(
         [
             submit, "--master", "local[4]", "--py-files", zip_path,
-            "/root/repo/scripts/job.py",
+            os.path.join(REPO, "scripts", "job.py"),
             "--events", events_dir, "--table", table_dir,
             "--checkpoint", str(tmp_path / "ckpt"),
             "current", "--drain",
@@ -192,7 +193,7 @@ def test_cli_toml_config_and_env_precedence(spark, events_dir, tmp_path):
     out = subprocess.run(
         [sys.executable, "-m", "arango_etl_spark.cli",
          "--config", str(cfg), "history", "--after", "0"],
-        capture_output=True, text=True, timeout=420, cwd="/root/repo",
+        capture_output=True, text=True, timeout=420, cwd=REPO,
         env={**os.environ, "ARANGO_ETL_SPARK_STRATEGY": "mor"},
     )
     assert out.returncode == 0, out.stderr[-3000:]

@@ -292,6 +292,22 @@ def test_unicode_text_dedup_roundtrip(spark):
 
 
 # ----------------------------------------------------------- bootstrap
+# a log with a snapshot taken at binlog position WATERMARK after its
+# first four events: doc 'x' is inserted and deleted before the snapshot,
+# and its insert is redelivered after it
+WATERMARK = 5
+WATERMARK_LOG = [
+    ev("insert", "a", 1, [1]),
+    ev("insert", "x", 2, [9]),
+    ev("update", "a", 3, [3, 3]),
+    ev("delete", "x", 4, None),
+    # --- snapshot taken here (watermark W=5) ---
+    ev("update", "a", 7, [7]),
+    ev("insert", "b", 8, [8, 8]),
+    ev("insert", "x", 2, [9]),   # duplicate pre-watermark delivery
+]
+
+
 def test_bootstrap_from_snapshot_with_watermark(spark, tmp_path):
     """Classic CDC bootstrap: bulk-load a snapshot taken at binlog
     position W, then replay ONLY events with seq_no > W. The end state
@@ -303,17 +319,7 @@ def test_bootstrap_from_snapshot_with_watermark(spark, tmp_path):
         bootstrap_from_snapshot,
     )
 
-    W = 5
-    log = [
-        ev("insert", "a", 1, [1]),
-        ev("insert", "x", 2, [9]),
-        ev("update", "a", 3, [3, 3]),
-        ev("delete", "x", 4, None),
-        # --- snapshot taken here (watermark W=5) ---
-        ev("update", "a", 7, [7]),
-        ev("insert", "b", 8, [8, 8]),
-        ev("insert", "x", 2, [9]),   # duplicate pre-watermark delivery
-    ]
+    W, log = WATERMARK, WATERMARK_LOG
     full = mk_events(spark, log)
 
     # from-scratch reference replay

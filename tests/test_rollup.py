@@ -15,7 +15,14 @@ from arango_etl_spark.streaming.rollup import (
     maintain_rollup,
     recompute_rollup,
 )
-from tests.test_merge import PAYLOAD_SCHEMA, ev, mk_events, mk_table
+from tests.test_merge import (
+    PAYLOAD_SCHEMA,
+    WATERMARK,
+    WATERMARK_LOG,
+    ev,
+    mk_events,
+    mk_table,
+)
 
 
 def _expected(spark, base):
@@ -193,3 +200,57 @@ def test_rollup_through_streaming_runner(spark, tmp_path):
     assert base.current_version() == v_b
     assert rollup.current_version() == v_r
     assert _actual(spark, rollup) == _expected(spark, base)
+
+
+def test_rollup_runner_honours_bootstrap_watermark(spark, tmp_path):
+    """run_ingest with rollup_root merges with the same arguments as
+    without it: a bootstrapped table tailed with ``min_seq_exclusive``
+    keeps a doc deleted before the snapshot dead, although the feed
+    redelivers its pre-watermark insert."""
+    from arango_etl_spark.operators.merge_into import bootstrap_from_snapshot
+    from arango_etl_spark.streaming.runner import IngestConfig, run_ingest
+
+    pre = mk_table(tmp_path, "pre")
+    apply_changes(spark, pre, mk_events(spark, WATERMARK_LOG[:4]))
+    base = mk_table(tmp_path, "boot")
+    bootstrap_from_snapshot(
+        spark, base, pre.read(spark), watermark_seq=WATERMARK
+    )
+    feed = str(tmp_path / "feed")
+    mk_events(spark, WATERMARK_LOG[4:]).coalesce(1).write.parquet(
+        feed + "/batch=00000"
+    )
+    cfg = IngestConfig(
+        stream_id="s", compact_every=0, min_seq_exclusive=WATERMARK,
+        rollup_root=str(tmp_path / "roll"),
+    )
+    run_ingest(spark, feed, base, str(tmp_path / "ckpt"), cfg=cfg)
+    got = {r["doc_id"]: list(r["tokens"]) for r in base.read(spark).collect()}
+    assert got == {"a": [7], "b": [8, 8]}
+
+
+def test_rollup_runner_keeps_write_time_blooms(spark, tmp_path):
+    """``bloom_cols`` reaches the base merge on the rollup path: every
+    file a CoW epoch writes carries its Bloom entry."""
+    from arango_etl_spark.sources.cdc_generator import (
+        GeneratorConfig,
+        write_event_batches,
+    )
+    from arango_etl_spark.streaming.runner import IngestConfig, run_ingest
+
+    feed = str(tmp_path / "feed")
+    write_event_batches(
+        spark, GeneratorConfig(n_events=400, n_docs=60, n_batches=2, seed=7),
+        feed,
+    )
+    base = mk_table(tmp_path, "base")
+    cfg = IngestConfig(
+        stream_id="s", max_files_per_trigger=1, strategy="cow",
+        rollup_root=str(tmp_path / "roll"), bloom_cols=("source",),
+    )
+    run_ingest(spark, feed, base, str(tmp_path / "ckpt"), cfg=cfg)
+    m = base.manifest()
+    rels = [rel for fs in m["files"].values() for rel in fs]
+    assert rels and m["summary"]["fence.s"] == 1
+    meta = m.get("file_meta", {})
+    assert all("source" in meta[r].get("bloom", {}) for r in rels)
