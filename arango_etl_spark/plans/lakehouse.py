@@ -177,23 +177,22 @@ class SnapshotTable:
         prune to the keys' BUCKETS before any data file is opened — the
         scan touches |distinct key buckets| / n_buckets of the table's
         files instead of all of them (pytest-pinned via inputFiles). The
-        key→bucket map comes from one row-local Spark job over the
-        literal keys (xxhash64 has no portable Python twin; the job
-        scans no table data), then the same LWW-resolve + tombstone
-        filter as ``read`` runs over the pruned file set."""
+        driver maps keys to buckets with ``_key_hash``, a twin of the
+        ``xxhash64`` in :meth:`bucket_expr`, so no Spark job runs before
+        the scan; a key column of a type the twin does not cover reads
+        every bucket (correct, just unpruned). Null keys match nothing.
+        Then the same LWW-resolve + tombstone filter as ``read`` runs
+        over the pruned file set."""
         m = manifest or self.manifest()
         key_col = m["key_col"]
-        key_field = next(
-            f for f in self.payload_schema(m).fields if f.name == key_col
+        dtype = next(
+            f.dataType for f in self.payload_schema(m).fields
+            if f.name == key_col
         )
-        kdf = spark.createDataFrame(
-            [(k,) for k in keys], T.StructType([key_field])
-        )
-        buckets = sorted(
-            r["b"]
-            for r in kdf.select(
-                self.bucket_expr(F.col(key_col), m).alias("b")
-            ).distinct().collect()
+        hashes = [_key_hash(k, dtype) for k in keys if k is not None]
+        buckets = (
+            None if None in hashes
+            else sorted({h % m["n_buckets"] for h in hashes})
         )
         stored = self.read_stored(spark, buckets=buckets, manifest=m).where(
             F.col(key_col).isin(list(keys))
@@ -499,12 +498,17 @@ class SnapshotTable:
         entry — never a correctness filter; the exact predicate is
         re-applied to whatever is opened).
 
-        The probe hashes ``value`` through the SAME Spark expression the
-        build used (one 1-row local job — guaranteed hash portability
-        without reimplementing xxhash64 driver-side). Same MoR soundness
-        rule as :meth:`read_range`: requires a ``one_row_per_key``
-        snapshot, since a pruned file may hold a key's winning version
-        while a losing version survives in a matching file."""
+        The build hashes ``xxhash64(lit(i), value.cast("string"))``,
+        which is XXH64 of the value's UTF-8 bytes seeded with the hash of
+        int ``i``, so a ``str`` value is probed on the driver by the
+        ``_xxh64`` twin with no Spark job. Any other value keeps a 1-row
+        Spark probe through the build's own expression: Spark's cast to
+        string formats doubles, booleans and dates differently from
+        Python's ``str()``, and a wrong position could prune a matching
+        file. Same MoR soundness rule as :meth:`read_range`: requires a
+        ``one_row_per_key`` snapshot, since a pruned file may hold a
+        key's winning version while a losing version survives in a
+        matching file."""
         import base64
 
         m = manifest or self.manifest()
@@ -518,7 +522,13 @@ class SnapshotTable:
         pos_cache: dict[tuple[int, int], list[int]] = {}
 
         def _positions(mb: int, kk: int) -> list[int]:
-            if (mb, kk) not in pos_cache:
+            if (mb, kk) in pos_cache:
+                return pos_cache[(mb, kk)]
+            if isinstance(value, str):
+                data = value.encode()
+                ps = [_xxh64(data, _xxh64(i.to_bytes(4, "little"))) % mb
+                      for i in range(kk)]
+            else:
                 row = spark.range(1).select(*[
                     F.pmod(
                         F.xxhash64(F.lit(i), F.lit(value).cast("string")),
@@ -526,8 +536,9 @@ class SnapshotTable:
                     ).alias(f"p{i}")
                     for i in range(kk)
                 ]).collect()[0]
-                pos_cache[(mb, kk)] = [row[f"p{i}"] for i in range(kk)]
-            return pos_cache[(mb, kk)]
+                ps = [row[f"p{i}"] for i in range(kk)]
+            pos_cache[(mb, kk)] = ps
+            return ps
 
         keep: list[str] = []
         for rel in (rel for fs in m["files"].values() for rel in fs):
@@ -1089,6 +1100,69 @@ def _merge_meta(old: dict, new: dict) -> dict:
 def _nan_last(v):
     """Sort key matching Spark's order on doubles: NaN above +inf."""
     return (v != v, v)
+
+
+_P1, _P2, _P3 = 0x9E3779B185EBCA87, 0xC2B2AE3D27D4EB4F, 0x165667B19E3779F9
+_P4, _P5 = 0x85EBCA77C2B2AE63, 0x27D4EB2F165667C5
+_M64 = (1 << 64) - 1
+
+
+def _rotl(x: int, r: int) -> int:
+    return ((x << r) | (x >> (64 - r))) & _M64
+
+
+def _round(acc: int, lane: int) -> int:
+    return _rotl((acc + lane * _P2) & _M64, 31) * _P1 & _M64
+
+
+def _xxh64(data: bytes, seed: int = 42) -> int:
+    """XXH64 of ``data`` as the signed long Spark's ``xxhash64`` returns
+    (its ``hashUnsafeBytes``; ``hashInt``/``hashLong`` equal this over
+    the 4/8 little-endian bytes). Chained columns feed the previous hash
+    in as ``seed``; Python's ``%`` on the result is Spark's ``pmod``."""
+    n, seed = len(data), seed & _M64
+
+    def lane(j: int, w: int = 8) -> int:
+        return int.from_bytes(data[j:j + w], "little")
+
+    if n >= 32:
+        v = [(seed + _P1 + _P2) & _M64, (seed + _P2) & _M64, seed,
+             (seed - _P1) & _M64]
+        for i in range(0, n - 31, 32):
+            v = [_round(v[j], lane(i + 8 * j)) for j in range(4)]
+        h = sum(_rotl(x, r) for x, r in zip(v, (1, 7, 12, 18))) & _M64
+        for x in v:
+            h = ((h ^ _round(0, x)) * _P1 + _P4) & _M64
+    else:
+        h = (seed + _P5) & _M64
+    h = (h + n) & _M64
+    for i in range(n - n % 32, n - 7, 8):
+        h = (_rotl(h ^ _round(0, lane(i)), 27) * _P1 + _P4) & _M64
+    i = n - n % 8
+    if n % 8 >= 4:
+        h = (_rotl(h ^ (lane(i, 4) * _P1 & _M64), 23) * _P2 + _P3) & _M64
+        i += 4
+    for b in data[i:]:
+        h = _rotl(h ^ (b * _P5 & _M64), 11) * _P1 & _M64
+    for s, p in ((33, _P2), (29, _P3)):
+        h = (h ^ (h >> s)) * p & _M64
+    h ^= h >> 32
+    return h - (1 << 64) if h >> 63 else h
+
+
+def _key_hash(key, dtype: T.DataType) -> int | None:
+    """Spark's ``xxhash64(key)`` for a key of column type ``dtype``, or
+    None when the type (or a value that does not fit it) is not one the
+    twin covers: strings as UTF-8, ints as 4 and longs as 8 bytes."""
+    if isinstance(dtype, T.StringType) and isinstance(key, str):
+        return _xxh64(key.encode())
+    width = {T.IntegerType: 4, T.LongType: 8}.get(type(dtype))
+    if width is None or type(key) is not int:
+        return None
+    try:
+        return _xxh64(key.to_bytes(width, "little", signed=True))
+    except OverflowError:
+        return None
 
 
 def _footer_meta(path: str, cols: dict[str, T.DataType]) -> dict:

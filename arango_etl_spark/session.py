@@ -53,6 +53,16 @@ def get_spark(
         .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEM", "16g"))
         # deterministic timestamps for oracle comparison
         .config("spark.sql.parquet.outputTimestampType", "TIMESTAMP_MICROS")
+        # list paths on the driver, never in a side job: SnapshotTable
+        # hands Spark the exact data files of a manifest on POSIX storage
+        # (O_EXCL / os.replace commits), so listing is one stat per file,
+        # and Spark still checks that every file exists. Above the default
+        # threshold (32 paths) Spark starts a parallel listing job instead;
+        # measured on a 4-core host, that job vs the serial listing: 40
+        # files 0.285 vs 0.054 s, 80 files 0.416 vs 0.085 s, 512 files 2.1
+        # vs 0.15 s, 4096 files 17.7 vs 1.1 s.
+        .config("spark.sql.sources.parallelPartitionDiscovery.threshold",
+                "1000000")
     )
     for k, v in (extra_conf or {}).items():
         builder = builder.config(k, v)

@@ -31,7 +31,7 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from arango_etl_spark.operators.merge_into import MergeResult, apply_changes
-from arango_etl_spark.plans.lakehouse import SnapshotTable
+from arango_etl_spark.plans.lakehouse import SnapshotTable, fence_of
 from arango_etl_spark.streaming.lineage import LineageLog
 
 EVENT_SCHEMA = T.StructType(
@@ -74,9 +74,10 @@ class IngestConfig:
     # continuous aggregate: when rollup_root is set, every micro-batch
     # also incrementally maintains a groupBy(rollup_group_col)
     # count/sum(rollup_measure_col) rollup table at that path (created on
-    # first use; own fence — see streaming/rollup.py for the retraction
-    # and crash-heal semantics). The base merge takes the same
-    # strategy/compact_every/min_seq_exclusive/bloom_cols either way.
+    # first use and seeded from the base's existing rows; own fence — see
+    # streaming/rollup.py for the retraction and crash-heal semantics).
+    # The base merge takes the same strategy/compact_every/
+    # min_seq_exclusive/bloom_cols either way.
     rollup_root: str | None = None
     rollup_group_col: str = "source"
     rollup_measure_col: str = "n_tok"
@@ -116,7 +117,10 @@ def run_ingest(
 
     rollup_table = None
     if cfg.rollup_root is not None:
-        from arango_etl_spark.streaming.rollup import create_rollup_table
+        from arango_etl_spark.streaming.rollup import (
+            create_rollup_table,
+            recompute_rollup,
+        )
 
         if SnapshotTable.exists(cfg.rollup_root):
             rollup_table = SnapshotTable(cfg.rollup_root)
@@ -127,6 +131,21 @@ def run_ingest(
             )
             rollup_table = create_rollup_table(
                 cfg.rollup_root, cfg.rollup_group_col, gtype
+            )
+        base_m = table.manifest()
+        if rollup_table.current_version() == 0 and any(
+            base_m["files"].values()
+        ):
+            # a new rollup over a non-empty base starts from the base's
+            # rows, fenced at the base's last epoch of this lineage (or
+            # -1): a replay of that epoch is skipped, the next one counts
+            last = fence_of(base_m, cfg.stream_id, run_id)
+            recompute_rollup(
+                spark, table, rollup_table,
+                cfg.rollup_group_col, cfg.rollup_measure_col,
+                stream_id=cfg.stream_id,
+                batch_id=-1 if last is None else last,
+                run_id=run_id,
             )
 
     # NOTE: .schema(schema) PINS the read schema — evolved columns in later

@@ -392,6 +392,60 @@ def test_read_keys_point_lookup_prunes_buckets(spark, tmp_path):
     }
     assert {_os.path.realpath(p.replace("file:", "")) for p in touched} <= expect_files
 
+    # an int-keyed table (negative keys too) routes on the driver alike
+    ti = mk_keyed_table(spark, tmp_path, "pt_int", T.IntegerType(),
+                        [i * 7919 - 150_000 for i in range(40)])
+    want_keys = [3 * 7919 - 150_000, 7 * 7919 - 150_000, 11 * 7919 - 150_000]
+    out = ti.read_keys(spark, want_keys + [None])
+    assert {r["doc_id"]: list(r["tokens"]) for r in out.collect()} == {
+        want_keys[0]: [3], want_keys[2]: [11],
+    }
+    want = {
+        r["b"]
+        for r in spark.createDataFrame(
+            [(k,) for k in want_keys], "doc_id int"
+        ).select(ti.bucket_expr(F.col("doc_id")).alias("b")).collect()
+    }
+    touched = {
+        _os.path.realpath(p.replace("file:", "")) for p in out.inputFiles()
+    }
+    assert 0 < len(touched) < len(ti.data_files())
+    assert touched <= {
+        _os.path.realpath(p) for p in ti.data_files(buckets=sorted(want))
+    }
+
+
+def mk_keyed_table(spark, tmp_path, name, key_type, keys, n_buckets=16):
+    """A table keyed by ``doc_id`` of ``key_type``: one insert per key
+    (tokens ``[i]``), then the 8th key deleted."""
+    payload = T.StructType(
+        [T.StructField("doc_id", key_type)] + PAYLOAD_SCHEMA.fields[1:]
+    )
+    t = SnapshotTable.create(
+        str(tmp_path / name), payload, key_col="doc_id", n_buckets=n_buckets
+    )
+    events = T.StructType([
+        T.StructField("doc_id", key_type) if f.name == "doc_id" else f
+        for f in EVENT_SCHEMA.fields
+    ])
+    rows = [ev("insert", k, 1, [i]) for i, k in enumerate(keys)]
+    apply_changes(spark, t, spark.createDataFrame(
+        rows + [ev("delete", keys[7], 2, None)], events
+    ))
+    return t
+
+
+def test_read_keys_uncovered_key_type_reads_every_bucket(spark, tmp_path):
+    """A key type the driver-side hash does not cover (here: date) is not
+    pruned but still returns exactly the live requested rows."""
+    days = [dt.date(2024, 1, 1) + dt.timedelta(days=i) for i in range(40)]
+    t = mk_keyed_table(spark, tmp_path, "pt_date", T.DateType(), days)
+    out = t.read_keys(spark, [days[3], days[7], days[11]])
+    assert {r["doc_id"]: list(r["tokens"]) for r in out.collect()} == {
+        days[3]: [3], days[11]: [11],
+    }
+    assert len(out.inputFiles()) == len(t.data_files())
+
 
 def test_first_cow_merge_metrics_without_touched_probe(spark, tmp_path):
     """First CoW merge into a FRESH table takes the no-live-files fast

@@ -254,3 +254,28 @@ def test_rollup_runner_keeps_write_time_blooms(spark, tmp_path):
     assert rels and m["summary"]["fence.s"] == 1
     meta = m.get("file_meta", {})
     assert all("source" in meta[r].get("bloom", {}) for r in rels)
+
+
+def test_rollup_runner_seeds_new_rollup_from_non_empty_base(spark, tmp_path):
+    """A rollup created by ``run_ingest`` over a base that already holds
+    rows starts from those rows: after a bootstrap and one epoch the
+    rollup equals a groupBy of the base."""
+    from arango_etl_spark.operators.merge_into import bootstrap_from_snapshot
+    from arango_etl_spark.plans.lakehouse import SnapshotTable
+    from arango_etl_spark.streaming.runner import IngestConfig, run_ingest
+
+    pre = mk_table(tmp_path, "pre")
+    apply_changes(spark, pre, mk_events(spark, BATCHES[0]))
+    base = mk_table(tmp_path, "boot")
+    bootstrap_from_snapshot(spark, base, pre.read(spark), watermark_seq=99)
+    feed = str(tmp_path / "feed")
+    mk_events(spark, BATCHES[1]).coalesce(1).write.parquet(
+        feed + "/batch=00000"
+    )
+    cfg = IngestConfig(
+        stream_id="s", compact_every=0, rollup_root=str(tmp_path / "roll"),
+    )
+    run_ingest(spark, feed, base, str(tmp_path / "ckpt"), cfg=cfg)
+    assert base.manifest()["summary"]["fence.s"] == 0
+    rollup = SnapshotTable(str(tmp_path / "roll"))
+    assert _actual(spark, rollup) == _expected(spark, base)
