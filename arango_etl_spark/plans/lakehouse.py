@@ -526,7 +526,7 @@ class SnapshotTable:
                 return pos_cache[(mb, kk)]
             if isinstance(value, str):
                 data = value.encode()
-                ps = [_xxh64(data, _xxh64(i.to_bytes(4, "little"))) % mb
+                ps = [_xxh64(data, _key_hash(i, T.IntegerType())) % mb
                       for i in range(kk)]
             else:
                 row = spark.range(1).select(*[
