@@ -7,15 +7,17 @@ poc event) with one set-oriented MERGE per micro-batch: the batch is
 deduped to one winning event per key first (SURVEY.md §4.2's "biggest
 architectural delta" — O(distinct keys) sink work, not O(events)).
 
-Two strategies behind one call:
+Every merge stages the deduped batch winners once as per-bucket files
+and counts them (``keys_applied``/``max_seq_no``) from their parquet
+footers. Two strategies then commit them:
 
 - ``strategy="cow"`` (copy-on-write, Iceberg CoW MERGE INTO analogue):
-  prune to touched buckets → union target with source → winner per key
-  by the same LWW order → rewrite touched buckets.
-  Read-optimized; write cost ∝ size of touched buckets.
+  stage once, rewrite the touched buckets (their stored rows ∪ the
+  staged winners → winner per key by the same LWW order), drop the
+  staged files. Read-optimized; write cost ∝ size of touched buckets.
 
 - ``strategy="mor"`` (merge-on-read, Iceberg MoR analogue — DEFAULT for
-  sustained ingest): append the deduped batch as per-bucket delta files;
+  sustained ingest): commit the staged files as per-bucket delta files;
   no target read at all. Write cost ∝ O(batch). Readers LWW-reduce;
   ``compact()`` (auto once avg delta files/bucket > ``compact_every``,
   0 = never) folds deltas back
@@ -38,15 +40,18 @@ SURVEY.md §4.3.1).
 from __future__ import annotations
 
 import json
+import os
+import shutil
 from dataclasses import dataclass, field
 
-from pyspark.sql import DataFrame, Observation, SparkSession
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from arango_etl_spark.operators import dedup_window
 from arango_etl_spark.plans.lakehouse import (
     SnapshotTable,
+    _footer_meta,
     fence_entries,
     fence_of,
     lww_resolve,
@@ -134,6 +139,8 @@ def apply_changes(
     ``abandon_branch`` (see plans/wap.write_audit_publish for the wired
     flow). Compaction never runs on a branch (it belongs to the main
     line the branch may never join)."""
+    if strategy not in ("mor", "cow"):
+        raise ValueError(f"unknown merge strategy {strategy!r}")
     manifest = table.manifest()
     key_col = manifest["key_col"]
 
@@ -172,72 +179,45 @@ def apply_changes(
         if f_.name not in events.columns:
             events = events.withColumn(f_.name, F.lit(None).cast(f_.dataType))
 
-    obs = Observation(f"merge-{manifest['version'] + 1}")
-    deduped = DEDUP_STRATEGIES["max_by"](events, key_col=key_col).observe(
-        obs,
-        F.count(F.lit(1)).alias("keys_applied"),
-        F.max("seq_no").alias("max_seq_no"),
-    )
+    deduped = DEDUP_STRATEGIES["max_by"](events, key_col=key_col)
     src = _as_stored(deduped, key_col, payload).withColumn(
         "_bucket", table.bucket_expr(F.col(key_col), manifest)
     )
-
+    staged_rel, staged = table.stage_write(src)
+    counts = {
+        rel: _footer_meta(os.path.join(table.root, rel),
+                          {"_seq_no": T.LongType()})
+        for fs in staged.values() for rel in fs
+    }
+    keys_applied = sum(c["rows"] for c in counts.values())
+    max_seq_no = max((hi for c in counts.values()
+                      if (hi := c["bounds"]["_seq_no"][1]) is not None),
+                     default=None)
     # CoW must read existing files with the widened schema so evolved
     # columns resolve on the target side (null-backfilled for old files)
-    read_manifest = (
-        {**manifest, "schema": json.loads(payload_schema.json())}
-        if evolved_schema is not None
-        else manifest
-    )
-
-    if strategy == "mor":
-        _, new_files = table.stage_write(src)  # no target read
-        replaced: set[int] = set()
-    elif strategy == "cow":
-        # touched buckets listed from the deduped source, not the raw
-        # batch: inside foreachBatch an extra action on the streaming
-        # batch DataFrame can wedge the micro-batch thread (observed
-        # hang), and the deduped plan re-executes deterministically.
-        # Fast path: `touched` exists only to PRUNE the target read (and
-        # to mark replaced buckets, which is vacuous when nothing can be
-        # carried over) — a parent with zero live files has nothing to
-        # prune or replace, so skip the distinct-collect job entirely
-        # (first CoW merge into a fresh table was paying a full shuffle
-        # job just to learn an empty file list). NOT inside a streaming
-        # micro-batch: there this collect is LOAD-BEARING for the
-        # Observation metrics — under foreachBatch a union over an
-        # observed frame never fires its CollectMetrics event (verified
-        # empirically: union → no event, write/agg alone → event), so
-        # without a pre-write action ``obs.get`` below deadlocks the
-        # stream thread. Batch mode fires fine either way.
-        in_micro_batch = (
-            spark.sparkContext.getLocalProperty("streaming.sql.batchId")
-            is not None
-        )
-        if in_micro_batch or any(fs for fs in manifest["files"].values()):
-            touched = sorted(
-                r["_bucket"]
-                for r in src.select("_bucket").distinct().collect()
-            )
-        else:
-            touched = []
-        # every touched bucket is replaced, including one whose rewrite
-        # came out empty (stage_write only lists buckets that got rows)
+    read_manifest = {**manifest, "schema": json.loads(payload_schema.json())}
+    replaced = {int(b) for b in staged} if strategy == "cow" else set()
+    new_files = staged
+    file_meta = {rel: {"rows": c["rows"], "dels": c["dels"]}
+                 for rel, c in counts.items()}
+    if replaced and any(manifest["files"].values()):
+        # CoW over existing files rewrites the staged buckets and never
+        # commits the staged dir (a crash before the rmtree leaves an
+        # orphan commit dir for remove_orphan_files)
         new_files = _rewrite_buckets(
-            spark, table, read_manifest, touched, src.drop("_bucket")
+            spark, table, read_manifest, sorted(replaced),
+            table.read_stored(spark, manifest={**read_manifest,
+                                               "files": staged}),
         )
-        replaced = set(touched)
-    else:
-        raise ValueError(f"unknown merge strategy {strategy!r}")
+        shutil.rmtree(os.path.join(table.root, staged_rel))
+        file_meta = {}
+    for rel, e in _blooms_for(
+        spark, table, read_manifest, new_files, bloom_cols
+    ).items():
+        file_meta[rel] = {**file_meta.get(rel, {}), **e}
 
-    file_meta = _blooms_for(spark, table, read_manifest, new_files, bloom_cols)
-
-    metrics = obs.get
-    keys_applied = int(metrics.get("keys_applied") or 0)
-    max_seq_no = metrics.get("max_seq_no")
     summary: dict = {"lineage.keys_applied": keys_applied}
     if max_seq_no is not None:
-        max_seq_no = int(max_seq_no)
         summary["lineage.max_seq_no"] = max_seq_no
     if fencing:
         summary.update(fence_entries(fence_stream_id, batch_id, fence_run_id))
@@ -313,13 +293,11 @@ def _blooms_for(spark, table, manifest, files, bloom_cols):
     """``file_meta`` Bloom entries for freshly written ``files`` (commit's
     lifecycle carries parent entries over for untouched files and drops
     them with replaced ones)."""
-    import os as _os
-
     abs_new = [
-        _os.path.join(table.root, rel) for fs in files.values() for rel in fs
+        os.path.join(table.root, rel) for fs in files.values() for rel in fs
     ]
     if not bloom_cols or not abs_new:
-        return None
+        return {}
     blooms = table.build_blooms(
         spark, abs_new, table.stored_schema(manifest), bloom_cols
     )

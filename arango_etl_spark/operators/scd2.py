@@ -46,6 +46,32 @@ def scd2_history(
     )
 
 
+def diff_states(
+    old: DataFrame,
+    new: DataFrame,
+    key_col: str,
+    compare_cols: list[str] | None = None,
+) -> DataFrame:
+    """Per changed key of two keyed states: ``_k``, ``_change`` (insert
+    = new only, delete = old only, update = any compare_col differs,
+    null-safe <=>) and the ``_old``/``_new`` compare-column structs. One
+    full outer hash join on the key (co-partition both states on the
+    key at scale and it shuffles neither side)."""
+    cols = compare_cols or [c for c in new.columns if c != key_col]
+    o = old.select(F.col(key_col).alias("_k"), F.struct(*cols).alias("_old"))
+    n = new.select(F.col(key_col).alias("_k"), F.struct(*cols).alias("_new"))
+    change = (
+        F.when(F.col("_old").isNull(), F.lit("insert"))
+        .when(F.col("_new").isNull(), F.lit("delete"))
+        .when(~F.col("_old").eqNullSafe(F.col("_new")), F.lit("update"))
+    )
+    return (
+        o.join(n, "_k", "full_outer")
+        .withColumn("_change", change)
+        .where(F.col("_change").isNotNull())
+    )
+
+
 def snapshot_diff(
     old: DataFrame,
     new: DataFrame,
@@ -53,28 +79,7 @@ def snapshot_diff(
     compare_cols: list[str] | None = None,
 ) -> DataFrame:
     """Change feed between two snapshots of the same keyed table:
-    (key, change_type) with ``insert`` (new only), ``delete`` (old
-    only), ``update`` (both, any compare_col differs). Unchanged keys
-    are dropped. One hash join on the key (bucket/co-partition both
-    snapshots on the key at scale and it shuffles neither side);
-    comparison is null-safe (<=>)."""
-    cols = compare_cols or [c for c in new.columns if c != key_col]
-    o = old.select(
-        F.col(key_col).alias("_k"),
-        F.struct(*[F.col(c) for c in cols]).alias("_old"),
-    )
-    n = new.select(
-        F.col(key_col).alias("_k"),
-        F.struct(*[F.col(c) for c in cols]).alias("_new"),
-    )
-    joined = o.join(n, "_k", "full_outer")
-    change = (
-        F.when(F.col("_old").isNull(), F.lit("insert"))
-        .when(F.col("_new").isNull(), F.lit("delete"))
-        .when(~F.col("_old").eqNullSafe(F.col("_new")), F.lit("update"))
-    )
-    return (
-        joined.withColumn("change_type", change)
-        .where(F.col("change_type").isNotNull())
-        .select(F.col("_k").alias(key_col), "change_type")
+    (key, change_type) per changed key — see :func:`diff_states`."""
+    return diff_states(old, new, key_col, compare_cols).select(
+        F.col("_k").alias(key_col), F.col("_change").alias("change_type")
     )

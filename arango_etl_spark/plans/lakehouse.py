@@ -45,6 +45,8 @@ from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from arango_etl_spark.operators.scd2 import diff_states
+
 # internal CDC-state columns kept on every stored row. A stored row is
 # simply "the last winning event" — so cross-batch LWW and tombstones fall
 # out of comparing the same (seq_no, event_ts, batch_id, op) order used for
@@ -647,8 +649,8 @@ class SnapshotTable:
         only — the new_files must already be laid out under the new
         scheme, so it is only legal with a full replace).
 
-        Every new file's ``rows``/``dels`` come from its parquet footer
-        (no Spark job), merged with the caller's ``file_meta`` entries.
+        Every new file's ``rows``/``dels`` come from the caller's
+        ``file_meta`` entry or else its parquet footer (no Spark job).
         """
         if new_n_buckets is not None and replaced_buckets is not None:
             raise ValueError(
@@ -686,7 +688,8 @@ class SnapshotTable:
         footers are read BEFORE the version check, so the window between
         the check and the O_EXCL create does not grow."""
         file_meta = dict(file_meta or {})
-        for rel in (rel for fs in new_files.values() for rel in fs):
+        for rel in (rel for fs in new_files.values() for rel in fs
+                    if "rows" not in file_meta.get(rel, {})):
             counts = _footer_meta(os.path.join(self.root, rel), {})
             file_meta[rel] = _merge_meta(counts, file_meta.get(rel, {}))
         cur_v = self.current_version()
@@ -896,9 +899,8 @@ class SnapshotTable:
         degrades to a full diff (files rewritten, state equal → empty
         output), never to a wrong answer. Both sides read with the TO
         version's widened schema, so additive evolution diffs as
-        null → value updates. The diff itself is one full-outer hash
-        join on the key over LWW-resolved state (skew-safe max_by, no
-        windows)."""
+        null → value updates. The diff is ``scd2.diff_states`` over
+        LWW-resolved state (skew-safe max_by, no windows)."""
         m_from = self.manifest(from_version)
         m_to = self.manifest(to_version)
         key_col = m_to["key_col"]
@@ -918,32 +920,14 @@ class SnapshotTable:
             for m in (m_from, m_to)
         )
         payload = [c for c in new_state.columns if c != key_col]
-        o = old_state.select(
-            F.col(key_col).alias("_k"),
-            F.struct(*[F.col(c) for c in payload]).alias("_old"),
-        )
-        n = new_state.select(
-            F.col(key_col).alias("_k"),
-            F.struct(*[F.col(c) for c in payload]).alias("_new"),
-        )
-        joined = o.join(n, "_k", "full_outer")
-        change = (
-            F.when(F.col("_old").isNull(), F.lit("insert"))
-            .when(F.col("_new").isNull(), F.lit("delete"))
-            .when(~F.col("_old").eqNullSafe(F.col("_new")), F.lit("update"))
-        )
-        out = (
-            joined.withColumn("_change_type", change)
-            .where(F.col("_change_type").isNotNull())
-        )
         cols = [
             F.col("_k").alias(key_col),
-            F.col("_change_type"),
+            F.col("_change").alias("_change_type"),
             *[F.col("_new").getField(c).alias(c) for c in payload],
         ]
         if include_before:
             cols.append(F.col("_old").alias("_before"))
-        return out.select(*cols)
+        return diff_states(old_state, new_state, key_col).select(*cols)
 
     # ------------------------------------------------------------- fence
     def last_batch_id(self, stream_id: str) -> int | None:

@@ -14,8 +14,8 @@ exact old/new rows for the batch's keys, so the delta is
 and the rollup update is a pure ADDITIVE merge — O(batch + groups), not
 O(table). This is classic incremental view maintenance (delta + retract),
 expressed Spark-first: two semi-joined snapshot reads (bucket-layout
-scans of only the touched keys' versions), one signed union-aggregate,
-one broadcast-joined additive merge.
+scans of only the touched keys' versions) whose rows, signed +1/−1,
+union with the current rollup rows into one additive aggregate.
 
 Exactly-once: the rollup table carries its own fence
 (``fence.<stream_id>`` in its manifest summary, same protocol as the
@@ -214,24 +214,14 @@ def maintain_rollup(
     )
     new_rows = base.read(spark).join(F.broadcast(keys), key_col, "left_semi")
 
-    delta = (
-        _signed(new_rows, group_col, measure_col, +1)
+    merged = (
+        rollup.read(spark)
+        .unionByName(_signed(new_rows, group_col, measure_col, +1))
         .unionByName(_signed(old_rows, group_col, measure_col, -1))
         .groupBy(group_col)
         .agg(
-            F.sum("_s").cast("long").alias("d_cnt"),
-            F.sum(F.col("_s") * F.col("_m")).alias("d_total"),
-        )
-    )
-    current = rollup.read(spark)
-    merged = (
-        current.join(F.broadcast(delta), group_col, "full_outer")
-        .select(
-            group_col,
-            (F.coalesce("cnt", F.lit(0))
-             + F.coalesce("d_cnt", F.lit(0))).alias("cnt"),
-            (F.coalesce("total", F.lit(0.0))
-             + F.coalesce("d_total", F.lit(0.0))).alias("total"),
+            F.sum("cnt").alias("cnt"),
+            F.sum("total").alias("total"),
         )
         .where(F.col("cnt") > 0)
     )
@@ -246,6 +236,8 @@ def _signed(
 ) -> DataFrame:
     return rows.select(
         group_col,
-        F.lit(sign).alias("_s"),
-        F.coalesce(F.col(measure_col).cast("double"), F.lit(0.0)).alias("_m"),
+        F.lit(sign).cast("long").alias("cnt"),
+        (F.lit(float(sign))
+         * F.coalesce(F.col(measure_col).cast("double"), F.lit(0.0))
+         ).alias("total"),
     )

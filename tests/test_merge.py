@@ -4,6 +4,8 @@ replay-equality vs the DuckDB oracle, for both CoW and MoR strategies."""
 from __future__ import annotations
 
 import datetime as dt
+import json
+import os
 
 import pytest
 from pyspark.sql import functions as F
@@ -448,13 +450,10 @@ def test_read_keys_uncovered_key_type_reads_every_bucket(spark, tmp_path):
 
 
 def test_first_cow_merge_metrics_without_touched_probe(spark, tmp_path):
-    """First CoW merge into a FRESH table takes the no-live-files fast
-    path (no distinct-collect job just to learn an empty prune list) —
-    and the Observation metrics must still arrive via the write action
-    itself. Regression net for the r6 fast path: in batch mode the
-    write fires the CollectMetrics event; the streaming micro-batch
-    path keeps the pre-write collect (a union over an observed frame
-    never fires its event under foreachBatch — see apply_changes)."""
+    """First CoW merge into a FRESH table commits the staged winners as
+    they are (nothing to rewrite); the second rewrites the touched
+    bucket. Both read ``keys_applied``/``max_seq_no`` from the staged
+    files' parquet footers."""
     t = mk_table(tmp_path, "fastpath")
     res = apply_changes(
         spark, t,
@@ -464,7 +463,7 @@ def test_first_cow_merge_metrics_without_touched_probe(spark, tmp_path):
     assert res.keys_applied == 20
     assert res.max_seq_no == 19
     assert state(spark, t)["d5"] == ([1], 1)
-    # second merge: live files exist -> pruning probe path, still correct
+    # second merge: live files exist -> bucket rewrite, still correct
     res2 = apply_changes(
         spark, t,
         mk_events(spark, [ev("update", "d5", 100, [1, 2])]),
@@ -472,3 +471,48 @@ def test_first_cow_merge_metrics_without_touched_probe(spark, tmp_path):
     )
     assert res2.keys_applied == 1
     assert state(spark, t)["d5"] == ([1, 2], 2)
+
+
+def _jobs_of(spark, fn):
+    st = spark.sparkContext.statusTracker()
+    before = len(st.getJobIdsForGroup(None) or [])
+    fn()
+    return len(st.getJobIdsForGroup(None) or []) - before
+
+
+def test_cow_merge_job_counts(spark, tmp_path):
+    """A CoW merge stages the batch winners once and takes its counts
+    from their footers: at most 3 Spark jobs into a fresh table (dedup
+    exchange, bucket exchange, write) and 6 into a non-empty one (the
+    same three, then the rewrite of the touched buckets)."""
+    t = mk_table(tmp_path, "cow_jobs")
+    rows = [ev("update", f"d{i}", i, [i]) for i in range(40)]
+    assert _jobs_of(spark, lambda: apply_changes(
+        spark, t, mk_events(spark, rows), strategy="cow",
+    )) <= 3
+    more = [ev("update", f"d{i}", 100 + i, [i, i]) for i in range(0, 60, 3)]
+    assert _jobs_of(spark, lambda: apply_changes(
+        spark, t, mk_events(spark, more), strategy="cow",
+    )) <= 6
+    assert state(spark, t)["d3"] == ([3, 3], 2)
+
+
+def test_cow_merge_leaves_no_unreferenced_commit_dir(spark, tmp_path):
+    """CoW into a non-empty table drops its staged dir after the
+    rewrite: every ``data/commit-*`` dir holds a file that a retained
+    manifest names."""
+    t = mk_table(tmp_path, "cow_leak")
+    for b in range(3):
+        apply_changes(spark, t, mk_events(spark, [
+            ev("update", f"d{i}", 10 * b + i, [b]) for i in range(10)
+        ]), batch_id=b, fence_stream_id="s", strategy="cow")
+    referenced = set()
+    for f in os.listdir(t.meta_dir):
+        if f.startswith("v") and f.endswith(".json"):
+            with open(os.path.join(t.meta_dir, f)) as fh:
+                for fs in json.load(fh)["files"].values():
+                    referenced.update(os.path.dirname(os.path.dirname(r))
+                                      for r in fs)
+    dirs = {os.path.join("data", d)
+            for d in os.listdir(os.path.join(t.root, "data"))}
+    assert len(dirs) == 3 and dirs == referenced

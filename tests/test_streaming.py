@@ -4,6 +4,7 @@ kill/resume mid-replay, lineage counters (SURVEY.md §2.8 ST2/ST4/ST5/ST8)."""
 from __future__ import annotations
 
 import pytest
+from pyspark.sql import functions as F
 
 from arango_etl_spark.operators.merge_into import apply_changes
 from arango_etl_spark.oracle import assert_states_equal, reduce_events_duckdb
@@ -14,7 +15,7 @@ from arango_etl_spark.sources.cdc_generator import (
 )
 from arango_etl_spark.streaming.lineage import LineageLog
 from arango_etl_spark.streaming.runner import IngestConfig, run_ingest
-from tests.test_merge import PAYLOAD_SCHEMA
+from tests.test_merge import PAYLOAD_SCHEMA, ev, mk_events
 
 CFG = GeneratorConfig(n_events=3_000, n_docs=250, n_batches=6, seed=21)
 
@@ -477,3 +478,46 @@ def test_debezium_feed_through_run_ingest(spark, tmp_path):
     # same checkpoint → no new data → no new commits
     run_ingest(spark, feed, t, ckpt, cfg=cfg)
     assert t.current_version() == v1
+
+
+@pytest.mark.parametrize("strategy", ["mor", "cow"])
+def test_lineage_counts_per_epoch(spark, tmp_path, strategy):
+    """Lineage counters of two epochs: the first (for CoW, the first
+    merge into a fresh table from inside a micro-batch) holds a
+    duplicate delivery, an update and a delete; every event of the
+    second is at or below ``min_seq_exclusive``, so it applies nothing
+    and commits at no seq_no."""
+    feed = str(tmp_path / "feed")
+    epochs = [
+        [ev("insert", "a", 1, [1]), ev("update", "a", 2, [1, 2]),
+         ev("insert", "b", 3, [3]), ev("delete", "b", 4, None),
+         ev("insert", "c", 5, [5]), ev("insert", "c", 5, [5])],
+        [ev("update", "a", 0, [9]), ev("insert", "d", -1, [7])],
+    ]
+    t = mk_table(tmp_path, f"lin_{strategy}")
+    lineage = LineageLog(str(tmp_path / "lineage"))
+    cfg = IngestConfig(strategy=strategy, max_files_per_trigger=1,
+                       min_seq_exclusive=0)
+    # one drain per epoch file: the epoch order is the list order
+    for i, rows in enumerate(epochs):
+        mk_events(spark, rows).coalesce(1).write.parquet(
+            f"{feed}/batch={i:05d}"
+        )
+        run_ingest(spark, feed, t, str(tmp_path / "ckpt"),
+                   lineage=lineage, cfg=cfg)
+
+    lin = lineage.read(spark).where("status = 'committed'")
+    seen = {
+        r["batch_id"]: r["n"]
+        for r in lin.where("partition_id IS NOT NULL")
+        .groupBy("batch_id").agg(F.sum("events_seen").alias("n")).collect()
+    }
+    summary = {
+        r["batch_id"]: (r["events_applied"], r["events_deduped"],
+                        r["committed_at_seq"])
+        for r in lin.where("partition_id IS NULL").collect()
+    }
+    assert seen == {0: 6, 1: 2}
+    assert summary == {0: (3, 3, 5), 1: (0, 2, None)}
+    final = {r["doc_id"]: list(r["tokens"]) for r in t.read(spark).collect()}
+    assert final == {"a": [1, 2], "c": [5]}
