@@ -214,7 +214,7 @@ def apply_changes(
     for rel, e in _blooms_for(
         spark, table, read_manifest, new_files, bloom_cols
     ).items():
-        file_meta[rel] = {**file_meta.get(rel, {}), **e}
+        file_meta.setdefault(rel, {}).update(e)
 
     summary: dict = {"lineage.keys_applied": keys_applied}
     if max_seq_no is not None:
