@@ -211,6 +211,9 @@ def apply_changes(
         )
         shutil.rmtree(os.path.join(table.root, staged_rel))
         file_meta = {}
+    elif not staged:
+        # an empty or all-filtered batch: no manifest names the empty dir
+        shutil.rmtree(os.path.join(table.root, staged_rel))
     for rel, e in _blooms_for(
         spark, table, read_manifest, new_files, bloom_cols
     ).items():

@@ -9,15 +9,22 @@ hazard SURVEY.md §4.3.5).
 
 Schema: batch_id, partition_id, events_seen, events_applied,
 events_deduped, committed_at_seq, status, retries, wall_secs.
+
+The rows are a few scalars per batch, so the driver appends them with
+pyarrow: recording a batch costs one per-partition count, and the retry
+ledger starts no Spark job.
 """
 
 from __future__ import annotations
 
 import os
+import uuid
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
+
+from arango_etl_spark.plans.lakehouse import _empty_frame
 
 LINEAGE_SCHEMA = T.StructType(
     [
@@ -39,6 +46,23 @@ class LineageLog:
         self.root = root
         os.makedirs(root, exist_ok=True)
 
+    def _append(self, batch_id: int, rows: list[tuple]) -> None:
+        """Append ``rows`` (LINEAGE_SCHEMA order) to the batch's dir as one
+        parquet file, written under a hidden name (Spark and pyarrow skip
+        ``.``/``_`` files) and renamed in, so no reader sees half a file."""
+        import pyarrow as pa
+        import pyarrow.parquet as pq
+        from pyspark.sql.pandas.types import to_arrow_schema
+
+        d = os.path.join(self.root, f"batch={batch_id:012d}")
+        os.makedirs(d, exist_ok=True)
+        tmp = os.path.join(d, f".part-{uuid.uuid4().hex}.parquet")
+        pq.write_table(pa.Table.from_pylist(
+            [dict(zip(LINEAGE_SCHEMA.names, r)) for r in rows],
+            schema=to_arrow_schema(LINEAGE_SCHEMA),
+        ), tmp)
+        os.replace(tmp, os.path.join(d, os.path.basename(tmp)[1:]))
+
     def record_batch(
         self,
         events: DataFrame,
@@ -50,48 +74,24 @@ class LineageLog:
         wall_secs: float | None = None,
     ) -> None:
         """Per-input-partition counters for one micro-batch (north rule:
-        per-partition lineage counters). One small agg job over the batch.
+        per-partition lineage counters): one per-partition count over the
+        batch, collected to the driver.
 
         Batch-level values (events_applied, events_deduped, wall) live on a
         SINGLE summary row (partition_id NULL) — repeating them per
         partition row made sums over the column overcount (round-1 ADVICE).
-        The caller (runner) persists the batch, so this second action reads
-        the cache, not the source files.
         """
-        per_part = (
-            events.groupBy(F.spark_partition_id().alias("partition_id"))
-            .agg(F.count(F.lit(1)).alias("events_seen"))
-            .select(
-                F.lit(batch_id).cast("long").alias("batch_id"),
-                F.col("partition_id"),
-                F.col("events_seen").cast("long"),
-                F.lit(None).cast("long").alias("events_applied"),
-                F.lit(None).cast("long").alias("events_deduped"),
-                F.lit(None).cast("long").alias("committed_at_seq"),
-                F.lit(status).alias("status"),
-                F.lit(None).cast("int").alias("retries"),
-                F.lit(None).cast("double").alias("wall_secs"),
-            )
+        counts = sorted(
+            events.groupBy(F.spark_partition_id()).count().collect()
         )
-        summary = (
-            events.agg(F.count(F.lit(1)).alias("_n"))
-            .select(
-                F.lit(batch_id).cast("long").alias("batch_id"),
-                F.lit(None).cast("int").alias("partition_id"),
-                F.lit(None).cast("long").alias("events_seen"),
-                F.lit(keys_applied).cast("long").alias("events_applied"),
-                (
-                    F.col("_n") - F.lit(keys_applied)
-                ).cast("long").alias("events_deduped"),
-                F.lit(max_seq_no).cast("long").alias("committed_at_seq"),
-                F.lit(status).alias("status"),
-                F.lit(retries).cast("int").alias("retries"),
-                F.lit(wall_secs).cast("double").alias("wall_secs"),
-            )
-        )
-        per_part.unionByName(summary).write.mode("append").parquet(
-            os.path.join(self.root, f"batch={batch_id:012d}")
-        )
+        n = sum(c for _, c in counts)
+        self._append(batch_id, [
+            *[(batch_id, p, c, None, None, None, status, None, None)
+              for p, c in counts],
+            (batch_id, None, None, keys_applied,
+             None if keys_applied is None else n - keys_applied,
+             max_seq_no, status, retries, wall_secs),
+        ])
 
     def record_failure(
         self, spark: SparkSession, batch_id: int, retries: int, status: str = "retried"
@@ -100,22 +100,23 @@ class LineageLog:
         retry ledger. The reference silently DROPPED a file when its retry
         lookup errored (/root/reference/src/handler/arangodb_handler.rs:132-136
         — hazard §4.3.5); here every attempt is durably recorded."""
-        row = [(int(batch_id), -1, 0, 0, 0, None, status, int(retries), None)]
-        spark.createDataFrame(row, LINEAGE_SCHEMA).write.mode("append").parquet(
-            os.path.join(self.root, f"batch={batch_id:012d}")
+        self._append(
+            batch_id, [(batch_id, -1, 0, 0, 0, None, status, retries, None)]
         )
 
     def failure_count(self, spark: SparkSession, batch_id: int) -> int:
+        import pyarrow.parquet as pq
+
         p = os.path.join(self.root, f"batch={batch_id:012d}")
         if not os.path.exists(p):
             return 0
-        df = spark.read.schema(LINEAGE_SCHEMA).parquet(p)
-        return df.where(F.col("status").isin("retried", "poisoned")).count()
+        status = pq.read_table(p, columns=["status"]).column("status")
+        return sum(s in ("retried", "poisoned") for s in status.to_pylist())
 
     def read(self, spark: SparkSession) -> DataFrame:
         dirs = [d for d in os.listdir(self.root) if d.startswith("batch=")]
         if not dirs:
-            return spark.createDataFrame([], LINEAGE_SCHEMA)
+            return _empty_frame(spark, LINEAGE_SCHEMA)
         return spark.read.schema(LINEAGE_SCHEMA).parquet(
             *[os.path.join(self.root, d) for d in dirs]
         )

@@ -197,15 +197,9 @@ def run_ingest(
                     spark, epoch_id, prior_failures, status="poisoned"
                 )
                 return
-        # with lineage on, the batch is read twice (merge + per-partition
-        # counters) — persist so the second action hits cache, not the
-        # source files; without lineage there is exactly one pass, no cache
-        persisted = False
         try:
             if epoch_id in cfg.fail_batches:
                 raise RuntimeError(f"injected failure at epoch {epoch_id}")
-            if batch_df.isEmpty():  # early-exit on empty (SURVEY.md F9)
-                return
             # sources without a feed-side batch_id (Debezium envelopes)
             # get the epoch stamped in: batch_id is an LWW tie-break
             # column and a provenance field — never leave it null
@@ -214,9 +208,6 @@ def run_ingest(
                     "batch_id",
                     F.coalesce(F.col("batch_id"), F.lit(int(epoch_id))),
                 )
-            if lineage is not None:
-                batch_df = batch_df.persist()
-                persisted = True
             if rollup_table is not None:
                 from arango_etl_spark.streaming.rollup import maintain_rollup
 
@@ -248,6 +239,8 @@ def run_ingest(
             ):
                 table.expire_snapshots(keep_last=cfg.expire_keep_last)
             if lineage is not None and not res.skipped:
+                # the count scans the epoch's files a second time, reading
+                # no columns (a file scan is deterministic)
                 lineage.record_batch(
                     batch_df,
                     batch_id=epoch_id,
@@ -259,9 +252,6 @@ def run_ingest(
             if lineage is not None:
                 lineage.record_failure(spark, epoch_id, prior_failures + 1)
             raise
-        finally:
-            if persisted:
-                batch_df.unpersist()
 
     writer = (
         stream.writeStream.foreachBatch(apply_batch)

@@ -506,13 +506,35 @@ def test_cow_merge_leaves_no_unreferenced_commit_dir(spark, tmp_path):
         apply_changes(spark, t, mk_events(spark, [
             ev("update", f"d{i}", 10 * b + i, [b]) for i in range(10)
         ]), batch_id=b, fence_stream_id="s", strategy="cow")
+    dirs, referenced = commit_dirs(t)
+    assert len(dirs) == 3 and dirs == referenced
+
+
+@pytest.mark.parametrize("strategy", ["mor", "cow"])
+def test_all_filtered_batch_leaves_no_commit_dir(spark, tmp_path, strategy):
+    """A batch with no rows left after ``min_seq_exclusive`` stages no
+    file: it commits a version and leaves no ``data/commit-*`` dir that
+    no manifest names."""
+    t = mk_table(tmp_path, f"empty_{strategy}")
+    apply_changes(spark, t, mk_events(spark, [ev("insert", "a", 5, [1])]),
+                  strategy=strategy)
+    res = apply_changes(spark, t, mk_events(spark, [ev("update", "a", 2, [9])]),
+                        strategy=strategy, min_seq_exclusive=4)
+    assert res.keys_applied == 0 and res.version == 2
+    dirs, referenced = commit_dirs(t)
+    assert len(dirs) == 1 and dirs == referenced
+    assert state(spark, t) == {"a": ([1], 1)}
+
+
+def commit_dirs(table):
+    """(every ``data/commit-*`` dir, the dirs a retained manifest names)."""
     referenced = set()
-    for f in os.listdir(t.meta_dir):
+    for f in os.listdir(table.meta_dir):
         if f.startswith("v") and f.endswith(".json"):
-            with open(os.path.join(t.meta_dir, f)) as fh:
+            with open(os.path.join(table.meta_dir, f)) as fh:
                 for fs in json.load(fh)["files"].values():
                     referenced.update(os.path.dirname(os.path.dirname(r))
                                       for r in fs)
     dirs = {os.path.join("data", d)
-            for d in os.listdir(os.path.join(t.root, "data"))}
-    assert len(dirs) == 3 and dirs == referenced
+            for d in os.listdir(os.path.join(table.root, "data"))}
+    return dirs, referenced

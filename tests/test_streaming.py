@@ -13,9 +13,9 @@ from arango_etl_spark.sources.cdc_generator import (
     GeneratorConfig,
     write_event_batches,
 )
-from arango_etl_spark.streaming.lineage import LineageLog
+from arango_etl_spark.streaming.lineage import LINEAGE_SCHEMA, LineageLog
 from arango_etl_spark.streaming.runner import IngestConfig, run_ingest
-from tests.test_merge import PAYLOAD_SCHEMA, ev, mk_events
+from tests.test_merge import PAYLOAD_SCHEMA, commit_dirs, ev, mk_events
 
 CFG = GeneratorConfig(n_events=3_000, n_docs=250, n_batches=6, seed=21)
 
@@ -521,3 +521,84 @@ def test_lineage_counts_per_epoch(spark, tmp_path, strategy):
     assert summary == {0: (3, 3, 5), 1: (0, 2, None)}
     final = {r["doc_id"]: list(r["tokens"]) for r in t.read(spark).collect()}
     assert final == {"a": [1, 2], "c": [5]}
+
+
+def test_empty_epoch_commits_no_files_and_records_zero(spark, tmp_path):
+    """A 0-row epoch file takes the all-filtered path: a fenced version
+    with no files, no leftover commit dir, and a lineage summary row with
+    0 applied / 0 deduped at no seq_no; the next epoch applies as usual."""
+    feed = str(tmp_path / "feed")
+    t = mk_table(tmp_path, "empty_epoch")
+    lineage = LineageLog(str(tmp_path / "lineage"))
+    cfg = IngestConfig(max_files_per_trigger=1)
+    epochs = [[], [ev("insert", "a", 1, [1]), ev("update", "a", 2, [1, 2]),
+                   ev("insert", "b", 3, [3])]]
+    for i, rows in enumerate(epochs):
+        mk_events(spark, rows).coalesce(1).write.parquet(
+            f"{feed}/batch={i:05d}"
+        )
+        run_ingest(spark, feed, t, str(tmp_path / "ckpt"),
+                   lineage=lineage, cfg=cfg)
+
+    assert_states_equal(t.read(spark).toPandas(),
+                        reduce_events_duckdb(f"{feed}/batch=*/*.parquet"))
+    dirs, referenced = commit_dirs(t)
+    assert len(dirs) == 1 and dirs == referenced
+    summary = {
+        r["batch_id"]: (r["events_applied"], r["events_deduped"],
+                        r["committed_at_seq"])
+        for r in lineage.read(spark).where("partition_id IS NULL").collect()
+    }
+    assert summary == {0: (0, 0, None), 1: (2, 1, 3)}
+
+
+def test_lineage_epoch_runs_at_most_five_jobs(spark, tmp_path):
+    """One non-compaction MoR epoch with lineage runs the merge's 3 jobs
+    and the per-partition count's 2, all in the query's job group."""
+    feed = str(tmp_path / "feed")
+    mk_events(spark, [ev("insert", f"d{i}", i, [i]) for i in range(50)]
+              ).coalesce(1).write.parquet(f"{feed}/batch=00000")
+    t = mk_table(tmp_path, "jobs")
+    cfg = IngestConfig(max_files_per_trigger=1, compact_every=0,
+                       trigger_interval_secs=0)
+    q = run_ingest(spark, feed, t, str(tmp_path / "ckpt"),
+                   lineage=LineageLog(str(tmp_path / "lineage")), cfg=cfg,
+                   available_now=False)
+    try:
+        q.processAllAvailable()
+    finally:
+        q.stop()
+    assert t.current_version() == 1
+    st = spark.sparkContext.statusTracker()
+    assert len(st.getJobIdsForGroup(str(q.runId)) or []) <= 5
+
+
+def test_failure_ledger_starts_no_spark_job(spark, tmp_path):
+    """The retry ledger is written and counted on the driver."""
+    lineage = LineageLog(str(tmp_path / "lineage"))
+    st = spark.sparkContext.statusTracker()
+    before = len(st.getJobIdsForGroup(None) or [])
+    lineage.record_failure(spark, 3, 1)
+    lineage.record_failure(spark, 3, 2, status="poisoned")
+    n = lineage.failure_count(spark, 3)
+    assert len(st.getJobIdsForGroup(None) or []) - before == 0
+    assert n == 2 and lineage.failure_count(spark, 4) == 0
+
+
+def test_ledger_reads_spark_and_driver_written_rows(spark, tmp_path):
+    """A batch dir holding a row from a Spark parquet write (the ledger's
+    earlier writer) and one appended from the driver reads as one table."""
+    lineage = LineageLog(str(tmp_path / "lineage"))
+    spark.createDataFrame(
+        [(7, -1, 0, 0, 0, None, "retried", 1, None)], LINEAGE_SCHEMA
+    ).write.mode("append").parquet(
+        str(tmp_path / "lineage" / "batch=000000000007")
+    )
+    lineage._append(7, [(7, -1, 0, 0, 0, None, "retried", 2, None)])
+    assert lineage.failure_count(spark, 7) == 2
+    lin = lineage.read(spark)
+    assert lin.schema == LINEAGE_SCHEMA
+    assert sorted(tuple(r) for r in lin.collect()) == [
+        (7, -1, 0, 0, 0, None, "retried", 1, None),
+        (7, -1, 0, 0, 0, None, "retried", 2, None),
+    ]
