@@ -49,7 +49,10 @@ def _lit_array(vals: list[float]) -> Column:
     element-wise (F.array(*[F.lit(v) ...])) costs a py4j round trip PER
     ELEMENT — measured ~5s of pure driver time for 16 centroids × 64
     dims before any job ran. repr() round-trips doubles exactly, so the
-    CAST parses back the identical bits."""
+    CAST parses back the identical bits. The expression still holds one
+    CAST node per element; pq._model's integer model arrays go further
+    (one from_json that ConstantFolding turns into a single Literal, so
+    the expression's size does not grow with the array)."""
     body = ",".join(f"CAST('{v!r}' AS DOUBLE)" for v in vals)
     return F.expr(f"array({body})")
 

@@ -4,9 +4,17 @@ against its DuckDB oracle_sql() twin at any sf dir and report mismatches.
 The driver gates correctness at sf0.01 only; this proves the parity pairs
 are scale-independent (no thresholds or dims tuned to one sf).
 
-Run:  python scripts/check_oracles.py [sf_dir] [name ...]
+Run:  python scripts/check_oracles.py [--split] [sf_dir] [name ...]
 sf_dir defaults to the sf0.001 test-data dir; trailing query names restrict
 the sweep to those pairs (same comparison, same exit code).
+--split runs each leg under its own Spark job group and prints one JSON
+line per leg in place of its "ok" line: the DataFrame build, final-plan
+(optimize + physical planning) and collect seconds, the optimized plan's
+KB, and the leg's Spark job count and summed job seconds. Build + plan +
+collect is the leg's wall time (the build includes any jobs it runs
+itself, such as an index's seed collect); what of it lies outside
+``job_s`` is driver work (summed job time double-counts jobs that
+overlap).
 The registered-query count is printed per run (it tracks parity.py —
 do not hardcode it here). Round-5 record (2026-08-17, refreshed after
 the graph/BM25/JSON-shred/gap-fill/fan-out/sketch/video/token-span
@@ -31,8 +39,10 @@ run is the source of truth; this note only records the dates.
 
 from __future__ import annotations
 
+import json
 import math
 import sys
+import time
 from pathlib import Path
 
 sys.path.insert(0, str(Path(__file__).resolve().parent.parent))
@@ -58,7 +68,50 @@ def _norm(v):
     return v
 
 
+def _run_split(spark, name, build):
+    """Build, plan and collect one leg under its own job group; return
+    its columns, its rows and the leg's timing record."""
+    sc = spark.sparkContext
+    group = f"check_oracles:{name}:{time.monotonic_ns()}"
+    sc.setJobGroup(group, name)
+    t0 = time.perf_counter()
+    df = build()
+    t1 = time.perf_counter()
+    qe = df._jdf.queryExecution()
+    qe.executedPlan()
+    t2 = time.perf_counter()
+    rows = [tuple(r) for r in df.collect()]
+    t3 = time.perf_counter()
+    sc._jsc.clearJobGroup()
+    jsc = sc._jsc.sc()
+    jsc.listenerBus().waitUntilEmpty()  # job-end events reach the store
+    jobs = jsc.statusStore().jobsList(None)
+    n_jobs, job_s = 0, 0.0
+    for i in range(jobs.size()):
+        j = jobs.apply(i)
+        if j.jobGroup().isDefined() and j.jobGroup().get() == group:
+            n_jobs += 1
+            if j.submissionTime().isDefined() and j.completionTime().isDefined():
+                job_s += (
+                    j.completionTime().get().getTime()
+                    - j.submissionTime().get().getTime()
+                ) / 1000
+    record = {
+        "leg": name,
+        "build_s": round(t1 - t0, 3),
+        "plan_s": round(t2 - t1, 3),
+        "collect_s": round(t3 - t2, 3),
+        "plan_kb": round(len(qe.optimizedPlan().toString()) / 1024, 1),
+        "jobs": n_jobs,
+        "job_s": round(job_s, 3),
+    }
+    return df.columns, rows, record
+
+
 def main() -> int:
+    split = "--split" in sys.argv
+    if split:
+        sys.argv.remove("--split")
     sf_dir = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.001"
     queries = entry_mod.queries()
     names = sys.argv[2:] or sorted(queries)
@@ -71,8 +124,13 @@ def main() -> int:
     bad = []
     for name in names:
         try:
-            df = queries[name](spark, sf_dir)
-            sdata, scols = [tuple(r) for r in df.collect()], df.columns
+            if split:
+                scols, sdata, record = _run_split(
+                    spark, name, lambda: queries[name](spark, sf_dir)
+                )
+            else:
+                df = queries[name](spark, sf_dir)
+                sdata, scols = [tuple(r) for r in df.collect()], df.columns
             res = con.execute(oracles[name])
             dcols = [d[0] for d in res.description]
             ddata = res.fetchall()
@@ -80,9 +138,13 @@ def main() -> int:
             di = sorted(range(len(dcols)), key=lambda i: dcols[i])
             srows = sorted(tuple(_norm(r[i]) for i in si) for r in sdata)
             drows = sorted(tuple(_norm(r[i]) for i in di) for r in ddata)
-            if sorted(scols) != sorted(dcols) or srows != drows:
+            ok = sorted(scols) == sorted(dcols) and srows == drows
+            if split:
+                print(json.dumps({**record, "rows": len(sdata), "ok": ok}),
+                      flush=True)
+            if not ok:
                 bad.append((name, len(sdata), len(ddata)))
-            else:
+            elif not split:
                 print(f"ok {name} ({len(sdata)} rows)", flush=True)
         except Exception as e:  # pragma: no cover
             bad.append((name, "ERR", str(e)[:200]))

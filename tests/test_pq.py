@@ -1,6 +1,7 @@
 from __future__ import annotations
 
 import hashlib
+import re
 
 from pyspark.sql import functions as F
 
@@ -110,6 +111,80 @@ def test_pq_plans_are_jvm_side_and_partitioned(spark):
         idx, qdf.where(F.col("query_id") == 0), k=5, single_query=True
     )
     assert "TakeOrderedAndProject" in explain.physical_plan(single)
+
+
+def _plan_shape(plan: str) -> str:
+    """The plan string with the model literals' printed values and the
+    expression ids blanked: a folded model array prints its elements, and
+    those necessarily grow with the model; the expressions around them
+    must not."""
+    plan = re.sub(r"\[[\d\[\], -]*\]", "[]", plan)
+    return re.sub(r"#\d+L?", "#", plan)
+
+
+def test_pq_plan_size_does_not_depend_on_model_size(spark):
+    """Every quantizer expression is one SQL expression over one folded
+    literal per model array: growing kc 2 -> 8 and ksub 4 -> 16 on the
+    same data must leave the optimized plans (model values blanked) the
+    same size, so no per-centroid or per-codeword literal tree creeps
+    back in."""
+    from arango_etl_spark.operators.pq import build_ivfpq_index, ivfpq_topk
+
+    fx = _fixture(spark)
+    qdf = fx.where(F.col("vec_id").isin(0, 1)).select(
+        F.col("vec_id").alias("query_id"), "qvec"
+    )
+    sizes = {}
+    for kc, ksub in ((2, 4), (8, 16)):
+        pqi = build_pq_index(fx, m=M, ksub=ksub)
+        ivf = build_ivfpq_index(fx, kc=kc, m=M, ksub=ksub)
+        for name, df in (
+            ("pq_codes", pqi.codes),
+            ("pq_topk", pq_topk(pqi, qdf, k=3)),
+            ("ivfpq_codes", ivf.codes),
+            ("ivfpq_topk", ivfpq_topk(ivf, qdf, k=3, n_probe=2)),
+        ):
+            plan = df._jdf.queryExecution().optimizedPlan().toString()
+            assert "from_json" not in plan, (name, plan[:2000])
+            sizes.setdefault(name, []).append(len(_plan_shape(plan)))
+    for name, (small, big) in sizes.items():
+        assert abs(big - small) <= 16, (name, small, big)
+
+
+def test_pq_quotes_caller_column_names(spark):
+    """Column names that need quoting in SQL text (a space, a keyword)
+    give the same codes and top-k as the default names."""
+    from arango_etl_spark.operators.pq import build_ivfpq_index, ivfpq_topk
+
+    fx = _fixture(spark)
+    odd = fx.select(F.col("vec_id").alias("order"), F.col("qvec").alias("q vec"))
+    qdf = fx.where(F.col("vec_id").isin(0, 1)).select(
+        F.col("vec_id").alias("query_id"), "qvec"
+    )
+    odd_q = qdf.withColumnRenamed("qvec", "q vec")
+    names = {"id_col": "order", "vec_col": "q vec"}
+
+    def codes(index, id_col):
+        return {r[id_col]: list(r["codes"]) for r in index.codes.collect()}
+
+    def top(df, id_col):
+        return sorted((r["query_id"], r[id_col], r[2]) for r in df.collect())
+
+    a = build_pq_index(fx, m=M, ksub=KSUB)
+    b = build_pq_index(odd, m=M, ksub=KSUB, **names)
+    assert codes(b, "order") == codes(a, "vec_id")
+    assert top(pq_topk(b, odd_q, k=5, qvec_col="q vec"), "order") == top(
+        pq_topk(a, qdf, k=5), "vec_id"
+    )
+    a = build_ivfpq_index(fx, kc=2, m=M, ksub=KSUB, refine_iters=1)
+    b = build_ivfpq_index(odd, kc=2, m=M, ksub=KSUB, refine_iters=1, **names)
+    assert codes(b, "order") == codes(a, "vec_id")
+    for kw in ({}, {"rerank": 10}):
+        got = ivfpq_topk(
+            b, odd_q, k=5, qvec_col="q vec", src=odd, src_vec_col="q vec", **kw
+        )
+        want = ivfpq_topk(a, qdf, k=5, src=fx, **kw)
+        assert top(got, "order") == top(want, "vec_id")
 
 
 # ----------------------------------------------------------------- IVFADC
