@@ -53,9 +53,9 @@ def _table(args) -> SnapshotTable:
 
 def cmd_maintain(spark, args) -> None:
     """Off-ingest-path table maintenance: MoR compaction, snapshot
-    expiry, bucket-layout evolution — each an atomic commit; run them
-    from a separate process while `current` keeps ingesting (the CAS
-    retries loser commits)."""
+    expiry, bucket-layout evolution — each an atomic commit. A commit
+    that loses the CAS to a concurrent `current` ingest raises
+    CommitConflict and nothing retries it: re-run the maintenance."""
     from arango_etl_spark.operators.merge_into import (
         compact, compact_buckets, rebucket,
     )
@@ -86,14 +86,14 @@ def cmd_maintain(spark, args) -> None:
                 max_records_per_file=args.max_records_per_file,
             )
             print(f"compacted (v{m['version']})")
-    if args.analyze_cols or args.bloom_cols or args.do_counts:
+    if args.analyze_cols or args.bloom_cols:
         m = table.analyze(
             spark,
             cols=args.analyze_cols.split(",") if args.analyze_cols else (),
             bloom_cols=args.bloom_cols.split(",") if args.bloom_cols else (),
         )
         print(f"analyzed {m['analyzed_files']} files (v{m['version']})")
-        if table.counts_complete(m) and m.get("one_row_per_key"):
+        if m["one_row_per_key"]:
             print(f"row_count (metadata-only): {table.row_count()}")
     if args.expire_keep is not None:
         table.expire_snapshots(keep_last=args.expire_keep)
@@ -394,11 +394,6 @@ def main() -> None:
     mnt.add_argument("--max-compact-buckets", type=int, default=None,
                      help="cap one incremental run to the worst N "
                           "buckets (paces rewrite volume)")
-    mnt.add_argument("--counts", dest="do_counts", action="store_true",
-                     help="retrofit per-file row/tombstone counts from "
-                          "parquet footers for files committed without "
-                          "them (no Spark job); enables the "
-                          "metadata-only row_count on flat snapshots")
     mnt.add_argument("--analyze", dest="analyze_cols", default=None,
                      metavar="COL[,COL...]",
                      help="record per-file min/max zone maps for these "

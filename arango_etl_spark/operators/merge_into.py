@@ -42,6 +42,7 @@ from __future__ import annotations
 import json
 import os
 import shutil
+from collections import Counter
 from dataclasses import dataclass, field
 
 from pyspark.sql import DataFrame, SparkSession
@@ -183,7 +184,7 @@ def apply_changes(
     src = _as_stored(deduped, key_col, payload).withColumn(
         "_bucket", table.bucket_expr(F.col(key_col), manifest)
     )
-    staged_rel, staged = table.stage_write(src)
+    staged_rel, staged = table.stage_write(src, manifest=manifest)
     counts = {
         rel: _footer_meta(os.path.join(table.root, rel),
                           {"_seq_no": T.LongType()})
@@ -200,14 +201,14 @@ def apply_changes(
     new_files = staged
     file_meta = {rel: {"rows": c["rows"], "dels": c["dels"]}
                  for rel, c in counts.items()}
-    if replaced and any(manifest["files"].values()):
+    if replaced and manifest["files"]:
         # CoW over existing files rewrites the staged buckets and never
         # commits the staged dir (a crash before the rmtree leaves an
         # orphan commit dir for remove_orphan_files)
         new_files = _rewrite_buckets(
             spark, table, read_manifest, sorted(replaced),
-            table.read_stored(spark, manifest={**read_manifest,
-                                               "files": staged}),
+            table._read_rels(spark, list(counts),
+                             table.stored_schema(read_manifest)),
         )
         shutil.rmtree(os.path.join(table.root, staged_rel))
         file_meta = {}
@@ -241,7 +242,7 @@ def apply_changes(
             # compact when the average delta-file depth per bucket exceeds
             # the threshold — bounds merge-on-read amplification by actual
             # file count, not commit count (a tiny batch shouldn't hasten it)
-            n_files = sum(len(fs) for fs in new_manifest["files"].values())
+            n_files = len(new_manifest["files"])
             if n_files > compact_every * new_manifest["n_buckets"]:
                 new_manifest = compact(spark, table)
 
@@ -287,13 +288,13 @@ def _rewrite_buckets(
             )
     _, files = table.stage_write(
         resolved, cluster_by=cluster_by,
-        max_records_per_file=max_records_per_file,
+        max_records_per_file=max_records_per_file, manifest=manifest,
     )
     return files
 
 
 def _blooms_for(spark, table, manifest, files, bloom_cols):
-    """``file_meta`` Bloom entries for freshly written ``files`` (commit's
+    """``file_meta`` Bloom fields for freshly written ``files`` (commit's
     lifecycle carries parent entries over for untouched files and drops
     them with replaced ones)."""
     abs_new = [
@@ -373,16 +374,14 @@ def compact_buckets(
     (src/handler/arangodb.rs) — same off-hot-path shape, here as
     snapshot-isolated file surgery."""
     manifest = table.manifest()
-    by_count = sorted(
-        ((int(b), fs) for b, fs in manifest["files"].items()),
-        key=lambda kv: (-len(kv[1]), kv[0]),
-    )
-    hot = [b for b, fs in by_count if len(fs) >= int(min_delta_files)]
+    per_bucket = Counter(e["bucket"] for e in manifest["files"].values())
+    by_count = sorted(per_bucket.items(), key=lambda kv: (-kv[1], kv[0]))
+    hot = [b for b, n in by_count if n >= int(min_delta_files)]
     if max_buckets is not None:
         hot = hot[: int(max_buckets)]
     if not hot:
         return {**manifest, "skipped": True, "compacted_buckets": []}
-    full = len(hot) == sum(1 for _, fs in by_count if fs)
+    full = len(hot) == len(per_bucket)
     files = _rewrite_buckets(
         spark, table, manifest, hot, cluster_by=cluster_by,
         max_records_per_file=max_records_per_file,
@@ -461,7 +460,8 @@ def rebucket(
     Like compaction this is a full-rewrite maintenance job run OFF the
     ingest path; the commit CAS-es against the snapshot it read
     (expected_version), so a concurrent ingest commit wins and the
-    rebucket retries rather than clobbering it. Readers before the swap
+    rebucket raises CommitConflict rather than clobbering it (nothing
+    retries; re-run the rebucket). Readers before the swap
     see the old layout, readers after see the new — bucket_expr always
     derives from the CURRENT manifest, so merges and point lookups
     follow automatically. Fences/summary carry over with the manifest.

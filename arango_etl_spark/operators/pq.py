@@ -132,14 +132,16 @@ def build_pq_index(
     whole table map-only. Requires dim % m == 0."""
     from arango_etl_spark.operators.dedup import _spread
 
-    emb = _spread(emb)  # encode argmin is the CPU; single-file inputs
-    # would otherwise run it in ONE task (no-op at table scale)
+    # the (md5, id) order is total, so the seeds do not depend on the
+    # partitioning: collect them before the spread's shuffle
     seeds = (
         emb.select(id_col, vec_col, _portable_hash60_str(F.col(id_col)).alias("_h"))
         .orderBy("_h", id_col)
         .limit(ksub)
         .collect()
     )
+    emb = _spread(emb)  # encode argmin is the CPU; single-file inputs
+    # would otherwise run it in ONE task (no-op at table scale)
     if not seeds:
         raise ValueError("cannot build PQ index from an empty table")
     dim = len(seeds[0][vec_col])
@@ -309,13 +311,12 @@ def build_ivfpq_index(
     reads only its cells' files."""
     from arango_etl_spark.operators.dedup import _spread
 
-    emb = _spread(emb)  # assign/residual/encode are the CPU; see
-    # build_pq_index (no-op once input files >= parallelism)
     # ONE TakeOrdered collect serves BOTH seed sets: coarse seeds are
     # the kc smallest-(md5, id) rows, residual-codebook seeds the ksub
     # smallest — the same ordering, so collect max(kc, ksub) rows once
     # and derive the residual seeds driver-side in exact int arithmetic
-    # (identical argmin/tie-break as the Spark expression).
+    # (identical argmin/tie-break as the Spark expression). Collected
+    # before the spread: the order is total, so no shuffle is needed.
     seeds = (
         emb.select(
             id_col, vec_col, _portable_hash60_str(F.col(id_col)).alias("_h")
@@ -324,6 +325,8 @@ def build_ivfpq_index(
         .limit(max(kc, ksub))
         .collect()
     )
+    emb = _spread(emb)  # assign/residual/encode are the CPU; see
+    # build_pq_index (no-op once input files >= parallelism)
     if not seeds:
         raise ValueError("cannot build IVFPQ index from an empty table")
     coarse = [[int(x) for x in r[vec_col]] for r in seeds[:kc]]

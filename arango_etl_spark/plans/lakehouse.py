@@ -4,9 +4,11 @@ Implements the contract the north rule assigns to Iceberg (no
 iceberg-spark-runtime jar ships in this image, SURVEY.md §7.0):
 
 - **snapshot isolation**: every commit writes an immutable manifest
-  (`meta/v{N}.json`) listing the exact data files per hash-bucket; readers
-  resolve the `meta/_current` pointer (atomically swapped via
-  `os.replace`) so they always see a complete snapshot.
+  (`meta/v{N}.json`) with one entry per live data file (Iceberg's
+  `data_file` record): ``files[rel] = {"bucket", "rows", "dels"}`` plus
+  optional zone-map ``bounds`` and ``bloom`` bits. Readers resolve the
+  `meta/_current` pointer (atomically swapped via `os.replace`) so they
+  always see a complete snapshot.
 - **atomic batch-id fence**: the manifest carries a `summary` dict;
   streaming commits record `fence.<stream_id> = batch_id` *in the same
   manifest as the data file list*, so data+fence are one atomic unit.
@@ -31,7 +33,8 @@ iceberg-spark-runtime jar ships in this image, SURVEY.md §7.0):
 
 Multi-writer note: `meta/v{N}.json` is created with O_EXCL, so two racing
 committers conflict-detect exactly like an Iceberg catalog CAS; the loser
-retries against the new current snapshot. The engine's streaming runner is
+raises :class:`CommitConflict` and nothing retries it — its caller must
+re-run against the new current snapshot. The engine's streaming runner is
 single-writer per table (as Structured Streaming guarantees per query).
 """
 
@@ -96,9 +99,10 @@ class SnapshotTable:
             "key_col": key_col,
             "n_buckets": n_buckets,
             "schema": json.loads(payload_schema.json()),
-            "files": {},          # bucket(str) -> [relative file paths]
+            "files": {},          # relative path -> entry, see commit()
             "summary": {},
             "mode": "init",
+            "one_row_per_key": True,
         }
         t._write_manifest(manifest)
         return t
@@ -114,8 +118,7 @@ class SnapshotTable:
 
     def manifest(self, version: int | None = None) -> dict:
         v = self.current_version() if version is None else version
-        with open(os.path.join(self.meta_dir, f"v{v}.json")) as f:
-            return json.load(f)
+        return _load_manifest(os.path.join(self.meta_dir, f"v{v}.json"))
 
     def payload_schema(self, manifest: dict | None = None) -> T.StructType:
         m = manifest or self.manifest()
@@ -135,13 +138,11 @@ class SnapshotTable:
         self, manifest: dict | None = None, buckets: list[int] | None = None
     ) -> list[str]:
         m = manifest or self.manifest()
-        out: list[str] = []
-        keys = (
-            [str(b) for b in buckets] if buckets is not None else list(m["files"])
-        )
-        for b in keys:
-            out.extend(os.path.join(self.root, p) for p in m["files"].get(b, []))
-        return out
+        want = None if buckets is None else set(buckets)
+        return [
+            os.path.join(self.root, rel) for rel, e in m["files"].items()
+            if want is None or e["bucket"] in want
+        ]
 
     def read_stored(
         self,
@@ -203,30 +204,28 @@ class SnapshotTable:
 
     # ------------------------------------------------- per-file metadata
     def analyze(self, spark: SparkSession, cols=(), bloom_cols=()) -> dict:
-        """Fill in the ``file_meta`` fields that live files lack — counts,
-        zone-map ``bounds`` for ``cols`` from parquet footers (no Spark
-        job), Bloom bits for ``bloom_cols`` by :meth:`build_blooms` over
-        just the unindexed files — as one metadata-only commit. Existing
-        fields are kept, so calls add up. Returns the manifest (unchanged
-        if nothing was missing) with ``analyzed_files``, the number of
-        files that gained a field."""
+        """Add the index fields that live files' entries lack — zone-map
+        ``bounds`` for ``cols`` from parquet footers (no Spark job), Bloom
+        bits for ``bloom_cols`` by :meth:`build_blooms` over just the
+        unindexed files — as one metadata-only commit. Existing fields are
+        kept, so calls add up. Returns the manifest (unchanged if nothing
+        was missing) with ``analyzed_files``, the number of files that
+        gained a field."""
         m = self.manifest()
-        have = m.get("file_meta", {})
-        rels = [rel for fs in m["files"].values() for rel in fs]
+        have = m["files"]
         schema = self.stored_schema(m)
         dtypes = {f.name: f.dataType for f in schema.fields}
-        found = {
-            rel: _footer_meta(
-                os.path.join(self.root, rel), {c: dtypes[c] for c in cols}
-            )
-            for rel in rels
-            if "rows" not in have.get(rel, {})
-            or any(c not in have[rel].get("bounds", {}) for c in cols)
-        }
+        found: dict[str, dict] = {}
+        for rel, e in have.items():
+            if any(c not in e.get("bounds", {}) for c in cols):
+                b = _footer_meta(
+                    os.path.join(self.root, rel), {c: dtypes[c] for c in cols}
+                ).get("bounds")
+                if b:
+                    found[rel] = {"bounds": b}
         unindexed = [
-            rel for rel in rels
-            if any(c not in have.get(rel, {}).get("bloom", {})
-                   for c in bloom_cols)
+            rel for rel, e in have.items()
+            if any(c not in e.get("bloom", {}) for c in bloom_cols)
         ]
         if unindexed:
             blooms = self.build_blooms(
@@ -237,7 +236,7 @@ class SnapshotTable:
                 found.setdefault(rel, {})["bloom"] = b
         new = {
             rel: e for rel, e in found.items()
-            if _merge_meta(have.get(rel, {}), e) != have.get(rel, {})
+            if _merge_meta(have[rel], e) != have[rel]
         }
         if not new:
             return {**m, "analyzed_files": 0}
@@ -304,10 +303,9 @@ class SnapshotTable:
             return v
 
         lo_b, hi_b = _bound(lo), _bound(hi)
-        meta = m.get("file_meta", {})
         keep: list[str] = []
-        for rel in (rel for fs in m["files"].values() for rel in fs):
-            s = meta.get(rel, {}).get("bounds", {}).get(col)
+        for rel, e in m["files"].items():
+            s = e.get("bounds", {}).get(col)
             if s is None:
                 keep.append(rel)
                 continue
@@ -328,7 +326,7 @@ class SnapshotTable:
         return pruned.where(cond).drop(*META_NAMES)
 
     def _require_flat(self, m: dict, what: str) -> None:
-        if not m.get("one_row_per_key", False):
+        if not m["one_row_per_key"]:
             raise ValueError(
                 f"{what} requires a one_row_per_key snapshot — run "
                 "compact() first (MoR deltas make file-level pruning "
@@ -344,14 +342,6 @@ class SnapshotTable:
             *[os.path.join(self.root, r) for r in rels]
         )
 
-    def counts_complete(self, manifest: dict | None = None) -> bool:
-        m = manifest or self.manifest()
-        meta = m.get("file_meta", {})
-        return all(
-            "rows" in meta.get(rel, {})
-            for fs in m["files"].values() for rel in fs
-        )
-
     def row_count(
         self, spark: SparkSession | None = None,
         manifest: dict | None = None,
@@ -359,22 +349,17 @@ class SnapshotTable:
         """Exact public row count (``read``'s count: LWW-resolved,
         tombstones dropped). METADATA-ONLY — works with ``spark=None``,
         zero jobs — when the snapshot is flat (one stored row per key,
-        so physical rows − tombstones IS the answer) and every file
-        carries a count. A MoR snapshot (per-key delta stacks across
-        files) cannot be counted from per-file totals; it falls back to
-        the real resolve+count, or raises if no session was given."""
+        so physical rows − tombstones IS the answer). A MoR snapshot
+        (per-key delta stacks across files) cannot be counted from
+        per-file totals; it falls back to the real resolve+count, or
+        raises if no session was given."""
         m = manifest or self.manifest()
-        if m.get("one_row_per_key", False) and self.counts_complete(m):
-            meta = m.get("file_meta", {})
-            return sum(
-                meta[rel]["rows"] - meta[rel]["dels"]
-                for fs in m["files"].values() for rel in fs
-            )
+        if m["one_row_per_key"]:
+            return sum(e["rows"] - e["dels"] for e in m["files"].values())
         if spark is None:
             raise ValueError(
-                "row_count needs a SparkSession: snapshot is not flat or "
-                "counts are incomplete (run compact + analyze for the "
-                "metadata-only path)"
+                "row_count needs a SparkSession: snapshot is not flat "
+                "(run compact for the metadata-only path)"
             )
         return self.read(spark, manifest=m).count()
 
@@ -399,15 +384,13 @@ class SnapshotTable:
         to the real tombstone-filtered scan (column-pruned by Catalyst),
         or raises without a session."""
         m = manifest or self.manifest()
-        meta = m.get("file_meta", {})
-        rels = [rel for fs in m["files"].values() for rel in fs]
+        es = m["files"].values()
         if (
-            m.get("one_row_per_key", False)
-            and self.counts_complete(m)
-            and sum(meta[r]["dels"] for r in rels) == 0
-            and all(col in meta[r].get("bounds", {}) for r in rels)
+            m["one_row_per_key"]
+            and sum(e["dels"] for e in es) == 0
+            and all(col in e.get("bounds", {}) for e in es)
         ):
-            bounds = [meta[r]["bounds"][col] for r in rels]
+            bounds = [e["bounds"][col] for e in es]
             mins = [b[0] for b in bounds if b[0] is not None]
             maxs = [b[1] for b in bounds if b[1] is not None]
             lo = min(mins, key=_nan_last) if mins else None
@@ -427,8 +410,8 @@ class SnapshotTable:
         if spark is None:
             raise ValueError(
                 "col_bounds needs a SparkSession: metadata-only min/max "
-                "requires a flat snapshot with complete counts proving "
-                "zero tombstones AND zone-map bounds on every file for "
+                "requires a flat snapshot whose counts prove zero "
+                "tombstones AND zone-map bounds on every file for "
                 f"{col!r} (run compact + analyze)"
             )
         r = _live(self.read_stored(spark, manifest=m), m).agg(
@@ -520,7 +503,6 @@ class SnapshotTable:
                 "read_eq probes non-null equality (Bloom filters index "
                 "non-null values only) — filter IS NULL via read()"
             )
-        meta = m.get("file_meta", {})
         pos_cache: dict[tuple[int, int], list[int]] = {}
 
         def _positions(mb: int, kk: int) -> list[int]:
@@ -543,8 +525,8 @@ class SnapshotTable:
             return ps
 
         keep: list[str] = []
-        for rel in (rel for fs in m["files"].values() for rel in fs):
-            e = meta.get(rel, {}).get("bloom", {}).get(col)
+        for rel, fe in m["files"].items():
+            e = fe.get("bloom", {}).get(col)
             if e is None:
                 keep.append(rel)
                 continue
@@ -567,9 +549,11 @@ class SnapshotTable:
         bucket_col: str = "_bucket",
         cluster_by: str | Column | None = None,
         max_records_per_file: int | None = None,
+        manifest: dict | None = None,
     ) -> tuple[str, dict[str, list[str]]]:
-        """Write df (with bucket_col) as one parquet dir partitioned by
-        bucket; return (commit_dir_rel, files-by-bucket).
+        """Write df (with bucket_col, computed from ``manifest``) as one
+        parquet dir partitioned by bucket; return (commit_dir_rel,
+        files-by-bucket).
 
         Rows are hash-distributed by bucket and sorted by key within files
         so parquet row-group min/max stats support key-range skipping at
@@ -590,12 +574,9 @@ class SnapshotTable:
         out = os.path.join(self.root, rel)
         # explicit partition count: with a bare repartition(col), AQE
         # coalesces the small post-dedup exchange to 1-2 partitions and the
-        # write/sort loses all parallelism (hurts the N→4N scaling curve)
-        m = self.manifest()
-        n_parts = max(
-            df.sparkSession.sparkContext.defaultParallelism,
-            m["n_buckets"] // 4,
-        )
+        # write/sort loses all parallelism
+        m = manifest or self.manifest()
+        n_parts = df.sparkSession.sparkContext.defaultParallelism
         # cluster_by may be a column NAME or a computed sort Column
         # (e.g. the Z-order key from operators/zorder.py)
         sort_cols: list = [bucket_col]
@@ -649,8 +630,12 @@ class SnapshotTable:
         only — the new_files must already be laid out under the new
         scheme, so it is only legal with a full replace).
 
-        Every new file's ``rows``/``dels`` come from the caller's
-        ``file_meta`` entry or else its parquet footer (no Spark job).
+        The manifest keeps one entry per live file: ``files[rel] =
+        {"bucket", "rows", "dels"}`` plus optional ``"bounds": {col: [lo,
+        hi]}`` and ``"bloom": {col: {m, k, b}}``. ``file_meta[rel]`` adds
+        fields to a new or carried-over file's entry; a new file's
+        ``rows``/``dels`` come from it or else from the file's parquet
+        footer (no Spark job).
         """
         if new_n_buckets is not None and replaced_buckets is not None:
             raise ValueError(
@@ -681,31 +666,34 @@ class SnapshotTable:
         schema-widening / metadata-lifecycle rules apply whether the
         result lands on the main line or on an audit branch).
 
-        ``file_meta[rel] = {"rows", "dels", "bounds": {col: [lo, hi]},
-        "bloom": {col: {m, k, b}}}`` lives and dies with its file, and new
-        fields merge into the existing entry. Every field is a shortcut
-        with a fallback: a file without one is always read. New files'
-        footers are read BEFORE the version check, so the window between
-        the check and the O_EXCL create does not grow."""
-        file_meta = dict(file_meta or {})
-        for rel in (rel for fs in new_files.values() for rel in fs
-                    if "rows" not in file_meta.get(rel, {})):
-            counts = _footer_meta(os.path.join(self.root, rel), {})
-            file_meta[rel] = _merge_meta(counts, file_meta.get(rel, {}))
+        An entry lives and dies with its file: carried-over files keep
+        theirs, replaced buckets' entries go, and ``file_meta`` fields
+        merge into the entry. ``bounds``/``bloom`` are shortcuts with a
+        fallback: a file without one is always read. New files' footers
+        are read BEFORE the version check, so the window between the
+        check and the O_EXCL create does not grow."""
+        file_meta = file_meta or {}
+        new = {}
+        for b, fs in new_files.items():
+            for rel in fs:
+                e = file_meta.get(rel, {})
+                if "rows" not in e:
+                    e = _merge_meta(
+                        _footer_meta(os.path.join(self.root, rel), {}), e
+                    )
+                new[rel] = {"bucket": int(b), **e}
         cur_v = self.current_version()
         if expected_version is not None and cur_v != expected_version:
             raise CommitConflict(f"expected v{expected_version}, found v{cur_v}")
         parent = self.manifest(cur_v)
-        files: dict[str, list[str]] = {}
-        if replaced_buckets is not None:
-            for b, fs in parent["files"].items():
-                if int(b) not in replaced_buckets:
-                    files[b] = list(fs)
-        for b, fs in new_files.items():
-            files.setdefault(b, [])
-            files[b].extend(fs)
-        was_flat = parent.get("one_row_per_key", parent["version"] == 0)
-        manifest = {
+        files = {
+            rel: _merge_meta(e, file_meta.get(rel, {}))
+            for rel, e in parent["files"].items()
+            if replaced_buckets is not None
+            and e["bucket"] not in replaced_buckets
+        }
+        files.update(new)
+        return {
             "version": cur_v + 1,
             "parent": cur_v,
             "key_col": parent["key_col"],
@@ -724,24 +712,14 @@ class SnapshotTable:
             "one_row_per_key": (
                 one_row_per_key
                 if one_row_per_key is not None
-                else (was_flat and mode != "append")
+                else (parent["one_row_per_key"] and mode != "append")
             ),
         }
-        kept = {rel for fs in files.values() for rel in fs}
-        meta = {
-            r: e for r, e in parent.get("file_meta", {}).items() if r in kept
-        }
-        for r, e in file_meta.items():
-            if r in kept:
-                meta[r] = _merge_meta(meta.get(r, {}), e)
-        if meta:
-            manifest["file_meta"] = meta
-        return manifest
 
     def _write_manifest(self, manifest: dict) -> None:
         v = manifest["version"]
         # O_EXCL create = the catalog CAS: a racing committer of the same
-        # version fails here and must retry against the new snapshot
+        # version fails here (nothing retries it)
         _create_json(os.path.join(self.meta_dir, f"v{v}.json"), manifest)
         tmp = os.path.join(self.meta_dir, f"_current.tmp.{uuid.uuid4().hex[:8]}")
         with open(tmp, "w") as f:
@@ -790,8 +768,7 @@ class SnapshotTable:
         return manifest
 
     def branch_manifest(self, name: str) -> dict:
-        with open(self._branch_path(name)) as f:
-            return json.load(f)
+        return _load_manifest(self._branch_path(name))
 
     def read_branch(self, spark: SparkSession, name: str) -> DataFrame:
         """Audit read: the table state AS IF the branch were published
@@ -828,7 +805,7 @@ class SnapshotTable:
         m = self.branch_manifest(name)
         removed = 0
         if delete_files:
-            for rel in m.get("staged_files", []):
+            for rel in m["staged_files"]:
                 p = os.path.join(self.root, rel)
                 if os.path.exists(p):
                     os.unlink(p)
@@ -858,19 +835,15 @@ class SnapshotTable:
             "key_col": target["key_col"],
             "n_buckets": target["n_buckets"],
             "schema": target["schema"],
-            "files": {b: list(fs) for b, fs in target["files"].items()},
+            "files": target["files"],
             "summary": {
                 **target["summary"],
                 "rollback_of": cur_v,
                 "rollback_to": to_version,
             },
             "mode": "rollback",
-            "one_row_per_key": target.get(
-                "one_row_per_key", to_version == 0
-            ),
+            "one_row_per_key": target["one_row_per_key"],
         }
-        if target.get("file_meta"):
-            manifest["file_meta"] = target["file_meta"]
         self._write_manifest(manifest)
         return manifest
 
@@ -891,8 +864,8 @@ class SnapshotTable:
         ``read_changes(X)`` to reach current — CDC out of the sink, not
         just into it.
 
-        Scale shape: buckets whose manifest file lists are IDENTICAL in
-        both versions cannot differ — the diff scans only changed
+        Scale shape: buckets whose file sets are IDENTICAL in both
+        versions cannot differ — the diff scans only changed
         buckets (under steady MoR ingest that's the recently-touched
         slice, not the table). Bucket pruning is skipped across a
         rebucket (bucket ids aren't comparable) and after compaction it
@@ -907,10 +880,9 @@ class SnapshotTable:
         to_schema = m_to["schema"]
         buckets: list[int] | None = None
         if m_from["n_buckets"] == m_to["n_buckets"]:
+            fa, fb = m_from["files"], m_to["files"]
             buckets = sorted(
-                int(b)
-                for b in set(m_from["files"]) | set(m_to["files"])
-                if m_from["files"].get(b) != m_to["files"].get(b)
+                {(fa.get(r) or fb[r])["bucket"] for r in fa.keys() ^ fb.keys()}
             )
 
         old_state, new_state = (
@@ -939,7 +911,10 @@ class SnapshotTable:
         """Garbage-collect: drop manifests older than the last ``keep_last``
         versions and delete data files no surviving snapshot references
         (Iceberg's expire_snapshots). Readers of retained versions are
-        unaffected — files shared with newer snapshots are kept.
+        unaffected — files shared with newer snapshots are kept, and so
+        are the files a parked branch manifest reads (see
+        :meth:`_referenced`). Every manifest is loaded before any file is
+        deleted, so a manifest the loader refuses deletes nothing.
 
         SCALE NOTE: the unlink loop here is driver-side `os` — correct
         for this local mini-format, but a known wall at object-store
@@ -948,38 +923,46 @@ class SnapshotTable:
         delegates to Iceberg's own `expire_snapshots` maintenance
         action, which distributes the file enumeration and deletion."""
         cur = self.current_version()
-        all_versions = sorted(
+        # versions actually on disk: a prior expiry with a smaller
+        # keep_last (or any non-contiguous history) leaves gaps
+        all_versions = self._versions()
+        expired = [v for v in all_versions if v < cur - keep_last + 1]
+        referenced = self._referenced(
+            [v for v in all_versions if v not in expired]
+        )
+        dead = {
+            rel for v in expired for rel in self.manifest(v)["files"]
+        } - referenced
+        removed_files = 0
+        for rel in dead:
+            p = os.path.join(self.root, rel)
+            if os.path.exists(p):
+                os.unlink(p)
+                removed_files += 1
+        for v in expired:
+            os.unlink(os.path.join(self.meta_dir, f"v{v}.json"))
+        return {"expired_versions": len(expired), "removed_files": removed_files}
+
+    def _versions(self) -> list[int]:
+        return sorted(
             int(f[1:-5]) for f in os.listdir(self.meta_dir)
             if f.startswith("v") and f.endswith(".json")
         )
-        # intersect with versions actually on disk: a prior expiry with a
-        # smaller keep_last (or any non-contiguous history) would otherwise
-        # make manifest(v) raise mid-GC
-        keep_versions = set(
-            range(max(0, cur - keep_last + 1), cur + 1)
-        ) & set(all_versions)
-        referenced: set[str] = set()
-        for v in keep_versions:
-            m = self.manifest(v)
-            for fs in m["files"].values():
-                referenced.update(fs)
-        removed_files = 0
-        for v in all_versions:
-            if v in keep_versions:
-                continue
-            m = self.manifest(v)
-            for fs in m["files"].values():
-                for rel in fs:
-                    if rel not in referenced:
-                        p = os.path.join(self.root, rel)
-                        if os.path.exists(p):
-                            os.unlink(p)
-                            removed_files += 1
-            os.unlink(os.path.join(self.meta_dir, f"v{v}.json"))
+
+    def _referenced(self, versions: list[int]) -> set[str]:
+        """Data files named by the manifests of ``versions`` or by any
+        parked branch manifest: a WAP audit in flight reads its staged
+        files and the files it carried over from its base version, so
+        neither is garbage while the branch exists."""
+        branches = [
+            f[len("branch-"):-len(".json")] for f in os.listdir(self.meta_dir)
+            if f.startswith("branch-") and f.endswith(".json")
+        ]
         return {
-            "expired_versions": len([v for v in all_versions
-                                     if v not in keep_versions]),
-            "removed_files": removed_files,
+            rel
+            for m in [*map(self.manifest, versions),
+                      *map(self.branch_manifest, branches)]
+            for rel in m["files"]
         }
 
     def remove_orphan_files(self, older_than_secs: int = 3600) -> dict:
@@ -1000,17 +983,7 @@ class SnapshotTable:
         driver."""
         import time as _time
 
-        referenced: set[str] = set()
-        for f in os.listdir(self.meta_dir):
-            # parked branch manifests (WAP audits in flight) count as
-            # references: their staged files are pre-publish, not orphans
-            if f.endswith(".json") and (
-                f.startswith("v") or f.startswith("branch-")
-            ):
-                with open(os.path.join(self.meta_dir, f)) as fh:
-                    m = json.load(fh)
-                for fs in m["files"].values():
-                    referenced.update(fs)
+        referenced = self._referenced(self._versions())
         cutoff = _time.time() - older_than_secs
         data_root = os.path.join(self.root, "data")
         removed = removed_dirs = 0
@@ -1072,7 +1045,7 @@ def _empty_frame(spark: SparkSession, schema: T.StructType) -> DataFrame:
 
 
 def _merge_meta(old: dict, new: dict) -> dict:
-    """A file's ``file_meta`` entry with ``new``'s fields added; the
+    """A file's manifest entry with ``new``'s fields added; the
     ``bounds``/``bloom`` maps merge per column."""
     out = {**old, **new}
     for k in ("bounds", "bloom"):
@@ -1238,9 +1211,28 @@ def _live(stored: DataFrame, m: dict) -> DataFrame:
     """Visible rows of a stored frame of snapshot ``m``: LWW-resolved
     unless ``m`` is flat, tombstones dropped; META_COLS kept for
     ``col_bounds``."""
-    if not m.get("one_row_per_key", False):
+    if not m["one_row_per_key"]:
         stored = lww_resolve(stored, m["key_col"])
     return stored.where(~F.col("_deleted"))
+
+
+def _load_manifest(path: str) -> dict:
+    """The one loader of version and branch manifests. Refuses the older
+    bucket-keyed format (``files`` mapping buckets to path lists, with a
+    separate ``file_meta``): read as per-file entries, its bucket ids
+    would look like data paths, and the GC would see every live file as
+    unreferenced."""
+    with open(path) as f:
+        m = json.load(f)
+    if "one_row_per_key" not in m or any(
+        not isinstance(e, dict) for e in m["files"].values()
+    ):
+        raise ValueError(
+            f"{path} is a bucket-keyed manifest of an older format; this "
+            "engine reads one entry per data file (files[path] = {bucket, "
+            "rows, dels}) — rebuild the table with this engine"
+        )
+    return m
 
 
 def _create_json(path: str, obj: dict) -> None:

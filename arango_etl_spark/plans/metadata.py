@@ -12,10 +12,8 @@ adapter (plans/iceberg_sink.py) delegates to Iceberg's own metadata
 tables, which store sizes in the manifest and need no stat calls.
 
 Row/tombstone counts, zone-map columns and Bloom columns come from the
-manifest's per-file ``file_meta`` entries. Every commit records counts
-from the new files' parquet footers, so only files listed by a manifest
-written before ``file_meta`` existed report null rows until
-``SnapshotTable.analyze`` fills them — inspection never silently scans.
+manifest's per-file entries. Every commit records counts from the new
+files' parquet footers, so inspection never scans.
 """
 
 from __future__ import annotations
@@ -33,8 +31,8 @@ _FILES_SCHEMA = T.StructType([
     T.StructField("bucket", T.IntegerType()),
     T.StructField("path", T.StringType()),
     T.StructField("size_bytes", T.LongType()),
-    T.StructField("rows", T.LongType()),        # null until counted
-    T.StructField("tombstones", T.LongType()),  # null until counted
+    T.StructField("rows", T.LongType()),
+    T.StructField("tombstones", T.LongType()),
     T.StructField("zone_stat_cols", T.ArrayType(T.StringType())),
     T.StructField("bloom_cols", T.ArrayType(T.StringType())),
 ])
@@ -55,23 +53,21 @@ def files_df(
     spark: SparkSession, table: SnapshotTable, manifest: dict | None = None
 ) -> DataFrame:
     """One row per live data file of the snapshot: bucket, relative
-    path, size, (rows, tombstones) when counted, and which secondary
-    indexes cover it."""
+    path, size, rows, tombstones, and which secondary indexes cover
+    it."""
     m = manifest or table.manifest()
-    meta = m.get("file_meta", {})
-    rows = []
-    for b, fs in sorted(m["files"].items(), key=lambda kv: int(kv[0])):
-        for rel in fs:
-            e = meta.get(rel, {})
-            rows.append((
-                int(b),
-                rel,
-                os.path.getsize(os.path.join(table.root, rel)),
-                e.get("rows"),
-                e.get("dels"),
-                sorted(e.get("bounds", {})),
-                sorted(e.get("bloom", {})),
-            ))
+    rows = [
+        (
+            e["bucket"],
+            rel,
+            os.path.getsize(os.path.join(table.root, rel)),
+            e["rows"],
+            e["dels"],
+            sorted(e.get("bounds", {})),
+            sorted(e.get("bloom", {})),
+        )
+        for rel, e in sorted(m["files"].items(), key=lambda kv: kv[1]["bucket"])
+    ]
     return spark.createDataFrame(rows, _FILES_SCHEMA)
 
 
@@ -90,13 +86,13 @@ def snapshots_df(spark: SparkSession, table: SnapshotTable) -> DataFrame:
         m = table.manifest(v)
         rows.append((
             m["version"],
-            m.get("parent"),
+            m["parent"],
             dt.datetime.utcfromtimestamp(os.path.getmtime(path)),
-            m.get("mode", "create"),
+            m["mode"],
             m["n_buckets"],
-            bool(m.get("one_row_per_key", m["version"] == 0)),
-            sum(len(fs) for fs in m["files"].values()),
-            json.dumps(m.get("summary", {}), sort_keys=True),
+            m["one_row_per_key"],
+            len(m["files"]),
+            json.dumps(m["summary"], sort_keys=True),
         ))
     return spark.createDataFrame(rows, _SNAPSHOTS_SCHEMA)
 
@@ -105,19 +101,15 @@ def partitions_df(
     spark: SparkSession, table: SnapshotTable, manifest: dict | None = None
 ) -> DataFrame:
     """Per-bucket rollup of ``files_df`` (Iceberg's ``.partitions``):
-    file count, bytes, and counted rows/tombstones (null-preserving —
-    a bucket with any uncounted file reports null rows, never a lie)."""
-    f = files_df(spark, table, manifest)
-    any_null = F.max(F.col("rows").isNull().cast("int")) == 1
+    file count, bytes, rows and tombstones."""
     return (
-        f.groupBy("bucket")
+        files_df(spark, table, manifest)
+        .groupBy("bucket")
         .agg(
             F.count(F.lit(1)).alias("n_files"),
             F.sum("size_bytes").alias("size_bytes"),
-            F.when(any_null, F.lit(None).cast("long"))
-            .otherwise(F.sum("rows")).alias("rows"),
-            F.when(any_null, F.lit(None).cast("long"))
-            .otherwise(F.sum("tombstones")).alias("tombstones"),
+            F.sum("rows").alias("rows"),
+            F.sum("tombstones").alias("tombstones"),
         )
         .orderBy("bucket")
     )

@@ -127,7 +127,7 @@ def _commit_rollup(
         F.lit("rollup").alias("_op"),
         F.lit(False).alias("_deleted"),
     ).withColumn("_bucket", rollup.bucket_expr(F.col(group_col), m))
-    _, files = rollup.stage_write(stored)
+    _, files = rollup.stage_write(stored, manifest=m)
     rollup.commit(
         new_files=files,
         replaced_buckets=None,

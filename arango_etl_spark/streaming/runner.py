@@ -133,9 +133,7 @@ def run_ingest(
                 cfg.rollup_root, cfg.rollup_group_col, gtype
             )
         base_m = table.manifest()
-        if rollup_table.current_version() == 0 and any(
-            base_m["files"].values()
-        ):
+        if rollup_table.current_version() == 0 and base_m["files"]:
             # a new rollup over a non-empty base starts from the base's
             # rows, fenced at the base's last epoch of this lineage (or
             # -1): a replay of that epoch is skipped, the next one counts

@@ -273,11 +273,13 @@ def test_cli_maintain_compact_expire_rebucket(spark, events_dir, tmp_path):
     run_cli("--events", events_dir, "--table", table_dir, "--cores", "4",
             "maintain", "--compact", "--min-delta-files", "2")
     assert SnapshotTable(table_dir).current_version() == v
-    # count retrofit + metadata-table inspection (no data scan)
+    # zone maps + metadata-only count + metadata-table inspection (no
+    # data scan)
     run_cli("--events", events_dir, "--table", table_dir, "--cores", "4",
-            "maintain", "--counts")
+            "maintain", "--analyze", "_seq_no")
     t = SnapshotTable(table_dir)
-    assert t.counts_complete() and t.row_count() == len(before)
+    assert all("_seq_no" in e["bounds"] for e in t.manifest()["files"].values())
+    assert t.row_count() == len(before)
     run_cli("--events", events_dir, "--table", table_dir, "--cores", "4",
             "inspect", "--kind", "partitions")
 

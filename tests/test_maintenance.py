@@ -14,7 +14,7 @@ from arango_etl_spark.plans.lakehouse import CommitConflict, SnapshotTable
 from arango_etl_spark.sources.cdc_generator import GeneratorConfig
 from arango_etl_spark.streaming.lineage import LineageLog
 from arango_etl_spark.streaming.runner import IngestConfig, run_ingest
-from tests.test_merge import PAYLOAD_SCHEMA, TS0, ev, mk_events
+from tests.test_merge import PAYLOAD_SCHEMA, TS0, ev, files_by_bucket, mk_events
 
 # poison test: one file per dir (epoch == file) and no cross-batch duplicate
 # deliveries, so "skip one epoch" == "exclude exactly one dir" in the oracle
@@ -30,11 +30,10 @@ def mk_table(tmp_path, name):
 
 
 def _meta_with(manifest, field, col):
-    """Files whose ``file_meta`` entry has ``field`` (bounds/bloom) for
+    """Files whose manifest entry has ``field`` (bounds/bloom) for
     ``col``."""
     return {
-        rel for rel, e in manifest.get("file_meta", {}).items()
-        if col in e.get(field, {})
+        rel for rel, e in manifest["files"].items() if col in e.get(field, {})
     }
 
 
@@ -186,7 +185,7 @@ def test_rebucket_layout_evolution(spark, tmp_path):
            for r in t.read_keys(spark, ["d3", "d5"]).collect()}
     assert got == {"d3": [99]}
     # data files are spread over more buckets than before
-    assert len(t.manifest()["files"]) > 4
+    assert len(files_by_bucket(t.manifest())) > 4
 
 
 def test_remove_orphan_files(spark, tmp_path):
@@ -378,17 +377,19 @@ def test_incremental_compaction_hot_buckets_only(spark, tmp_path):
             strategy="mor", compact_every=0,
         )
     pre = t.manifest()
-    assert all(len(pre["files"][str(b)]) == 4 for b in hot)
+    pre_b = files_by_bucket(pre)
+    assert all(len(pre_b[b]) == 4 for b in hot)
     before = sorted(map(tuple, t.read(spark).collect()))
 
     m = compact_buckets(spark, t, min_delta_files=4)
     assert m["compacted_buckets"] == hot
     assert m["one_row_per_key"] is False
-    for b, fs in pre["files"].items():
-        if int(b) in hot:
-            assert len(m["files"][b]) < len(fs)
+    m_b = files_by_bucket(m)
+    for b, fs in pre_b.items():
+        if b in hot:
+            assert len(m_b[b]) < len(fs)
         else:
-            assert m["files"][b] == fs  # carried over by reference
+            assert m_b[b] == fs  # carried over by reference
     assert sorted(map(tuple, t.read(spark).collect())) == before
     assert t.read_changes(spark, pre["version"], m["version"]).count() == 0
 

@@ -58,6 +58,14 @@ def mk_table(tmp_path, name="t", n_buckets=8):
     )
 
 
+def files_by_bucket(manifest):
+    """bucket -> the manifest's files in that bucket, in manifest order."""
+    out = {}
+    for rel, e in manifest["files"].items():
+        out.setdefault(e["bucket"], []).append(rel)
+    return out
+
+
 def state(spark, table):
     rows = table.read(spark).collect()
     return {
@@ -238,8 +246,8 @@ def test_cow_only_rewrites_touched_buckets(spark, tmp_path):
     # single-doc batch → exactly one bucket's file list changes
     one = mk_events(spark, [ev("update", "doc_1", 10_000, [9])])
     apply_changes(spark, t, one, strategy="cow")
-    m2 = t.manifest()
-    changed = [b for b in m2["files"] if m2["files"][b] != m1["files"].get(b)]
+    b1, b2 = files_by_bucket(m1), files_by_bucket(t.manifest())
+    changed = [b for b in b2 if b2[b] != b1.get(b)]
     assert len(changed) == 1
 
 
@@ -532,9 +540,8 @@ def commit_dirs(table):
     for f in os.listdir(table.meta_dir):
         if f.startswith("v") and f.endswith(".json"):
             with open(os.path.join(table.meta_dir, f)) as fh:
-                for fs in json.load(fh)["files"].values():
-                    referenced.update(os.path.dirname(os.path.dirname(r))
-                                      for r in fs)
+                referenced.update(os.path.dirname(os.path.dirname(r))
+                                  for r in json.load(fh)["files"])
     dirs = {os.path.join("data", d)
             for d in os.listdir(os.path.join(table.root, "data"))}
     return dirs, referenced

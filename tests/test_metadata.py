@@ -1,6 +1,6 @@
 """Metadata tables + manifest count stats: file inventory, commit
-history, per-bucket rollups, and SELECT count(*) answered without a
-data scan."""
+history, per-bucket rollups, SELECT count(*) answered without a data
+scan, and the manifest's one-entry-per-file format."""
 
 from __future__ import annotations
 
@@ -35,32 +35,27 @@ def _ingest(spark, t, n=120, strategy="mor"):
     )
 
 
-def _drop_file_meta(t):
-    """Re-write the current manifest as one written before per-file
-    metadata existed: same files, no ``file_meta``."""
-    m = t.manifest()
-    m.pop("file_meta", None)
-    with open(os.path.join(t.meta_dir, f"v{m['version']}.json"), "w") as f:
-        json.dump(m, f)
+def _entries_ok(m):
+    """Every live file's entry carries its bucket and footer counts."""
+    return all(
+        isinstance(e["bucket"], int) and e["rows"] >= e["dels"] >= 0
+        for e in m["files"].values()
+    )
 
 
 def test_analyze_retrofit_incremental_and_row_count(spark, tmp_path):
-    """analyze counts ONLY uncounted files (those of a manifest written
-    before commits recorded counts); with complete counts a flat snapshot
-    answers row_count with NO SparkSession at all — tombstones subtracted
-    exactly."""
+    """analyze adds zone-map bounds ONLY to files that lack them; every
+    commit counts its own files, so a flat snapshot answers row_count
+    with NO SparkSession at all — tombstones subtracted exactly."""
     t = mk_table(tmp_path, "cnt")
     _ingest(spark, t, n=120)
-    assert t.counts_complete()  # the commit read its files' footers
-    _drop_file_meta(t)
-    assert not t.counts_complete()
-    m1 = t.analyze(spark)
-    n_files_1 = sum(len(fs) for fs in m1["files"].values())
+    assert _entries_ok(t.manifest())  # the commit read its files' footers
+    m1 = t.analyze(spark, cols=["_seq_no"])
+    n_files_1 = len(m1["files"])
     assert m1["analyzed_files"] == n_files_1
-    assert t.counts_complete()
     # idempotent re-run: nothing missing, no commit
     v = t.current_version()
-    assert t.analyze(spark)["analyzed_files"] == 0
+    assert t.analyze(spark, cols=["_seq_no"])["analyzed_files"] == 0
     assert t.current_version() == v
 
     # second batch: its commit counts exactly its own new files
@@ -73,8 +68,11 @@ def test_analyze_retrofit_incremental_and_row_count(spark, tmp_path):
         ),
         batch_id=1, fence_stream_id="m", strategy="mor", compact_every=0,
     )
-    assert t.counts_complete()
-    assert t.analyze(spark)["analyzed_files"] == 0
+    m2 = t.manifest()
+    assert _entries_ok(m2)
+    assert t.analyze(spark, cols=["_seq_no"])["analyzed_files"] == (
+        len(m2["files"]) - n_files_1
+    )
     # MoR snapshot: metadata count impossible → needs a session, and the
     # fallback still agrees with read()
     with pytest.raises(ValueError):
@@ -84,28 +82,24 @@ def test_analyze_retrofit_incremental_and_row_count(spark, tmp_path):
     # compaction makes it flat and counts its rewritten files, so
     # count(*) is pure manifest arithmetic — no session argument
     compact(spark, t)
-    assert t.counts_complete()
+    assert _entries_ok(t.manifest())
     assert t.row_count() == 100
     assert t.analyze(spark)["analyzed_files"] == 0
 
 
 def test_files_and_partitions_tables(spark, tmp_path):
     """files/partitions metadata tables: totals agree with the manifest
-    and with counted stats; uncounted buckets (a manifest written before
-    commits recorded counts) report null rows (never a guess)."""
+    and with the counts every commit records."""
     t = mk_table(tmp_path, "meta")
     _ingest(spark, t, n=120)
     m = t.manifest()
     files = meta_df(spark, t, "files")
     got = files.collect()
-    assert len(got) == sum(len(fs) for fs in m["files"].values())
+    assert len(got) == len(m["files"])
     assert all(r["size_bytes"] > 0 for r in got)
     assert sum(r["rows"] for r in got) == 120  # counted at commit
     assert all(r["zone_stat_cols"] == [] for r in got)
-    _drop_file_meta(t)
-    assert all(r["rows"] is None for r in meta_df(spark, t, "files").collect())
-    parts = {r["bucket"]: r for r in meta_df(spark, t, "partitions").collect()}
-    assert all(p["rows"] is None for p in parts.values())
+    assert [r["bucket"] for r in got] == sorted(r["bucket"] for r in got)
 
     t.analyze(spark, cols=["_seq_no"], bloom_cols=["source"])
     files2 = meta_df(spark, t, "files").collect()
@@ -150,7 +144,7 @@ def test_write_time_counts(spark, tmp_path):
         ),
         batch_id=0, fence_stream_id="m", strategy="cow", compact_every=0,
     )
-    assert t.counts_complete()
+    assert _entries_ok(t.manifest())
     assert t.row_count() == 60  # metadata-only, no session
 
     apply_changes(
@@ -162,21 +156,23 @@ def test_write_time_counts(spark, tmp_path):
         ),
         batch_id=1, fence_stream_id="m", strategy="cow", compact_every=0,
     )
-    assert t.counts_complete()
+    assert _entries_ok(t.manifest())
     assert t.row_count() == 50  # still zero retrofit scans
 
-    # MoR deltas + incremental compaction keep the counts complete: the
+    # MoR deltas + incremental compaction keep the counts exact: the
     # compaction's commit counts its rewritten files
     apply_changes(
         spark, t,
         mk_events(spark, [ev("update", "d000", 999, [5])]),
         batch_id=2, fence_stream_id="m", strategy="mor", compact_every=0,
     )
-    assert t.counts_complete()
+    assert _entries_ok(t.manifest())
     from arango_etl_spark.operators.merge_into import compact_buckets
 
     m = compact_buckets(spark, t, min_delta_files=2)
-    assert t.counts_complete(m)
+    assert m["compacted_buckets"] and _entries_ok(m)
+    # one stored row per key again: rows − tombstones is the live count
+    assert sum(e["rows"] - e["dels"] for e in m["files"].values()) == 50
 
 
 def test_col_bounds_metadata_only(spark, tmp_path):
@@ -218,7 +214,7 @@ def test_col_bounds_metadata_only(spark, tmp_path):
 
 
 def test_counts_survive_incremental_compaction(spark, tmp_path):
-    """file_meta entries follow the file lifecycle: untouched buckets
+    """Manifest entries follow the file lifecycle: untouched buckets
     keep their entries across an incremental compaction; rewritten
     buckets drop theirs (metadata can never outlive or contradict the
     file list) and the compaction's commit counts the new files."""
@@ -247,22 +243,18 @@ def test_counts_survive_incremental_compaction(spark, tmp_path):
     pre = t.manifest()
     m = compact_buckets(spark, t, min_delta_files=2)
     assert m["compacted_buckets"] == [hot_b]
-    cold_files = {
-        rel for b, fs in pre["files"].items() if int(b) != hot_b for rel in fs
-    }
-    assert {r: m["file_meta"][r] for r in cold_files} == {
-        r: pre["file_meta"][r] for r in cold_files
-    }
-    hot_old = set(pre["files"][str(hot_b)])
-    hot_new = set(m["files"][str(hot_b)])
-    assert not hot_old & set(m["file_meta"])  # died with their files
-    assert hot_new <= set(m["file_meta"])     # counted at commit
+    cold = {r: e for r, e in pre["files"].items() if e["bucket"] != hot_b}
+    assert {r: m["files"][r] for r in cold} == cold
+    hot_old = set(pre["files"]) - set(cold)
+    hot_new = {r for r, e in m["files"].items() if e["bucket"] == hot_b}
+    assert hot_new and not hot_old & set(m["files"])  # died with their files
+    assert _entries_ok(m)                               # counted at commit
     assert t.analyze(spark)["analyzed_files"] == 0
     assert t.row_count(spark) == 160
 
 
 # ---------------------------------------------------------------------------
-# footer-read file_meta: fidelity against a Spark scan, zero jobs, lifecycle
+# footer-read entries: fidelity against a Spark scan, zero jobs, lifecycle
 
 _WIDE_SCHEMA = T.StructType([
     T.StructField("doc_id", T.StringType()),
@@ -328,7 +320,7 @@ def _same(a, b):
 def _assert_meta_matches_scan(spark, t):
     m = t.analyze(spark, cols=_WIDE_COLS)
     oracle = _scan_oracle(spark, t)
-    meta = m["file_meta"]
+    meta = m["files"]
     assert set(meta) == set(oracle) == {
         os.path.relpath(f, t.root) for f in t.data_files(m)
     }
@@ -371,19 +363,17 @@ def test_footer_meta_matches_spark_scan(spark, tmp_path):
 
 
 def test_analyze_runs_no_spark_job(spark, tmp_path):
-    """Counts and zone-map bounds come from parquet footers: neither
-    ``analyze(spark)`` nor ``analyze(spark, cols=[...])`` launches a job."""
+    """Zone-map bounds come from parquet footers: ``analyze(spark,
+    cols=[...])`` launches no Spark job."""
     t = mk_table(tmp_path, "nojob")
     _ingest(spark, t, n=120)
     compact(spark, t)
-    _drop_file_meta(t)
     st = spark.sparkContext.statusTracker()
 
     def last_job():
         return max(st.getJobIdsForGroup(None) or [-1])
 
     before = last_job()
-    assert t.analyze(spark)["analyzed_files"] > 0
     assert t.analyze(
         spark, cols=["_seq_no", "_event_ts", "source"]
     )["analyzed_files"] > 0
@@ -393,7 +383,7 @@ def test_analyze_runs_no_spark_job(spark, tmp_path):
 
 
 def test_rollback_keeps_file_meta(spark, tmp_path):
-    """rollback restores the target version's per-file metadata whole:
+    """rollback restores the target version's per-file entries whole:
     Bloom pruning in read_eq and the metadata-only row_count survive."""
     t = mk_table(tmp_path, "rbmeta")
     apply_changes(
@@ -435,3 +425,87 @@ def test_analyze_adds_bounds_across_calls(spark, tmp_path):
     got = t.read_range(spark, "_seq_no", lo=1000, hi=1399)
     assert got.count() == 400
     assert len(got.inputFiles()) <= len(t.data_files()) // 2
+
+
+# ---------------------------------------------------------------------------
+# manifest format: one entry per data file; the bucket-keyed format refused
+
+
+def test_manifest_stores_each_live_path_once(spark, tmp_path):
+    """The raw JSON of a MoR table with Bloom and zone-map fields names
+    each live data file exactly once, as a ``files`` key whose entry has
+    bucket, rows and dels; there is no second per-file map."""
+    t = mk_table(tmp_path, "fmt")
+    for b in range(3):
+        apply_changes(
+            spark, t,
+            mk_events(spark, [ev("update", f"d{i:03d}", 10 * b + 1, [b])
+                              for i in range(b * 20, b * 20 + 60)]),
+            batch_id=b, strategy="mor", compact_every=0,
+            bloom_cols=["source"],
+        )
+    t.analyze(spark, cols=["_seq_no"])
+    path = os.path.join(t.meta_dir, f"v{t.current_version()}.json")
+    with open(path) as f:
+        raw = f.read()
+    m = json.loads(raw)
+    assert "file_meta" not in m
+    live = [os.path.relpath(p, t.root) for p in t.data_files(m)]
+    assert len(live) > 8 and set(live) == set(m["files"])
+    assert all(raw.count(json.dumps(rel)) == 1 for rel in live)
+    for e in m["files"].values():
+        assert {"bucket", "rows", "dels"} <= set(e)
+        assert 0 <= e["bucket"] < m["n_buckets"]
+        assert set(e) <= {"bucket", "rows", "dels", "bounds", "bloom"}
+
+
+def _to_bucket_keyed(path):
+    """Re-write the manifest at ``path`` in the older format: ``files``
+    maps buckets to path lists, ``file_meta`` holds the rest, and v0
+    has no ``one_row_per_key``."""
+    with open(path) as f:
+        m = json.load(f)
+    files, meta = {}, {}
+    for rel, e in m["files"].items():
+        files.setdefault(str(e.pop("bucket")), []).append(rel)
+        meta[rel] = e
+    m["files"] = files
+    if meta:
+        m["file_meta"] = meta
+    if m["parent"] is None:
+        m.pop("one_row_per_key", None)
+    with open(path, "w") as f:
+        json.dump(m, f)
+
+
+def test_bucket_keyed_manifest_refused(spark, tmp_path):
+    """Every loader refuses an older bucket-keyed manifest with an error
+    that names the format, and neither GC deletes a file on such a table
+    (read as per-file entries, its bucket ids would be the only
+    'referenced paths' and every live file would look like garbage)."""
+    t = mk_table(tmp_path, "old")
+    _ingest(spark, t, n=60)
+    apply_changes(
+        spark, t, mk_events(spark, [ev("update", "d001", 7, [7])]),
+        branch="audit",
+    )
+    data = sorted(
+        os.path.join(d, f) for d, _, fs in os.walk(t.data_dir) for f in fs
+    )
+    for name in os.listdir(t.meta_dir):
+        if name.endswith(".json"):
+            _to_bucket_keyed(os.path.join(t.meta_dir, name))
+    with pytest.raises(ValueError, match="bucket-keyed"):
+        t.manifest()
+    with pytest.raises(ValueError, match="bucket-keyed"):
+        t.manifest(0)
+    with pytest.raises(ValueError, match="bucket-keyed"):
+        t.branch_manifest("audit")
+    with pytest.raises(ValueError, match="bucket-keyed"):
+        t.expire_snapshots(keep_last=1)
+    with pytest.raises(ValueError, match="bucket-keyed"):
+        t.remove_orphan_files(older_than_secs=0)
+    assert sorted(
+        os.path.join(d, f) for d, _, fs in os.walk(t.data_dir) for f in fs
+    ) == data
+    assert len(os.listdir(t.meta_dir)) == 4  # v0, v1, branch, _current

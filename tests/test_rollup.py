@@ -250,10 +250,8 @@ def test_rollup_runner_keeps_write_time_blooms(spark, tmp_path):
     )
     run_ingest(spark, feed, base, str(tmp_path / "ckpt"), cfg=cfg)
     m = base.manifest()
-    rels = [rel for fs in m["files"].values() for rel in fs]
-    assert rels and m["summary"]["fence.s"] == 1
-    meta = m.get("file_meta", {})
-    assert all("source" in meta[r].get("bloom", {}) for r in rels)
+    assert m["files"] and m["summary"]["fence.s"] == 1
+    assert all("source" in e.get("bloom", {}) for e in m["files"].values())
 
 
 def test_rollup_runner_seeds_new_rollup_from_non_empty_base(spark, tmp_path):

@@ -105,6 +105,33 @@ def test_orphan_gc_spares_parked_branch(spark, tmp_path):
     assert state(spark, t) == {"a": ([1], 1), "b": ([2], 1)}
 
 
+def test_expire_snapshots_spares_parked_branch(spark, tmp_path):
+    """A parked branch reads the files it carried over from its base
+    version: a compaction plus an expiry of that version must not delete
+    them while the branch exists."""
+    t = mk_table(tmp_path, "wap5")
+    apply_changes(
+        spark, t,
+        mk_events(spark, [ev("insert", f"d{i}", 1, [i]) for i in range(20)]),
+        compact_every=0,
+    )
+    apply_changes(
+        spark, t, mk_events(spark, [ev("update", "d0", 2, [99])]),
+        branch="audit",
+    )
+    compact(spark, t)
+    t.expire_snapshots(keep_last=1)
+    got = {
+        r["doc_id"]: list(r["tokens"])
+        for r in t.read_branch(spark, "audit").collect()
+    }
+    assert got == {f"d{i}": [99 if i == 0 else i] for i in range(20)}
+    t.abandon_branch("audit")
+    assert {k: v[0] for k, v in state(spark, t).items()} == {
+        f"d{i}": [i] for i in range(20)
+    }
+
+
 def test_write_audit_publish_flow(spark, tmp_path):
     """Good batch publishes; a batch violating an expectation is rejected
     with the table byte-identical to before (staged files gone)."""
