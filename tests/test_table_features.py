@@ -311,7 +311,7 @@ def test_read_changes_empty_across_compaction(spark, tmp_path):
 
 
 def test_read_changes_prunes_untouched_buckets(spark, tmp_path):
-    """Only buckets whose manifest file lists differ are scanned: with
+    """Only buckets whose manifest file sets differ are scanned: with
     one key updated under MoR, the diff must open strictly fewer files
     than two full-table reads."""
     t = mk_table(tmp_path, "cdf3", n_buckets=8)
