@@ -314,9 +314,10 @@ def embedding_near_dup_pairs(
 ) -> DataFrame:
     """Embedding-cosine near-duplicate pairs: multi-table hyperplane-LSH
     bucketing (same machinery as similarity search) proposes candidates;
-    exact cosine confirms >= threshold. Never scans the cross product."""
+    exact cosine confirms >= threshold (a zero-norm vector's cosine is
+    NULL, so it pairs with nothing). Never scans the cross product."""
     from arango_etl_spark.operators.similarity import (
-        _dot,
+        _cosine,
         _norm,
         hyperplane_signs,
     )
@@ -366,9 +367,7 @@ def embedding_near_dup_pairs(
         .withColumn(
             "cos_sim",
             F.round(
-                _dot(F.col("_va"), F.col("_vb"))
-                / (F.col("_na") * F.col("_nb")),
-                6,
+                _cosine(F.col("_va"), F.col("_vb"), F.col("_na"), F.col("_nb")), 6
             ),
         )
         .where(F.col("cos_sim") >= threshold)

@@ -49,7 +49,6 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from arango_etl_spark.operators import dedup_window
 from arango_etl_spark.plans.lakehouse import (
     SnapshotTable,
     _footer_meta,
@@ -61,8 +60,9 @@ from arango_etl_spark.plans.lakehouse import (
 CDC_META = ["op", "seq_no", "batch_id", "event_ts"]
 
 # one entry, still called through the dict: perfbench/tracing.py patches
-# DEDUP_STRATEGIES["max_by"] to time the dedup_window layer
-DEDUP_STRATEGIES = {"max_by": dedup_window.dedup_events}
+# DEDUP_STRATEGIES["max_by"] to time the intra-batch LWW reduce (its
+# "dedup_window" layer)
+DEDUP_STRATEGIES = {"max_by": lww_resolve}
 
 
 @dataclass
@@ -74,9 +74,9 @@ class MergeResult:
     new_columns: list[str] = field(default_factory=list)
 
 
-def _as_stored(deduped: DataFrame, key_col: str, payload: list[str]) -> DataFrame:
-    """Winning events → stored-row layout (payload + META_COLS)."""
-    return deduped.select(
+def _as_stored(events: DataFrame, key_col: str, payload: list[str]) -> DataFrame:
+    """Events → stored-row layout (payload + META_COLS)."""
+    return events.select(
         key_col,
         *payload,
         F.col("seq_no").alias("_seq_no"),
@@ -180,8 +180,11 @@ def apply_changes(
         if f_.name not in events.columns:
             events = events.withColumn(f_.name, F.lit(None).cast(f_.dataType))
 
-    deduped = DEDUP_STRATEGIES["max_by"](events, key_col=key_col)
-    src = _as_stored(deduped, key_col, payload).withColumn(
+    # events → stored layout, then one winner per key under the one LWW
+    # order (lww_resolve: max_by with map-side partial combine, so a hot
+    # key pre-reduces on every input partition before the shuffle)
+    stored = _as_stored(events, key_col, payload)
+    src = DEDUP_STRATEGIES["max_by"](stored, key_col=key_col).withColumn(
         "_bucket", table.bucket_expr(F.col(key_col), manifest)
     )
     staged_rel, staged = table.stage_write(src, manifest=manifest)

@@ -25,20 +25,21 @@ engines (strict ``<`` left fold).
 Plan shape:
 - MODEL: every quantizer expression is ONE parsed SQL expression whose
   size does not depend on kc, m, ksub or dsub. Each model array
-  (codebooks, coarse centroids) enters as ``from_json('<json>',
-  'array<…>')``, which ConstantFolding turns into a single Literal, and
-  the per-centroid / per-subspace loops are ``transform``/``zip_with``
-  lambdas in the SQL text. Building a plan costs a handful of py4j calls
-  and the analysed plan stays small, whatever the model's size.
-- BUILD: one distributed ``orderBy(md5(id)).limit(ksub)`` seed scan
-  (TakeOrderedAndProject, the same hash-seeded determinism as IVF);
+  (codebooks, coarse centroids) enters through ``similarity._model`` —
+  ``from_json('<json>', 'array<…>')``, which ConstantFolding turns into
+  a single Literal — and the per-centroid / per-subspace loops are
+  ``transform``/``zip_with`` lambdas in the SQL text. Building a plan
+  costs a handful of py4j calls and the analysed plan stays small,
+  whatever the model's size.
+- BUILD: one distributed ``similarity._seeds`` scan (TakeOrderedAndProject
+  over md5 of the id, the same hash-seeded determinism as IVF);
   codebooks are a driver-side constant of m × ksub × dsub small ints.
 - ENCODE: map-only — per subspace an array_min over ksub (dist, code)
   structs against the folded codebook literal; no shuffle, no UDF.
 - QUERY (ADC): map-only distance over the codes table + the distributed
-  two-phase top-k (WindowGroupLimit pre-filter keyed by the REAL
-  spark_partition_id column, then a bounded array_sort merge — the
-  similarity._topk_per_query shape, specialized to integer distances).
+  two-phase top-k ``similarity._topk_per_query`` (WindowGroupLimit
+  pre-filter keyed by the REAL spark_partition_id column, then a bounded
+  array_sort merge) over the integer distance.
 """
 
 from __future__ import annotations
@@ -46,10 +47,10 @@ from __future__ import annotations
 import json
 from dataclasses import dataclass
 
-from pyspark.sql import Column, DataFrame, Window
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-from arango_etl_spark.operators.similarity import _portable_hash60_str
+from arango_etl_spark.operators.similarity import _model, _seeds, _topk_per_query
 
 
 @dataclass
@@ -63,14 +64,6 @@ class PqIndex:
 def _q(name: str) -> str:
     """A caller-supplied column name, backtick-quoted for SQL text."""
     return "`" + name.replace("`", "``") + "`"
-
-
-def _model(value: list, sql_type: str) -> str:
-    """SQL text of a driver-side model array: one ``from_json`` over its
-    JSON text, folded by ConstantFolding into a single Literal. One
-    parsed expression with no per-element py4j round trips or per-element
-    expression nodes, whatever the array's size."""
-    return f"from_json('{json.dumps(value)}', '{sql_type}')"
 
 
 def _sq_l2(a: str, b: str) -> str:
@@ -132,14 +125,7 @@ def build_pq_index(
     whole table map-only. Requires dim % m == 0."""
     from arango_etl_spark.operators.dedup import _spread
 
-    # the (md5, id) order is total, so the seeds do not depend on the
-    # partitioning: collect them before the spread's shuffle
-    seeds = (
-        emb.select(id_col, vec_col, _portable_hash60_str(F.col(id_col)).alias("_h"))
-        .orderBy("_h", id_col)
-        .limit(ksub)
-        .collect()
-    )
+    seeds = _seeds(emb, id_col, vec_col, ksub)
     emb = _spread(emb)  # encode argmin is the CPU; single-file inputs
     # would otherwise run it in ONE task (no-op at table scale)
     if not seeds:
@@ -191,51 +177,6 @@ def _adc_from_lut(m: int, lut_col: str = "_lut") -> Column:
     )
 
 
-def _topk_by_distance(
-    scored: DataFrame,
-    k: int,
-    id_col: str,
-    query_id_col: str,
-    single_query: bool,
-) -> DataFrame:
-    """Shared top-k tail over a (query_id, id, _d) frame: ascending
-    integer distance, ties to the lowest id. single_query=True ->
-    global TakeOrderedAndProject (no shuffle); multi-query -> two-phase
-    top-k (WindowGroupLimit keyed by the real spark_partition_id
-    column, bounded array_sort merge — similarity._topk_per_query's
-    shape specialized to integer distances)."""
-    if single_query:
-        return (
-            scored.orderBy(F.col("_d").asc(), F.col(id_col).asc())
-            .limit(k)
-            .select(query_id_col, id_col, F.col("_d").alias("adc_dist"))
-        )
-    local_w = Window.partitionBy("_pid", query_id_col).orderBy(
-        F.col("_d").asc(), F.col(id_col).asc()
-    )
-    local = (
-        scored.withColumn("_pid", F.spark_partition_id())
-        .withColumn("_rk", F.row_number().over(local_w))
-        .where(F.col("_rk") <= k)
-    )
-    merged = local.groupBy(query_id_col).agg(
-        F.slice(
-            F.array_sort(
-                F.collect_list(
-                    F.struct(F.col("_d").alias("_d"), F.col(id_col).alias("_id"))
-                )
-            ),
-            1,
-            k,
-        ).alias("_top")
-    )
-    return merged.select(query_id_col, F.explode("_top").alias("_t")).select(
-        query_id_col,
-        F.col("_t._id").alias(id_col),
-        F.col("_t._d").alias("adc_dist"),
-    )
-
-
 def pq_topk(
     index: PqIndex,
     query: DataFrame,
@@ -261,7 +202,8 @@ def pq_topk(
     scored = index.codes.crossJoin(F.broadcast(qside)).select(
         query_id_col, id_col, _adc_from_lut(m).alias("_d")
     )
-    return _topk_by_distance(scored, k, id_col, query_id_col, single_query)
+    top = _topk_per_query(scored, k, query_id_col, id_col, single_query)
+    return top.withColumnRenamed("_d", "adc_dist")
 
 
 @dataclass
@@ -298,9 +240,9 @@ def build_ivfpq_index(
     (parity:ivfpq_topk_multi), no float-fold jitter anywhere.
 
     Plan shape:
-    - seeds: ONE ``orderBy(md5(id)).limit(max(kc, ksub))`` TakeOrdered
-      scan; centroids and codebooks are driver-side constants that enter
-      the plan as folded literals (module docstring).
+    - seeds: ONE ``_seeds`` TakeOrdered scan of max(kc, ksub) rows;
+      centroids and codebooks are driver-side constants that enter the
+      plan as folded literals (module docstring).
     - assign + residual: MAP-ONLY — an array_min over (dist, cell,
       centroid) structs against the centroid literal (:func:`_scored`);
       the residual is a zip_with against the winning centroid it carries.
@@ -315,16 +257,8 @@ def build_ivfpq_index(
     # the kc smallest-(md5, id) rows, residual-codebook seeds the ksub
     # smallest — the same ordering, so collect max(kc, ksub) rows once
     # and derive the residual seeds driver-side in exact int arithmetic
-    # (identical argmin/tie-break as the Spark expression). Collected
-    # before the spread: the order is total, so no shuffle is needed.
-    seeds = (
-        emb.select(
-            id_col, vec_col, _portable_hash60_str(F.col(id_col)).alias("_h")
-        )
-        .orderBy("_h", id_col)
-        .limit(max(kc, ksub))
-        .collect()
-    )
+    # (identical argmin/tie-break as the Spark expression).
+    seeds = _seeds(emb, id_col, vec_col, max(kc, ksub))
     emb = _spread(emb)  # assign/residual/encode are the CPU; see
     # build_pq_index (no-op once input files >= parallelism)
     if not seeds:
@@ -367,11 +301,13 @@ def build_ivfpq_index(
         }
         coarse = [by_cell.get(c, v) for c, v in enumerate(coarse)]
     # the nearest centroid rides along in the argmin struct, so the
-    # centroid literal enters the plan once
+    # centroid literal enters the plan once. `cell` is non-nullable (the
+    # coalesce never fires: kc >= 1), so a probe's equi-join on it infers
+    # no isnotnull filter that would evaluate the argmin a second time.
     near = _nearest(_q(vec_col), _model(coarse, "array<array<int>>"))
     residuals = emb.select(id_col, vec_col, F.expr(near).alias("_n")).select(
         id_col,
-        F.col("_n.c").alias("cell"),
+        F.coalesce(F.col("_n.c"), F.lit(0)).alias("cell"),
         F.expr(f"zip_with({_q(vec_col)}, _n.w, (_x, _y) -> _x - _y)").alias(
             "_res"
         ),
@@ -497,8 +433,8 @@ def ivfpq_topk(
         )
     )
     if rerank <= 0:
-        return _topk_by_distance(scored, k, id_col, query_id_col,
-                                 single_query)
+        top = _topk_per_query(scored, k, query_id_col, id_col, single_query)
+        return top.withColumnRenamed("_d", "adc_dist")
     if src is None:
         raise ValueError("rerank > 0 requires src (the original vectors)")
     # IVFADC+R (Jégou/Tavenard/Douze/Amsaleg 2011): ADC is a LOSSY
@@ -509,8 +445,8 @@ def ivfpq_topk(
     # broadcasts it against ``src`` — at table scale that is a
     # bucket-pruned point-lookup join, never a second full scan. The
     # final top-k is exact over the shortlist; ties to the lowest id.
-    short = _topk_by_distance(
-        scored, int(rerank), id_col, query_id_col, single_query
+    short = _topk_per_query(
+        scored, int(rerank), query_id_col, id_col, single_query
     ).select(query_id_col, id_col)
     exact = (
         src.withColumnsRenamed({id_col: "_sid", src_vec_col: "_sv"})
@@ -526,8 +462,8 @@ def ivfpq_topk(
             F.expr(_sq_l2("_qq", "_sv")).alias("_d"),
         )
     )
-    out = _topk_by_distance(exact, k, id_col, query_id_col, single_query)
-    return out.withColumnRenamed("adc_dist", "sq_dist")
+    out = _topk_per_query(exact, k, query_id_col, id_col, single_query)
+    return out.withColumnRenamed("_d", "sq_dist")
 
 
 def save_ivfpq_index(index: IvfPqIndex, path: str) -> None:

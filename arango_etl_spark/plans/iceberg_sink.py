@@ -150,9 +150,11 @@ def merge_batch(
 ) -> bool:
     """Apply one deduped batch via MERGE INTO; returns False if fenced.
 
-    `deduped_events` must already be one winning event per doc_id (use
-    operators.dedup_window.dedup_events) with the CDC columns
-    (op, seq_no, batch_id, event_ts) present.
+    `deduped_events` must already be one winning event per doc_id (e.g.
+    plans.lakehouse.lww_resolve over the events with their LWW columns
+    renamed to the stored ``_seq_no``/``_event_ts``/``_batch_id``/``_op``
+    and back) with the CDC columns (op, seq_no, batch_id, event_ts)
+    present.
     """
     if fence_stream_id is not None and batch_id is not None:
         last = last_batch_id(spark, ident, fence_stream_id)

@@ -6,7 +6,9 @@ are scale-independent (no thresholds or dims tuned to one sf).
 
 Run:  python scripts/check_oracles.py [--split] [sf_dir] [name ...]
 sf_dir defaults to the sf0.001 test-data dir; trailing query names restrict
-the sweep to those pairs (same comparison, same exit code).
+the sweep to those pairs (same comparison, same exit code). The session
+runs local[SPARK_GRAFT_CPUS] with as many shuffle partitions (the host's
+CPU count when the variable is unset), as the Tier-1 run does.
 --split runs each leg under its own Spark job group and prints one JSON
 line per leg in place of its "ok" line: the DataFrame build, final-plan
 (optimize + physical planning) and collect seconds, the optimized plan's
@@ -41,6 +43,7 @@ from __future__ import annotations
 
 import json
 import math
+import os
 import sys
 import time
 from pathlib import Path
@@ -115,7 +118,10 @@ def main() -> int:
     sf_dir = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.001"
     queries = entry_mod.queries()
     names = sys.argv[2:] or sorted(queries)
-    spark = get_spark("check_oracles", cores=8, shuffle_partitions=8)
+    # sized like the Tier-1 run: SPARK_GRAFT_CPUS cores and as many
+    # shuffle partitions (the host's CPU count when unset)
+    cpus = int(os.environ.get("SPARK_GRAFT_CPUS") or os.cpu_count())
+    spark = get_spark("check_oracles", cores=cpus, shuffle_partitions=cpus)
     con = duckdb.connect()
     for t in TABLES:
         con.execute(f"CREATE VIEW {t} AS SELECT * FROM '{sf_dir}/{t}.parquet'")

@@ -23,8 +23,16 @@ def test_iceberg_adapter_contract(spark, tmp_path):
         pytest.skip("iceberg-spark-runtime not on classpath (expected here)")
     from pyspark.sql import functions as F
 
-    from arango_etl_spark.operators.dedup_window import dedup_events
+    from arango_etl_spark.plans.lakehouse import lww_resolve
     from tests.test_merge import ev, mk_events
+
+    stored = {c: "_" + c for c in ("seq_no", "event_ts", "batch_id", "op")}
+
+    def dedup_events(events):
+        """One winning event per doc_id: lww_resolve over the LWW columns'
+        stored names."""
+        return lww_resolve(events.withColumnsRenamed(stored), "doc_id") \
+            .withColumnsRenamed({v: k for k, v in stored.items()})
 
     ident = "iceberg.db.tok_seq_test"
     iceberg_sink.create_table(spark, ident, n_buckets=8)

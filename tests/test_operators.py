@@ -1187,6 +1187,55 @@ def test_semantic_dedup_zero_norm_vector_is_inert(spark):
     assert out == {1: True, 2: True, 3: False, 4: True}
 
 
+def test_zero_norm_embeddings_rank_last_in_every_cosine_consumer(spark):
+    """A zero-norm embedding makes cosine 0/0, which raises
+    DIVIDE_BY_ZERO under ANSI. Every cosine consumer takes it as NULL:
+    the top-k ranks such a candidate below every real one, the IVF
+    argmax never assigns a real vector to a zero centroid, and a
+    near-dup pair never includes it."""
+    zeros = [(i, [0.0, 0.0, 0.0, 0.0]) for i in range(4)]  # lowest ids
+    real = [
+        (4, [1.0, 0.0, 0.0, 0.0]),
+        (5, [1.0, 1.0, 0.0, 0.0]),
+        (6, [0.0, 1.0, 0.0, 0.0]),
+        (7, [0.0, 0.0, 1.0, 0.0]),
+        (8, [1.0, 0.0, 1.0, 1.0]),
+        (9, [0.0, 0.0, 0.0, 1.0]),
+    ]
+    df = spark.createDataFrame(zeros + real, "vec_id long, embedding array<double>")
+    q = spark.createDataFrame(
+        [(100, [1.0, 0.5, 0.25, 0.125])], "query_id long, embedding array<double>"
+    )
+    qv = [1.0, 0.5, 0.25, 0.125]
+    exact = sorted(
+        (
+            -round(sum(a * b for a, b in zip(v, qv))
+                   / (sum(a * a for a in v) ** 0.5 * sum(b * b for b in qv) ** 0.5), 4),
+            vid,
+        )
+        for vid, v in real
+    )
+    want = [(vid, -ns) for ns, vid in exact] + [(i, None) for i in range(4)]
+
+    def got(out):
+        return [(r["vec_id"], r["cos_sim"]) for r in out.collect()]
+
+    for single in (True, False):
+        assert got(similarity.cosine_topk(df, q, k=10, single_query=single)) == want
+    lsh = got(similarity.lsh_cosine_topk(df, q, dim=4, k=10, n_planes=2, n_tables=4))
+    nulls = [s is None for _, s in lsh]
+    assert nulls == sorted(nulls), lsh
+    # every vector a centroid: real vectors pick a real centroid
+    index = similarity.build_ivf_index(df, n_centroids=10)
+    zero_cells = {c for c, v in index.centroids if not any(v)}
+    assert len(zero_cells) == 4
+    cells = {r["vec_id"]: r["_cluster"] for r in index.clustered.collect()}
+    assert all(cells[vid] not in zero_cells for vid, _ in real), cells
+    assert got(similarity.ivf_query(index, q, k=10, n_probe=10)) == want
+    pairs = dedup.embedding_near_dup_pairs(df, dim=4, threshold=0.5, n_planes=2, n_tables=4)
+    assert all(a >= 4 and b >= 4 for a, b, _ in pairs.collect())
+
+
 def test_semantic_dedup_oversized_cell_fails_fast(spark):
     """r5 VERDICT #1: an oversized cell must fail fast with an
     actionable message instead of silently running a quadratic

@@ -5,10 +5,12 @@ map-side partial phases, hot paths stay in WholeStageCodegen
 
 from __future__ import annotations
 
+import re
+
 from pyspark.sql import functions as F
 
-from arango_etl_spark.operators.dedup_window import dedup_events
 from arango_etl_spark.plans import explain
+from arango_etl_spark.plans.lakehouse import lww_resolve
 from arango_etl_spark import parity
 
 SF = "/root/testdata/sf0.01"
@@ -36,11 +38,12 @@ def test_broadcast_join_for_small_side(spark):
 
 
 def test_dedup_has_partial_aggregation(spark):
-    """The max_by dedup must pre-reduce map-side (hot-key safety)."""
+    """The max_by LWW reduce (the merge's intra-batch dedup) must
+    pre-reduce map-side (hot-key safety)."""
     ev = spark.createDataFrame(
-        [("a", 1, 0, "i")], "doc_id string, seq_no long, batch_id long, op string"
-    ).withColumn("event_ts", F.current_timestamp())
-    df = dedup_events(ev)
+        [("a", 1, 0, "i")], "doc_id string, _seq_no long, _batch_id long, _op string"
+    ).withColumn("_event_ts", F.current_timestamp())
+    df = lww_resolve(ev, "doc_id")
     plan = explain.physical_plan(df)
     # max_by over a struct payload aggregates sort-based, but the partial
     # (map-side) phase must be present: "partial_max_by" before the Exchange
@@ -261,6 +264,70 @@ def test_ivf_query_launches_no_jobs(spark):
     _ = explain.physical_plan(df)  # force full planning, still no jobs
     after = len(st.getJobIdsForGroup(None) or [])
     assert after - before == 0
+
+
+def _model_blanked(plan: str) -> str:
+    """The plan string with the folded model literals' printed values
+    (int or double arrays, structs of them) and the expression ids
+    blanked."""
+    plan = re.sub(r"\[[\d\[\], .E-]*\]", "[]", plan)
+    return re.sub(r"#\d+L?", "#", plan)
+
+
+def test_float_ann_plan_size_does_not_depend_on_model_size(spark):
+    """IVF centroids and LSH hyperplanes enter as one folded literal each
+    (the PQ form): growing n_centroids 4 -> 16 and n_planes 8 -> 48 must
+    leave the optimized plans (model values blanked) the same size, so no
+    per-centroid or per-plane expression tree creeps back in."""
+    from arango_etl_spark.operators.similarity import (
+        build_ivf_index,
+        hyperplane_signs,
+        ivf_query,
+    )
+
+    e = spark.read.parquet("/root/testdata/sf0.001/embeddings.parquet")
+    dim = len(e.first()["embedding"])
+    q = e.where(F.col("vec_id").isin(0, 1)).select(
+        F.col("vec_id").alias("query_id"), "embedding"
+    )
+    sizes = {}
+    for n_centroids, n_planes in ((4, 8), (16, 48)):
+        index = build_ivf_index(e, n_centroids=n_centroids)
+        bits = e.select(
+            "vec_id",
+            hyperplane_signs(F.col("embedding"), dim, n_planes).alias("_bits"),
+        )
+        for name, df in (
+            ("clustered", index.clustered),
+            ("ivf_query", ivf_query(index, q, k=5, n_probe=2)),
+            ("hyperplane_signs", bits),
+        ):
+            plan = df._jdf.queryExecution().optimizedPlan().toString()
+            assert "from_json" not in plan, (name, plan[:2000])
+            sizes.setdefault(name, []).append(len(_model_blanked(plan)))
+    for name, (small, big) in sizes.items():
+        assert abs(big - small) <= 16, (name, small, big)
+
+
+def test_ivfpq_probe_evaluates_coarse_argmin_once(spark):
+    """A probe over a fresh (never saved) IVFADC index joins the codes on
+    ``cell``. A nullable ``cell`` would make Spark infer
+    ``isnotnull(cell)`` and push it below the build, evaluating the
+    coarse argmin (kc sqL2 folds per row) twice: once in that Filter and
+    once in the Project. The coarse argmin is the one array_min over a
+    transform of a folded literal."""
+    from arango_etl_spark.operators.pq import build_ivfpq_index, ivfpq_topk
+    from tests.test_pq import M, _fixture
+
+    fx = _fixture(spark)
+    index = build_ivfpq_index(fx, kc=4, m=M, ksub=4)
+    q = fx.where(F.col("vec_id").isin(0, 1)).select(
+        F.col("vec_id").alias("query_id"), "qvec"
+    )
+    plan = ivfpq_topk(index, q, k=3, n_probe=2)._jdf.queryExecution()
+    plan = plan.optimizedPlan().toString()
+    assert len(re.findall(r"array_min\(transform\(\[", plan)) == 1, plan[:4000]
+    assert "isnotnull(array_min" not in plan, plan[:4000]
 
 
 def test_single_query_topk_is_take_ordered(spark):
