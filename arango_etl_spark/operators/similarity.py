@@ -649,8 +649,10 @@ def semantic_dedup(
     )
     va, vb = F.col("_va"), F.col("_vb")  # _dot casts per element
     # zero-norm guard (see docstring): _cosine is NULL there, and NULL
-    # fails the >= filter, so zero-norm rows are inert
-    sim = _cosine(va, vb, _norm(va), _norm(vb))
+    # fails the >= filter; a NaN component would give NaN, which Spark
+    # orders ABOVE any number and would satisfy sim >= τ — nanvl folds
+    # that to 0.0
+    sim = F.nanvl(_cosine(va, vb, _norm(va), _norm(vb)), F.lit(0.0))
     dropped = (
         left.join(right, "cell")
         .where(F.col("_b") < F.col("_a"))
