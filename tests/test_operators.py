@@ -3,6 +3,8 @@ family, similarity search, text analysis, multimodal plumbing."""
 
 from __future__ import annotations
 
+import math
+
 import pytest
 from pyspark.sql import functions as F
 
@@ -1207,15 +1209,12 @@ def test_zero_norm_embeddings_rank_last_in_every_cosine_consumer(spark):
         [(100, [1.0, 0.5, 0.25, 0.125])], "query_id long, embedding array<double>"
     )
     qv = [1.0, 0.5, 0.25, 0.125]
-    exact = sorted(
-        (
-            -round(sum(a * b for a, b in zip(v, qv))
-                   / (sum(a * a for a in v) ** 0.5 * sum(b * b for b in qv) ** 0.5), 4),
-            vid,
-        )
-        for vid, v in real
-    )
-    want = [(vid, -ns) for ns, vid in exact] + [(i, None) for i in range(4)]
+
+    def cos(v):
+        return sum(a * b for a, b in zip(v, qv)) / (math.hypot(*v) * math.hypot(*qv))
+
+    ranked = sorted(real, key=lambda r: (-cos(r[1]), r[0]))
+    want = [(vid, round(cos(v), 4)) for vid, v in ranked] + [(i, None) for i in range(4)]
 
     def got(out):
         return [(r["vec_id"], r["cos_sim"]) for r in out.collect()]
