@@ -878,13 +878,7 @@ class SnapshotTable:
         m_to = self.manifest(to_version)
         key_col = m_to["key_col"]
         to_schema = m_to["schema"]
-        buckets: list[int] | None = None
-        if m_from["n_buckets"] == m_to["n_buckets"]:
-            fa, fb = m_from["files"], m_to["files"]
-            buckets = sorted(
-                {(fa.get(r) or fb[r])["bucket"] for r in fa.keys() ^ fb.keys()}
-            )
-
+        _, buckets = changed_files(m_from, m_to)
         old_state, new_state = (
             _live(self.read_stored(
                 spark, buckets=buckets, manifest={**m, "schema": to_schema}
@@ -1187,6 +1181,22 @@ def _chunk_bounds(md, i: int, dt: T.DataType) -> list | None:
     if not los:
         return [None, None]
     return [min(los, key=_nan_last), max(his, key=_nan_last)]
+
+
+def changed_files(
+    m_from: dict, m_to: dict
+) -> tuple[list[str], list[int] | None]:
+    """What snapshot ``m_to`` changed against ``m_from``: the files it
+    added, and the buckets whose file sets differ (None across a
+    rebucket, where bucket ids are not comparable). A bucket outside
+    that list holds the same files, so the same rows, in both."""
+    fa, fb = m_from["files"], m_to["files"]
+    buckets = None
+    if m_from["n_buckets"] == m_to["n_buckets"]:
+        buckets = sorted(
+            {(fa.get(r) or fb[r])["bucket"] for r in fa.keys() ^ fb.keys()}
+        )
+    return sorted(fb.keys() - fa.keys()), buckets
 
 
 def fence_of(manifest: dict, stream_id: str, run_id: str | None) -> int | None:

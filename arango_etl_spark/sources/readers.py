@@ -27,6 +27,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from arango_etl_spark.operators.merge_into import CDC_META
 from arango_etl_spark.streaming.runner import EVENT_SCHEMA
 
 
@@ -183,6 +184,13 @@ def read_events_parquet(
 _DBZ_OPS = {"c": "insert", "r": "insert", "u": "update", "d": "delete"}
 
 
+def debezium_value_schema(
+    schema: T.StructType = EVENT_SCHEMA,
+) -> T.StructType:
+    """The row image of event schema ``schema``: its fields minus CDC_META."""
+    return T.StructType([f for f in schema if f.name not in CDC_META])
+
+
 def debezium_envelope_schema(value_schema: T.StructType) -> T.StructType:
     """Envelope schema for a given row-image schema, accepting BOTH the
     Kafka-Connect shape ({"payload": {...}}) and the unwrapped shape
@@ -236,11 +244,8 @@ def debezium_to_events(parsed: DataFrame, value_schema: T.StructType) -> DataFra
     seq = F.coalesce(pick("source").getField("lsn"), pick("ts_ms"))
     return parsed.where(dbz_op.isin(*_DBZ_OPS.keys())).select(
         mapped_op.alias("op"),
-        row_image.getField("doc_id").alias("doc_id"),
+        *[row_image.getField(f.name).alias(f.name) for f in value_schema],
         seq.cast("long").alias("seq_no"),
-        row_image.getField("tokens").alias("tokens"),
-        row_image.getField("n_tok").alias("n_tok"),
-        row_image.getField("source").alias("source"),
         F.lit(None).cast("long").alias("batch_id"),
         F.timestamp_millis(pick("ts_ms")).alias("event_ts"),
     )
@@ -274,16 +279,9 @@ def read_events_debezium(
     (from_json + coalesce + CASE), no UDFs; the PERMISSIVE corrupt
     channel keeps poison lines replayable via ``quarantine``.
 
-    Default value_schema matches the engine's document payload
-    (doc_id/tokens/n_tok/source)."""
-    value_schema = value_schema or T.StructType(
-        [
-            T.StructField("doc_id", T.StringType()),
-            T.StructField("tokens", T.ArrayType(T.IntegerType())),
-            T.StructField("n_tok", T.IntegerType()),
-            T.StructField("source", T.StringType()),
-        ]
-    )
+    Default value_schema: ``debezium_value_schema()``, the engine's
+    document payload."""
+    value_schema = value_schema or debezium_value_schema()
     env = debezium_envelope_schema(value_schema)
     raw = (
         spark.read.schema(_with_corrupt(env))

@@ -6,25 +6,27 @@ the BASE table's current state, maintained per micro-batch from the CDC
 delta instead of recomputed. The retraction problem (an UPDATE must
 subtract the OLD row's contribution before adding the new one; a DELETE
 must subtract) is solved with the snapshot log the lakehouse already
-keeps: the pre-batch and post-batch snapshots of the base table give the
-exact old/new rows for the batch's keys, so the delta is
+keeps. A first run, a crash replay and a new rollup take one path: merge
+the batch (the base fence makes a replay a no-op), check the rollup's
+fence, then walk the base's immutable manifest chain to the snapshot
+before the version that committed the batch. The batch's effect is in
+the files that commit added (``lakehouse.changed_files``): a touched
+key's old row is the LWW winner of its pre-batch stored rows in the
+changed buckets, its new row the winner of those rows plus the added
+ones, so
 
     Δ(group) = agg(new rows of touched keys) − agg(old rows of touched keys)
 
-and the rollup update is a pure ADDITIVE merge — O(batch + groups), not
-O(table). This is classic incremental view maintenance (delta + retract),
-expressed Spark-first: two semi-joined snapshot reads (bucket-layout
-scans of only the touched keys' versions) whose rows, signed +1/−1,
-union with the current rollup rows into one additive aggregate.
+and the rollup update is an ADDITIVE merge of those rows, signed +1/−1,
+with the rollup's rows. Scan O(changed buckets), shuffle O(batch +
+groups) — under CoW or an in-merge compaction the added files are whole
+buckets or the whole table. When the pre-batch snapshot has been expired
+(``expire_snapshots``), or a new rollup starts over a base that already
+holds rows, the step recomputes the rollup from the base instead.
 
 Exactly-once: the rollup table carries its own fence
 (``fence.<stream_id>`` in its manifest summary, same protocol as the
-base). On replay after a crash BETWEEN the base commit and the rollup
-commit, the base fence makes ``apply_changes`` a no-op and the pre-batch
-snapshot is recovered by walking the base's manifest chain to the
-batch's data commit — deterministic, because snapshots are immutable.
-If that pre-batch manifest has been expired (``expire_snapshots``), the
-maintainer falls back to a full recompute, which is always correct.
+base), the base's fence of the snapshot it reflects.
 
 Measures: ``cnt`` counts live (non-tombstone) rows per group; ``total``
 sums ``measure_col`` over non-null values. min/max are NOT maintainable
@@ -39,6 +41,8 @@ update/delete retraction those upserts cannot.
 
 from __future__ import annotations
 
+from functools import reduce
+
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
@@ -46,8 +50,10 @@ from pyspark.sql import types as T
 from arango_etl_spark.operators.merge_into import apply_changes
 from arango_etl_spark.plans.lakehouse import (
     SnapshotTable,
+    changed_files,
     fence_entries,
     fence_of,
+    lww_resolve,
 )
 
 ROLLUP_SCHEMA_TAIL = [
@@ -66,17 +72,6 @@ def create_rollup_table(
     )
     return SnapshotTable.create(
         root, schema, key_col=group_col, n_buckets=n_buckets
-    )
-
-
-def _agg(rows: DataFrame, group_col: str, measure_col: str) -> DataFrame:
-    return rows.groupBy(group_col).agg(
-        F.count(F.lit(1)).cast("long").alias("cnt"),
-        # coalesce so an all-null-measure group is 0.0, matching the
-        # incremental path's additive identity
-        F.coalesce(
-            F.sum(F.col(measure_col).cast("double")), F.lit(0.0)
-        ).alias("total"),
     )
 
 
@@ -152,7 +147,7 @@ def recompute_rollup(
     the fallback when incremental history has been expired)."""
     _commit_rollup(
         spark, rollup,
-        _agg(base.read(spark), group_col, measure_col),
+        _fold(group_col, _signed(base.read(spark), group_col, measure_col, +1)),
         group_col, stream_id, batch_id, run_id,
     )
 
@@ -179,65 +174,73 @@ def maintain_rollup(
     ``apply_changes`` unchanged, so a rollup epoch merges as a plain one.
 
     Returns {"rollup": "skipped"|"incremental"|"recomputed",
-    "base": MergeResult | None}.
+    "base": MergeResult}.
     """
-    last = fence_of(rollup.manifest(), stream_id, run_id)
-    if last is not None and batch_id <= last:
-        # rollup already reflects this batch (and therefore so does the
-        # base — the base commits first)
-        return {"rollup": "skipped", "base": None}
-
-    pre_manifest = base.manifest()
-    key_col = pre_manifest["key_col"]
     res = apply_changes(
         spark, base, events,
         batch_id=batch_id, fence_stream_id=stream_id, fence_run_id=run_id,
         **merge_kwargs,
     )
-    if res.skipped:
-        # crash-replay: the base committed this batch in a previous run;
-        # recover the pre-batch snapshot from the immutable manifest
-        # chain, or recompute when it has been expired
-        pre_manifest = _pre_batch_manifest(base, stream_id, batch_id, run_id)
-        if pre_manifest is None:
-            recompute_rollup(
-                spark, base, rollup, group_col, measure_col,
-                stream_id, batch_id, run_id,
-            )
-            return {"rollup": "recomputed", "base": res}
+    roll_m = rollup.manifest()
+    last = fence_of(roll_m, stream_id, run_id)
+    if last is not None and batch_id <= last:
+        return {"rollup": "skipped", "base": res}
 
-    # RAW batch keys (pre-dedup): a superset of the winners is harmless —
-    # untouched keys contribute old == new, i.e. a zero delta
-    keys = events.select(key_col).distinct()
-    old_rows = base.read(spark, manifest=pre_manifest).join(
-        F.broadcast(keys), key_col, "left_semi"
-    )
-    new_rows = base.read(spark).join(F.broadcast(keys), key_col, "left_semi")
-
-    merged = (
-        rollup.read(spark)
-        .unionByName(_signed(new_rows, group_col, measure_col, +1))
-        .unionByName(_signed(old_rows, group_col, measure_col, -1))
-        .groupBy(group_col)
-        .agg(
-            F.sum("cnt").alias("cnt"),
-            F.sum("total").alias("total"),
+    # the rollup is brought to the base's current snapshot and its fence
+    post = base.manifest()
+    fence = fence_of(post, stream_id, run_id)
+    pre = _pre_batch_manifest(base, stream_id, batch_id, run_id)
+    if pre is None or (roll_m["version"] == 0 and pre["files"]):
+        # the pre-batch snapshot is expired, or a new rollup starts over
+        # a base that already held rows: the delta would miss them
+        recompute_rollup(
+            spark, base, rollup, group_col, measure_col,
+            stream_id, fence, run_id,
         )
-        .where(F.col("cnt") > 0)
+        return {"rollup": "recomputed", "base": res}
+
+    # a touched key's other rows sit in the pre-batch snapshot's changed
+    # buckets (read with the post-batch schema: evolved columns are null)
+    key_col = post["key_col"]
+    added, buckets = changed_files(pre, post)
+    added_rows = base._read_rels(spark, added, base.stored_schema(post))
+    before = base.read_stored(
+        spark, buckets=buckets, manifest={**pre, "schema": post["schema"]}
+    ).join(added_rows.select(key_col), key_col, "left_semi")
+    old_rows = lww_resolve(before, key_col).where(~F.col("_deleted"))
+    new_rows = lww_resolve(
+        before.unionByName(added_rows), key_col
+    ).where(~F.col("_deleted"))
+
+    merged = _fold(
+        group_col,
+        rollup.read(spark, manifest=roll_m),
+        _signed(new_rows, group_col, measure_col, +1),
+        _signed(old_rows, group_col, measure_col, -1),
     )
-    _commit_rollup(
-        spark, rollup, merged, group_col, stream_id, batch_id, run_id
-    )
+    _commit_rollup(spark, rollup, merged, group_col, stream_id, fence, run_id)
     return {"rollup": "incremental", "base": res}
 
 
 def _signed(
     rows: DataFrame, group_col: str, measure_col: str, sign: int
 ) -> DataFrame:
+    """Each row's ±1 contribution to its group's (cnt, total)."""
     return rows.select(
         group_col,
         F.lit(sign).cast("long").alias("cnt"),
         (F.lit(float(sign))
          * F.coalesce(F.col(measure_col).cast("double"), F.lit(0.0))
          ).alias("total"),
+    )
+
+
+def _fold(group_col: str, *parts: DataFrame) -> DataFrame:
+    """Sum (cnt, total) rows per group — the one definition of the
+    measures; a group whose count falls to 0 is gone."""
+    return (
+        reduce(DataFrame.unionByName, parts)
+        .groupBy(group_col)
+        .agg(F.sum("cnt").alias("cnt"), F.sum("total").alias("total"))
+        .where(F.col("cnt") > 0)
     )

@@ -30,8 +30,8 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from arango_etl_spark.operators.merge_into import MergeResult, apply_changes
-from arango_etl_spark.plans.lakehouse import SnapshotTable, fence_of
+from arango_etl_spark.operators.merge_into import apply_changes
+from arango_etl_spark.plans.lakehouse import SnapshotTable
 from arango_etl_spark.streaming.lineage import LineageLog
 
 EVENT_SCHEMA = T.StructType(
@@ -74,8 +74,9 @@ class IngestConfig:
     # continuous aggregate: when rollup_root is set, every micro-batch
     # also incrementally maintains a groupBy(rollup_group_col)
     # count/sum(rollup_measure_col) rollup table at that path (created on
-    # first use and seeded from the base's existing rows; own fence — see
-    # streaming/rollup.py for the retraction and crash-heal semantics).
+    # first use; a new rollup over a base with rows starts from them; own
+    # fence — see streaming/rollup.py for the retraction and crash-heal
+    # semantics). Expired with the base on the expire_every cadence.
     # The base merge takes the same strategy/compact_every/
     # min_seq_exclusive/bloom_cols either way.
     rollup_root: str | None = None
@@ -117,10 +118,7 @@ def run_ingest(
 
     rollup_table = None
     if cfg.rollup_root is not None:
-        from arango_etl_spark.streaming.rollup import (
-            create_rollup_table,
-            recompute_rollup,
-        )
+        from arango_etl_spark.streaming.rollup import create_rollup_table
 
         if SnapshotTable.exists(cfg.rollup_root):
             rollup_table = SnapshotTable(cfg.rollup_root)
@@ -132,19 +130,6 @@ def run_ingest(
             rollup_table = create_rollup_table(
                 cfg.rollup_root, cfg.rollup_group_col, gtype
             )
-        base_m = table.manifest()
-        if rollup_table.current_version() == 0 and base_m["files"]:
-            # a new rollup over a non-empty base starts from the base's
-            # rows, fenced at the base's last epoch of this lineage (or
-            # -1): a replay of that epoch is skipped, the next one counts
-            last = fence_of(base_m, cfg.stream_id, run_id)
-            recompute_rollup(
-                spark, table, rollup_table,
-                cfg.rollup_group_col, cfg.rollup_measure_col,
-                stream_id=cfg.stream_id,
-                batch_id=-1 if last is None else last,
-                run_id=run_id,
-            )
 
     # NOTE: .schema(schema) PINS the read schema — evolved columns in later
     # files are only picked up when the caller passes a widened
@@ -153,12 +138,10 @@ def run_ingest(
         from arango_etl_spark.sources.readers import (
             debezium_envelope_schema,
             debezium_to_events,
+            debezium_value_schema,
         )
 
-        value_schema = T.StructType(
-            [f for f in schema.fields
-             if f.name not in ("op", "seq_no", "batch_id", "event_ts")]
-        )
+        value_schema = debezium_value_schema(schema)
         stream = (
             spark.readStream.schema(debezium_envelope_schema(value_schema))
             .option("maxFilesPerTrigger", cfg.max_files_per_trigger)
@@ -218,9 +201,7 @@ def run_ingest(
                     run_id=run_id,
                     **merge_kwargs,
                 )
-                res = out["base"] or MergeResult(
-                    version=table.current_version(), skipped=True
-                )
+                res = out["base"]
             else:
                 res = apply_changes(
                     spark, table, batch_df,
@@ -235,7 +216,9 @@ def run_ingest(
                 and epoch_id > 0
                 and epoch_id % cfg.expire_every == 0
             ):
-                table.expire_snapshots(keep_last=cfg.expire_keep_last)
+                for t in (table, rollup_table):
+                    if t is not None:
+                        t.expire_snapshots(keep_last=cfg.expire_keep_last)
             if lineage is not None and not res.skipped:
                 # the count scans the epoch's files a second time, reading
                 # no columns (a file scan is deterministic)

@@ -12,11 +12,13 @@ CPU count when the variable is unset), as the Tier-1 run does.
 --split runs each leg under its own Spark job group and prints one JSON
 line per leg in place of its "ok" line: the DataFrame build, final-plan
 (optimize + physical planning) and collect seconds, the optimized plan's
-KB, and the leg's Spark job count and summed job seconds. Build + plan +
-collect is the leg's wall time (the build includes any jobs it runs
-itself, such as an index's seed collect); what of it lies outside
-``job_s`` is driver work (summed job time double-counts jobs that
-overlap).
+KB (each run of comma-separated literal values, such as a folded model
+array, counted as one token, so the figure tracks the expression tree and
+not the model's size), and the leg's Spark job count and summed job
+seconds. Build + plan + collect is the leg's wall time (the build
+includes any jobs it runs itself, such as an index's seed collect);
+what of it lies outside ``job_s`` is driver work (summed job time
+double-counts jobs that overlap).
 The registered-query count is printed per run (it tracks parity.py —
 do not hardcode it here). Round-5 record (2026-08-17, refreshed after
 the graph/BM25/JSON-shred/gap-fill/fan-out/sketch/video/token-span
@@ -44,6 +46,7 @@ from __future__ import annotations
 import json
 import math
 import os
+import re
 import sys
 import time
 from pathlib import Path
@@ -59,6 +62,10 @@ TABLES = [
     "region", "nation", "customer", "supplier", "part", "orders",
     "lineitem", "events", "documents", "embeddings",
 ]
+
+_NUM = r"-?\d[\d.]*(?:[eE][-+]?\d+)?"
+# a run of two or more literal values; not an attribute id (``a#12``)
+_LITERAL_RUN = re.compile(rf"(?<![\w#.]){_NUM}(?:,\s?{_NUM})+")
 
 
 def _norm(v):
@@ -104,7 +111,8 @@ def _run_split(spark, name, build):
         "build_s": round(t1 - t0, 3),
         "plan_s": round(t2 - t1, 3),
         "collect_s": round(t3 - t2, 3),
-        "plan_kb": round(len(qe.optimizedPlan().toString()) / 1024, 1),
+        "plan_kb": round(len(_LITERAL_RUN.sub(
+            "#", qe.optimizedPlan().toString())) / 1024, 1),
         "jobs": n_jobs,
         "job_s": round(job_s, 3),
     }

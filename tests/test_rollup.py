@@ -277,3 +277,137 @@ def test_rollup_runner_seeds_new_rollup_from_non_empty_base(spark, tmp_path):
     assert base.manifest()["summary"]["fence.s"] == 0
     rollup = SnapshotTable(str(tmp_path / "roll"))
     assert _actual(spark, rollup) == _expected(spark, base)
+
+
+# edge cases the step must retract or ignore, with the rollup each batch
+# must leave (n_tok is the token count)
+EDGE_BATCHES = [
+    (
+        [ev("insert", "a", 10, [1] * 2, src="src_0"),
+         ev("insert", "b", 10, [1] * 3, src="src_0"),
+         ev("insert", "c", 10, [1] * 4, src="src_1"),
+         ev("insert", "d", 10, [1] * 5, src="src_1"),
+         ev("insert", "e", 10, [1], src="src_2")],
+        {"src_0": (2, 5.0), "src_1": (2, 9.0), "src_2": (1, 1.0)},
+    ),
+    (
+        [ev("update", "a", 5, [1] * 9, batch=1, src="src_0"),  # late update
+         ev("delete", "b", 5, None, batch=1, src="src_0"),      # late delete
+         ev("delete", "c", 20, None, batch=1, src="src_1"),
+         ev("delete", "zz", 20, None, batch=1, src="src_2"),    # never seen
+         ev("update", "d", 20, [1] * 6, batch=1, src="src_0"),  # moves group
+         ev("delete", "e", 20, None, batch=1, src="src_2")],    # src_2 → 0
+        {"src_0": (3, 11.0)},
+    ),
+    (
+        [ev("insert", "c", 30, [1] * 7, batch=2, src="src_1"),  # re-insert
+         ev("update", "c", 15, [1] * 50, batch=2, src="src_1"),
+         ev("insert", "zz", 10, [1], batch=2, src="src_2"),     # under tomb
+         ev("delete", "d", 15, None, batch=2, src="src_0")],    # late delete
+        {"src_0": (3, 11.0), "src_1": (1, 7.0)},
+    ),
+]
+
+
+@pytest.mark.parametrize(
+    "merge_kwargs",
+    [dict(strategy="mor", compact_every=0), dict(strategy="cow"),
+     dict(strategy="mor", compact_every=1)],
+    ids=["mor", "cow", "mor_compacting"],
+)
+def test_rollup_edge_cases(spark, tmp_path, merge_kwargs):
+    """Late lower-seq_no updates and deletes, a re-insert after a delete,
+    a key moving between groups, groups emptying to zero and a delete of
+    a never-seen key, under MoR, CoW (whole buckets added) and an
+    in-merge compaction (the whole table added)."""
+    base, rollup = _mk(tmp_path)
+    for b, (rows, want) in enumerate(EDGE_BATCHES):
+        out = maintain_rollup(
+            spark, base, rollup, mk_events(spark, rows), batch_id=b,
+            group_col="source", measure_col="n_tok", **merge_kwargs,
+        )
+        assert out["rollup"] == "incremental"
+        assert _actual(spark, rollup) == want == _expected(spark, base), b
+
+
+def test_rollup_new_over_non_empty_base(spark, tmp_path):
+    """A direct maintain_rollup on a new rollup over a base that already
+    holds rows starts from those rows."""
+    base, rollup = _mk(tmp_path)
+    apply_changes(spark, base, mk_events(spark, BATCHES[0]))
+    out = maintain_rollup(
+        spark, base, rollup,
+        mk_events(spark, [ev("update", "d0", 50, [1] * 4, batch=1)]),
+        batch_id=1, group_col="source", measure_col="n_tok",
+    )
+    assert _actual(spark, rollup) == _expected(spark, base) == {
+        "src_0": (5, 28.0), "src_1": (5, 30.0)
+    }
+    assert out["rollup"] == "recomputed"
+
+
+def test_rollup_step_reads_only_the_batch_bucket(spark, tmp_path, monkeypatch):
+    """A 1-key MoR batch on an 8-bucket base reads the pre-batch snapshot
+    in that key's bucket only, and never the whole base."""
+    from arango_etl_spark.plans.lakehouse import SnapshotTable, _key_hash
+
+    base, rollup = _mk(tmp_path)
+    maintain_rollup(
+        spark, base, rollup,
+        mk_events(spark, [ev("insert", f"d{i}", i, [1] * (i % 5), src=f"s{i % 3}")
+                          for i in range(64)]),
+        batch_id=0, group_col="source", measure_col="n_tok", compact_every=0,
+    )
+    reads = []
+    read_stored = SnapshotTable.read_stored
+
+    def spy(self, spark, buckets=None, manifest=None):
+        if self.root == base.root:
+            reads.append(buckets)
+        return read_stored(self, spark, buckets=buckets, manifest=manifest)
+
+    monkeypatch.setattr(SnapshotTable, "read_stored", spy)
+    out = maintain_rollup(
+        spark, base, rollup,
+        mk_events(spark, [ev("update", "d7", 100, [1] * 9, batch=1, src="s0")]),
+        batch_id=1, group_col="source", measure_col="n_tok", compact_every=0,
+    )
+    monkeypatch.undo()
+    assert out["rollup"] == "incremental"
+    assert reads == [[_key_hash("d7", T.StringType()) % 8]]
+    assert _actual(spark, rollup) == _expected(spark, base)
+
+
+def test_runner_expires_the_rollup_with_the_base(spark, tmp_path):
+    """expire_every/expire_keep_last bound the rollup's manifests and
+    files as they bound the base's."""
+    import os
+
+    from arango_etl_spark.plans.lakehouse import SnapshotTable
+    from arango_etl_spark.sources.cdc_generator import (
+        GeneratorConfig,
+        write_event_batches,
+    )
+    from arango_etl_spark.streaming.runner import IngestConfig, run_ingest
+
+    feed = str(tmp_path / "feed")
+    write_event_batches(
+        spark, GeneratorConfig(n_events=400, n_docs=40, n_batches=8, seed=3),
+        feed,
+    )
+    base = mk_table(tmp_path, "base")
+    cfg = IngestConfig(
+        stream_id="s", max_files_per_trigger=1, compact_every=0,
+        expire_every=2, expire_keep_last=2, rollup_root=str(tmp_path / "roll"),
+    )
+    run_ingest(spark, feed, base, str(tmp_path / "ckpt"), cfg=cfg)
+    rollup = SnapshotTable(str(tmp_path / "roll"))
+    assert base.manifest()["summary"]["fence.s"] == 7
+    assert len(rollup._versions()) == len(base._versions()) == 3
+    on_disk = {
+        os.path.relpath(os.path.join(d, f), rollup.root)
+        for d, _, fs in os.walk(rollup.data_dir) for f in fs
+        if f.endswith(".parquet")
+    }
+    assert on_disk == rollup._referenced(rollup._versions())
+    assert _actual(spark, rollup) == _expected(spark, base)

@@ -485,6 +485,38 @@ def test_debezium_feed_through_run_ingest(spark, tmp_path):
     assert t.current_version() == v1
 
 
+def test_debezium_feed_keeps_widened_columns(spark, tmp_path):
+    """A widened event schema (the CLI's --extra-columns) reaches the
+    table through a Debezium feed: every value-schema field of the row
+    image is projected, so the extra column is merged, not dropped."""
+    import json
+    import os
+
+    from pyspark.sql import types as T
+
+    from arango_etl_spark.streaming.runner import EVENT_SCHEMA
+
+    feed = str(tmp_path / "dbz_feed")
+    os.makedirs(feed)
+    with open(f"{feed}/f1.json", "w") as fh:
+        for lsn, (doc, lang) in enumerate([("a", "en"), ("b", "de")]):
+            fh.write(json.dumps({"payload": {
+                "op": "c", "ts_ms": 1000 + lsn,
+                "after": {"doc_id": doc, "tokens": [1], "n_tok": 1,
+                          "source": "s", "lang": lang},
+                "source": {"name": "pg", "lsn": lsn, "txId": None}}}) + "\n")
+    schema = T.StructType(
+        EVENT_SCHEMA.fields + [T.StructField("lang", T.StringType())]
+    )
+    t = mk_table(tmp_path, "t_dbz_wide")
+    run_ingest(
+        spark, feed, t, str(tmp_path / "ckpt"),
+        cfg=IngestConfig(source_format="debezium"), event_schema=schema,
+    )
+    got = {r["doc_id"]: r["lang"] for r in t.read(spark).collect()}
+    assert got == {"a": "en", "b": "de"}
+
+
 @pytest.mark.parametrize("strategy", ["mor", "cow"])
 def test_lineage_counts_per_epoch(spark, tmp_path, strategy):
     """Lineage counters of two epochs: the first (for CoW, the first

@@ -338,6 +338,38 @@ def test_read_changes_prunes_untouched_buckets(spark, tmp_path):
     assert len(opened) < len(all_files)
 
 
+def test_read_changes_across_rebucket(spark, tmp_path):
+    """Bucket ids of two layouts are not comparable: across a rebucket
+    ``changed_files`` names no bucket list and the diff reads both
+    snapshots whole, so the rewrite itself is silent and only the later
+    batch's changes show."""
+    from arango_etl_spark.operators.merge_into import rebucket
+    from arango_etl_spark.plans.lakehouse import changed_files
+
+    t = mk_table(tmp_path, "cdf_rb", n_buckets=4)
+    apply_changes(
+        spark, t,
+        mk_events(spark, [ev("insert", k, 1, [1]) for k in "abc"]),
+    )
+    v_from = t.current_version()
+    rebucket(spark, t, new_n_buckets=8)
+    apply_changes(
+        spark, t,
+        mk_events(spark, [ev("update", "b", 2, [2, 2]),
+                          ev("delete", "c", 3, None),
+                          ev("insert", "d", 4, [4])]),
+    )
+    added, buckets = changed_files(t.manifest(v_from), t.manifest())
+    assert buckets is None and set(added) == set(t.manifest()["files"])
+    changes = {
+        r["doc_id"]: (r["_change_type"], r["tokens"])
+        for r in t.read_changes(spark, v_from).collect()
+    }
+    assert changes == {
+        "b": ("update", [2, 2]), "c": ("delete", None), "d": ("insert", [4])
+    }
+
+
 def test_read_changes_across_schema_evolution(spark, tmp_path):
     """Additive evolution between the snapshots: old state null-backfills
     the new column, so an unchanged row stays silent and a row that only
