@@ -40,7 +40,9 @@ single-writer per table (as Structured Streaming guarantees per query).
 
 from __future__ import annotations
 
+import functools
 import json
+import operator
 import os
 import uuid
 
@@ -63,6 +65,10 @@ META_COLS: list[tuple[str, str]] = [
     ("_deleted", "boolean"),
 ]
 META_NAMES = [c for c, _ in META_COLS]
+# The LWW order: of two stored rows of one key, the one whose tuple of
+# these columns is greater wins; a null field loses to any value, as in
+# Spark's struct ordering.
+LWW_ORDER = ("_seq_no", "_event_ts", "_batch_id", "_op")
 
 # Bloom index shape: 8192 bits (1 KB per file and column), 5 hashes.
 # Every entry records its own m/k, so read_eq probes any entry it finds.
@@ -176,31 +182,64 @@ class SnapshotTable:
     def read_keys(
         self, spark: SparkSession, keys: list, manifest: dict | None = None
     ) -> DataFrame:
-        """Point lookups (SURVEY F3's "read one doc" at table scale):
-        prune to the keys' BUCKETS before any data file is opened — the
-        scan touches |distinct key buckets| / n_buckets of the table's
-        files instead of all of them (pytest-pinned via inputFiles). The
-        driver maps keys to buckets with ``_key_hash``, a twin of the
-        ``xxhash64`` in :meth:`bucket_expr`, so no Spark job runs before
-        the scan; a key column of a type the twin does not cover reads
-        every bucket (correct, just unpruned). Null keys match nothing.
-        Then the same LWW-resolve + tombstone filter as ``read`` runs
-        over the pruned file set."""
+        """Point lookups (SURVEY F3's "read one doc" at table scale),
+        resolved on the driver with no Spark job.
+
+        The driver maps keys to buckets with ``_key_hash``, a twin of the
+        ``xxhash64`` in :meth:`bucket_expr`, and reads only those buckets'
+        files with ``pyarrow.dataset`` under the manifest's stored schema
+        (files older than a schema evolution get null-backfilled columns).
+        The filter, one ``key == k`` per key, lets the parquet footers'
+        key statistics skip every row group that cannot hold a key. Each
+        key's winner is picked under ``LWW_ORDER``, tombstones are dropped,
+        and the rows reach Spark as one Arrow batch: a ``LocalRelation``,
+        which ``collect()`` serves without a job. A key column of a type
+        the twin does not cover reads every bucket (correct, just
+        unpruned). Null keys, and keys that do not fit the key column's
+        type, match nothing.
+
+        Scale: the winners and every stored version of the requested keys
+        pass through driver memory. Bulk key sets belong in :meth:`read`
+        joined to the keys, which runs distributed."""
+        import pyarrow as pa
+        import pyarrow.dataset as ds
+        from pyspark.sql.pandas.types import to_arrow_schema
+
         m = manifest or self.manifest()
         key_col = m["key_col"]
-        dtype = next(
-            f.dataType for f in self.payload_schema(m).fields
-            if f.name == key_col
-        )
-        hashes = [_key_hash(k, dtype) for k in keys if k is not None]
+        payload = self.payload_schema(m)
+        stored = to_arrow_schema(self.stored_schema(m))
+        ktype = stored.field(key_col).type
+        wanted = _arrow_values(keys, ktype)
+        hashes = [_key_hash(k, payload[key_col].dataType) for k in wanted]
         buckets = (
             None if None in hashes
             else sorted({h % m["n_buckets"] for h in hashes})
         )
-        stored = self.read_stored(spark, buckets=buckets, manifest=m).where(
-            F.col(key_col).isin(list(keys))
+        files = self.data_files(m, buckets)   # none when no key fits
+        rows = []
+        if files:
+            # an OR of equalities, not isin: pyarrow prunes row groups by
+            # their statistics for == but not for isin
+            match = functools.reduce(
+                operator.or_,
+                [ds.field(key_col) == pa.scalar(k, ktype) for k in wanted],
+            )
+            rows = ds.dataset(files, schema=stored, format="parquet").to_table(
+                filter=match
+            ).to_pylist()
+        win: dict = {}
+        for r in rows:
+            k = r[key_col]
+            if k not in win or _lww_rank(r) > _lww_rank(win[k]):
+                win[k] = r
+        # one batch: PySpark 4.1 drops the Arrow batches that follow an
+        # empty one, which a multi-file to_table() is full of
+        live = pa.Table.from_pylist(
+            [r for r in win.values() if r["_deleted"] is False],
+            schema=to_arrow_schema(payload),
         )
-        return _live(stored, m).drop(*META_NAMES)
+        return spark.createDataFrame(live, schema=payload)
 
     # ------------------------------------------------- per-file metadata
     def analyze(self, spark: SparkSession, cols=(), bloom_cols=()) -> dict:
@@ -1116,6 +1155,36 @@ def _key_hash(key, dtype: T.DataType) -> int | None:
         return None
 
 
+def _arrow_values(values: list, dtype) -> list:
+    """The non-null ``values`` that an Arrow column of type ``dtype``
+    holds unchanged, as that column returns them. Any other value (one
+    out of range, of another kind, or that the cast would truncate)
+    equals no stored key. A naive datetime is UTC (the session TZ is
+    pinned UTC), as in :meth:`SnapshotTable.read_range`."""
+    import datetime as _dt
+
+    import pyarrow as pa
+
+    out = []
+    for v in values:
+        if (isinstance(v, _dt.datetime) and v.tzinfo is None
+                and getattr(dtype, "tz", None)):
+            v = v.replace(tzinfo=_dt.timezone.utc)
+        try:
+            s = pa.scalar(v, dtype)
+        except (pa.ArrowException, OverflowError):
+            continue
+        if v is not None and s.as_py() == v:
+            out.append(s.as_py())
+    return out
+
+
+def _lww_rank(row: dict) -> tuple:
+    """A stored row's ``LWW_ORDER`` tuple as Python compares it, a null
+    field below any value (Spark's struct order)."""
+    return tuple((row[c] is not None, row[c]) for c in LWW_ORDER)
+
+
 def _footer_meta(path: str, cols: dict[str, T.DataType]) -> dict:
     """``rows``, ``dels`` and the ``bounds`` of ``cols`` (name → Spark
     type) of one data file, from its parquet footer. ``_deleted`` is read
@@ -1258,16 +1327,14 @@ def _create_json(path: str, obj: dict) -> None:
 
 def lww_resolve(stored: DataFrame, key_col: str) -> DataFrame:
     """Reduce stored rows to one winning row per key under the canonical
-    LWW order (seq_no, event_ts, batch_id, op) — max wins.
+    LWW order (``LWW_ORDER``) — max wins.
 
     Implemented as max_by over a comparison struct: a hash aggregation
     with map-side partial combine, so a hot key reduces locally on every
     input partition before one tiny shuffled row per partition — the
     skew-safe alternative to a row_number window (north rule).
     """
-    order = F.struct(
-        F.col("_seq_no"), F.col("_event_ts"), F.col("_batch_id"), F.col("_op")
-    )
+    order = F.struct(*LWW_ORDER)
     payload = [c for c in stored.columns if c != key_col]
     return stored.groupBy(key_col).agg(
         F.max_by(F.struct(*payload), order).alias("_w")

@@ -369,7 +369,7 @@ def test_bootstrap_rejects_missing_key(spark, tmp_path):
         bootstrap_from_snapshot(spark, t, bad, watermark_seq=1)
 
 
-def test_read_keys_point_lookup_prunes_buckets(spark, tmp_path):
+def test_read_keys_point_lookup_prunes_buckets(spark, tmp_path, arrow_reads):
     """read_keys must return exactly the requested live keys AND open
     only the files of those keys' buckets — never the whole table."""
     t = mk_table(tmp_path, "pt", n_buckets=16)
@@ -383,29 +383,27 @@ def test_read_keys_point_lookup_prunes_buckets(spark, tmp_path):
     assert got == {"d3": [3], "d11": [11]}         # d7 tombstoned
 
     total_files = len(t.data_files())
-    touched = set(out.inputFiles())
+    [read] = arrow_reads
+    touched = set(read["files"])
     assert 0 < len(touched) < total_files, (len(touched), total_files)
     # every opened file belongs to one of the requested keys' buckets
-    from pyspark.sql import functions as F2
-
     want = {
         r["b"]
         for r in spark.createDataFrame(
             [("d3",), ("d7",), ("d11",)], "doc_id string"
-        ).select(t.bucket_expr(F2.col("doc_id")).alias("b")).collect()
+        ).select(t.bucket_expr(F.col("doc_id")).alias("b")).collect()
     }
     # structural check: the pruned file list equals data_files(buckets=want)
-    import os as _os
-
     expect_files = {
-        _os.path.realpath(p) for p in t.data_files(buckets=sorted(want))
+        os.path.realpath(p) for p in t.data_files(buckets=sorted(want))
     }
-    assert {_os.path.realpath(p.replace("file:", "")) for p in touched} <= expect_files
+    assert {os.path.realpath(p) for p in touched} <= expect_files
 
     # an int-keyed table (negative keys too) routes on the driver alike
     ti = mk_keyed_table(spark, tmp_path, "pt_int", T.IntegerType(),
                         [i * 7919 - 150_000 for i in range(40)])
     want_keys = [3 * 7919 - 150_000, 7 * 7919 - 150_000, 11 * 7919 - 150_000]
+    arrow_reads.clear()
     out = ti.read_keys(spark, want_keys + [None])
     assert {r["doc_id"]: list(r["tokens"]) for r in out.collect()} == {
         want_keys[0]: [3], want_keys[2]: [11],
@@ -416,12 +414,11 @@ def test_read_keys_point_lookup_prunes_buckets(spark, tmp_path):
             [(k,) for k in want_keys], "doc_id int"
         ).select(ti.bucket_expr(F.col("doc_id")).alias("b")).collect()
     }
-    touched = {
-        _os.path.realpath(p.replace("file:", "")) for p in out.inputFiles()
-    }
+    [read] = arrow_reads
+    touched = {os.path.realpath(p) for p in read["files"]}
     assert 0 < len(touched) < len(ti.data_files())
     assert touched <= {
-        _os.path.realpath(p) for p in ti.data_files(buckets=sorted(want))
+        os.path.realpath(p) for p in ti.data_files(buckets=sorted(want))
     }
 
 
@@ -445,7 +442,9 @@ def mk_keyed_table(spark, tmp_path, name, key_type, keys, n_buckets=16):
     return t
 
 
-def test_read_keys_uncovered_key_type_reads_every_bucket(spark, tmp_path):
+def test_read_keys_uncovered_key_type_reads_every_bucket(
+    spark, tmp_path, arrow_reads
+):
     """A key type the driver-side hash does not cover (here: date) is not
     pruned but still returns exactly the live requested rows."""
     days = [dt.date(2024, 1, 1) + dt.timedelta(days=i) for i in range(40)]
@@ -454,7 +453,8 @@ def test_read_keys_uncovered_key_type_reads_every_bucket(spark, tmp_path):
     assert {r["doc_id"]: list(r["tokens"]) for r in out.collect()} == {
         days[3]: [3], days[11]: [11],
     }
-    assert len(out.inputFiles()) == len(t.data_files())
+    [read] = arrow_reads
+    assert sorted(read["files"]) == sorted(t.data_files())
 
 
 def test_first_cow_merge_metrics_without_touched_probe(spark, tmp_path):
